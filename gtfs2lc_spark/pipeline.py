@@ -27,12 +27,21 @@ and LevelDB; SURVEY.md §4):
   date-independent work (joins, headsign, uniqueId) happens *before*
   the explode, date-dependent work (timestamps, URIs) after — the same
   cost split the reference gets from its rule-shard intermediates.
+- ``convert`` materializes the rule table and the service table once
+  (``materialize``: a local checkpoint here, a reliable checkpoint or
+  parquet staging on a cluster), as the reference writes its
+  connection-rule shards once (SURVEY §3.1 step 3). The J7 dedupe reads
+  the rules three times and the services twice, so the W1 window and
+  its four dimension broadcasts run once instead of on every read. The
+  rules are pre-explode rows, ~180x fewer than the connections.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from .materialize import materialize
 
 DEFAULT_SALT_N = 64
 
@@ -608,7 +617,16 @@ def convert(
     salt_n: int | None = DEFAULT_SALT_N,
 ) -> DataFrame:
     """Full entity-tables -> connections pipeline (reference §3.1 steps
-    2-4 as one lazily-planned DAG)."""
-    services = expand_services(calendar, calendar_dates)
-    rules = stop_times_to_rules(stop_times, trips, routes, stops)
+    2-4).
+
+    The rule table and the service table are materialized here, once
+    (two Spark jobs at call time); the returned connections are lazy.
+    ``rules_to_connections`` reads the rules three times (J7 duplicate
+    count, clean anti-probe, dirty semi-probe) and the services twice
+    (J4 lookup, date dimension); materialized, the W1 window and its
+    dimension broadcasts run once rather than under each read, and the
+    connections' plan holds no Window: it starts at the materialized
+    rules."""
+    services = materialize(expand_services(calendar, calendar_dates), "services")
+    rules = materialize(stop_times_to_rules(stop_times, trips, routes, stops), "rules")
     return rules_to_connections(rules, services, feed_tz, dedupe, salt_n)

@@ -1,7 +1,8 @@
 """SparkSession factory tuned for the Linked Connections engine.
 
-Scale posture (local[32] here; the same settings are what we'd submit on
-a 1000-executor cluster, with shuffle partitions sized to the data):
+Scale posture (local[<cores available>] by default; the same settings are
+what we'd submit on a 1000-executor cluster, with shuffle partitions sized
+to the data):
 
 - AQE on (runtime coalescing + skew-join splitting — mega-trip skew after
   the service-day explode is the known hot spot, SURVEY.md §4).
@@ -18,6 +19,35 @@ import os
 
 from pyspark.sql import SparkSession
 
+# Driver JVM settings. ``build_session`` applies them when it starts the
+# JVM itself (plain ``python``); under ``spark-submit`` the JVM is already
+# running by then, so scripts/submit.sh passes the same two values as
+# --driver-java-options / --driver-memory.
+#
+# Wide codegen'd plans overflow the default 240m code cache and stall JIT
+# compilation (measured: first big run 66 s -> 8 s with 512m); throughput
+# GC suits the string-heavy batch workload. The JIT compiler thread count
+# is left to the JVM, which sizes it from the cores it sees (3 on 4 cores,
+# 12 on 16, 15 on 32). A fixed -XX:CICompilerCount=12, sized for 32
+# cores, cost a 4-core host about 30% of the cold first job.run's CPU
+# time; that call (perfbench, medians of 5 interleaved runs) took
+# 31.7 s / 86 CPU-s on feeds_skewed and 30.7 s / 89 CPU-s on
+# history_sorted with it, 20.8 s / 61 CPU-s and 23.2 s / 67 CPU-s
+# without.
+DRIVER_JAVA_OPTIONS = "-XX:ReservedCodeCacheSize=512m -XX:+UseParallelGC"
+DEFAULT_DRIVER_MEMORY = "12g"
+
+
+def driver_memory() -> str:
+    """Driver heap: ``SPARK_GRAFT_DRIVER_MEM`` or the default."""
+    return os.environ.get("SPARK_GRAFT_DRIVER_MEM", DEFAULT_DRIVER_MEMORY)
+
+
+def default_master() -> str:
+    """``local[SPARK_GRAFT_CPUS]``, else one task thread per available core."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+    return f"local[{cpus}]"
+
 
 def build_session(
     app_name: str = "gtfs2lc-spark",
@@ -25,9 +55,11 @@ def build_session(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    master = master or f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
+    master = master or default_master()
     if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
+        shuffle_partitions = int(
+            os.environ.get("SPARK_GRAFT_SHUFFLE") or len(os.sched_getaffinity(0))
+        )
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
@@ -52,14 +84,8 @@ def build_session(
         # dimension tables (stops/routes/trips/services) are always small
         # relative to stop_times/pages; raise the broadcast ceiling a bit.
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "12g"))
-        # wide codegen'd plans overflow the default 240m code cache and
-        # stall JIT compilation (measured: first big run 66s -> 8s with
-        # these); throughput GC suits the string-heavy batch workload
-        .config(
-            "spark.driver.extraJavaOptions",
-            "-XX:ReservedCodeCacheSize=512m -XX:CICompilerCount=12 -XX:+UseParallelGC",
-        )
+        .config("spark.driver.memory", driver_memory())
+        .config("spark.driver.extraJavaOptions", DRIVER_JAVA_OPTIONS)
         .config("spark.ui.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():

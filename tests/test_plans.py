@@ -89,6 +89,19 @@ def test_pipeline_plan_is_broadcast_only(spark, pages_parquet):
                 )
 
 
+def test_convert_plan_starts_at_materialized_rules(spark, feed):
+    """convert() materializes the rule table once, so the W1 lag window
+    and its dimension broadcasts are not re-planned under each of the
+    J7 dedupe's three reads of the rules: the connections' executed
+    plan holds no Window node."""
+    conns = pipeline.convert(
+        feed["stop_times"], feed["trips"], feed["routes"], feed["stops"],
+        feed["calendar"], feed["calendar_dates"], salt_n=16,
+    )
+    plan = _executed_plan(conns)
+    assert "Window" not in plan, plan
+
+
 def test_dense_index_has_no_global_window(spark):
     """W4 scale fix: the framed message counter must rank within range
     partitions (partitionBy _pid), never in one global empty-partition

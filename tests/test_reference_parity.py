@@ -15,6 +15,7 @@ and not 1.0.
 """
 
 import json
+import os
 
 import pytest
 
@@ -49,6 +50,8 @@ def jsonld_obj_to_triples(obj: dict) -> set[tuple[str, str, str]]:
 
 @pytest.fixture(scope="module")
 def reference_triples():
+    if not os.path.exists(FIXTURE):
+        pytest.skip("reference checkout not present")
     triples = set()
     with open(FIXTURE) as f:
         for line in f:
