@@ -1674,9 +1674,9 @@ def _q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_zorder_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Morton (Z-order) clustering key over (user_id, epoch-day) —
-    the multi-dimension data-skipping layout key (write_zordered
-    range-partitions + sorts by it so footer min/max stats skip files
-    for predicates on EITHER dimension). Pure shift/mask codegen fold,
+    the multi-dimension data-skipping layout key (a table
+    range-partitioned + sorted by it lets footer min/max stats skip
+    files for predicates on EITHER dimension). Pure shift/mask codegen fold,
     mirrored bit-for-bit by the oracle."""
     from gtfs2lc_spark import layout
     from gtfs2lc_spark.datapipe.events import _micros

@@ -1,115 +1,6 @@
-"""Physical data layout for the 100-TB corpus: bucketed tables for
-shuffle-free co-located joins, and partitioned layouts whose partition
-columns Catalyst prunes at the scan.
-
-Why this module exists: at 10^12 documents every repeated join against
-the corpus (dedup-pair verification, entity-link backfills, triple
-re-canonicalization) pays a full shuffle of the fact table UNLESS the
-table is written pre-clustered on the join key. Spark's first-class
-answer is bucketing (`DataFrameWriter.bucketBy` + `saveAsTable`): both
-sides hash-clustered into the same number of buckets on the same key
-join with ZERO Exchange — the SortMergeJoin reads co-located buckets
-directly. Partitioned layouts (`partitionBy`) solve the orthogonal
-problem: low-cardinality filter columns (lang, source, crawl date)
-become directory keys the scan prunes without reading a footer.
-
-Both are plain public Spark APIs; the helpers here pin the repo's
-conventions (bucket counts, overwrite semantics) and give the plan
-tests one place to assert the no-Exchange / pruned-scan shapes.
-"""
+"""Physical data layout: the Z-order (Morton) clustering key."""
 
 from __future__ import annotations
-
-from pyspark.sql import DataFrame, SparkSession
-
-
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_cols: list[str] | str,
-    n_buckets: int = 32,
-    sort_cols: list[str] | str | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Persist ``df`` as a bucketed (and optionally sort-clustered)
-    managed table. Joins/aggregations between tables bucketed on the
-    same key with the same ``n_buckets`` need NO shuffle — assert with
-    :func:`assert_no_exchange_join` (done in tests/test_layout.py).
-
-    ``n_buckets`` is the parallelism floor for every downstream
-    bucket-local op: at 100 TB pick buckets so one bucket's worth of
-    the BIGGER table fits an executor's shuffle memory (e.g. 4096 for
-    a 10^12-row corpus), and keep it a multiple of the cluster's task
-    slots so no wave runs ragged.
-    """
-    cols = [bucket_cols] if isinstance(bucket_cols, str) else list(bucket_cols)
-    w = df.write.mode(mode).bucketBy(n_buckets, *cols)
-    if sort_cols:
-        s = [sort_cols] if isinstance(sort_cols, str) else list(sort_cols)
-        w = w.sortBy(*s)
-    w.format("parquet").saveAsTable(table)
-
-
-def bucketed_join(
-    spark: SparkSession,
-    left_table: str,
-    right_table: str,
-    on: list[str] | str,
-    how: str = "inner",
-    force_merge: bool = True,
-) -> DataFrame:
-    """Join two same-key same-bucket-count tables. The plan this
-    produces must contain no Exchange above either scan (the bucketing
-    IS the exchange, paid once at write time and amortized over every
-    subsequent join) — SortMergeJoin over pre-clustered buckets.
-
-    ``force_merge`` pins the SMJ strategy: bucketed tables exist
-    because BOTH sides are fact-sized, but on small test data the
-    optimizer would otherwise pick a broadcast join (whose
-    BroadcastExchange defeats the no-shuffle contract being asserted).
-    """
-    on_cols = [on] if isinstance(on, str) else list(on)
-    left = spark.table(left_table)
-    if force_merge:
-        left = left.hint("merge")
-    return left.join(spark.table(right_table), on_cols, how)
-
-
-def write_partitioned(
-    df: DataFrame,
-    path: str,
-    partition_cols: list[str] | str,
-    mode: str = "overwrite",
-) -> None:
-    """Write a directory-partitioned parquet layout. Filters on
-    ``partition_cols`` become PartitionFilters at the scan — pruned
-    from the file listing, zero bytes read for excluded partitions.
-    Keep partition columns LOW cardinality (lang, source, crawl day):
-    every distinct value is a directory, and 10^6 tiny directories is
-    its own scale bug.
-    """
-    cols = [partition_cols] if isinstance(partition_cols, str) else list(partition_cols)
-    df.write.mode(mode).partitionBy(*cols).parquet(path)
-
-
-def scan_is_pruned(df: DataFrame, partition_col: str) -> bool:
-    """True when ``df``'s physical plan shows a PartitionFilters entry
-    on ``partition_col`` — i.e. the filter prunes directories instead
-    of reading rows."""
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    for line in plan.splitlines():
-        if "PartitionFilters" in line and partition_col in line.split(
-            "PartitionFilters", 1
-        )[1].split("]", 1)[0]:
-            return True
-    return False
-
-
-def join_has_no_exchange(df: DataFrame) -> bool:
-    """True when the physical plan contains no Exchange (shuffle) —
-    the bucketed-join success criterion."""
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    return "Exchange" not in plan
 
 
 def zorder_key(cols: list, bits: int = 16):
@@ -142,127 +33,3 @@ def zorder_key(cols: list, bits: int = 16):
                 F.shiftright(c.cast("long"), i).bitwiseAND(F.lit(1)), i * n + j
             )
     return key
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    zcols: list[str],
-    bits: int = 16,
-    n_files: int = 8,
-    mode: str = "overwrite",
-) -> None:
-    """Write parquet clustered by the Z-order key of ``zcols``:
-    repartitionByRange on the key (contiguous Morton ranges per file)
-    + sortWithinPartitions (tight per-row-group stats). Filters on any
-    of ``zcols`` then skip most files via footer min/max —
-    :func:`files_overlapping` measures it."""
-    z = zorder_key([df[c] for c in zcols], bits=bits).alias("_z")
-    (
-        df.select("*", z)
-        .repartitionByRange(n_files, "_z")
-        .sortWithinPartitions("_z")
-        .drop("_z")
-        .write.mode(mode)
-        .parquet(path)
-    )
-
-
-def files_overlapping(path: str, col: str, lo, hi) -> tuple[int, int]:
-    """Data-skipping evidence: (files whose parquet footer [min,max]
-    for ``col`` overlaps [lo,hi], total files). Reads ONLY footers
-    (driver-side pyarrow) — the same stats a Spark scan's row-group
-    pruning and Delta/Iceberg file skipping consult."""
-    import glob
-    import os
-
-    import pyarrow.parquet as pq
-
-    files = sorted(glob.glob(os.path.join(path, "*.parquet")))
-    hit = 0
-    for f in files:
-        md = pq.ParquetFile(f).metadata
-        fmin, fmax = None, None
-        for rg in range(md.num_row_groups):
-            for ci in range(md.num_columns):
-                c = md.row_group(rg).column(ci)
-                if c.path_in_schema == col and c.statistics is not None:
-                    s = c.statistics
-                    fmin = s.min if fmin is None else min(fmin, s.min)
-                    fmax = s.max if fmax is None else max(fmax, s.max)
-        if fmin is None or (fmax >= lo and fmin <= hi):
-            hit += 1
-    return hit, len(files)
-
-
-def compact_files(
-    spark: SparkSession,
-    path: str,
-    target_mb: int = 128,
-    sort_cols: list[str] | None = None,
-) -> tuple[int, int]:
-    """Small-file compaction (the OPTIMIZE half of OPTIMIZE ZORDER):
-    rewrite a parquet directory into ``ceil(bytes / target_mb)`` files,
-    optionally re-sorted (pass the Z-order/sort key to restore
-    clustering the small writes destroyed). Streaming sinks and
-    per-batch overwrites accrete thousands of KB-files; every
-    downstream scan then pays one task + one footer per file — at
-    10^6 files the LISTING dominates the query. Compaction is the
-    write-once fix, run at batch barriers.
-
-    Returns (files_before, files_after). The rewrite goes through a
-    temp dir + rename-aside swap: write tmp, rename original ->
-    ``_precompact`` backup, rename tmp into place, delete the backup.
-    The dataset path is unreadable only between the two renames (each a
-    single metadata op on HDFS-like stores), and a crash anywhere
-    leaves a complete copy recoverable at the backup or tmp path —
-    mirrors the staging-dir discipline in materialize.py.
-    """
-    sc = spark.sparkContext
-    jvm = sc._jvm
-    conf = sc._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(conf)
-    files = [
-        f
-        for f in fs.listStatus(p)
-        if f.getPath().getName().endswith(".parquet")
-    ]
-    n_before = len(files)
-    total = sum(f.getLen() for f in files)
-    n_after = max(1, -(-total // (target_mb * 1024 * 1024)))
-    df = spark.read.parquet(path)
-    if sort_cols:
-        df = df.repartitionByRange(n_after, *sort_cols).sortWithinPartitions(*sort_cols)
-    else:
-        df = df.coalesce(n_after)
-    tmp = path.rstrip("/") + "_compacting"
-    df.write.mode("overwrite").parquet(tmp)
-    # Hadoop FileSystem signals failure by RETURNING false, not by
-    # raising — an unchecked swap could drop the original and leave
-    # the compacted copy stranded while reporting success. Rename the
-    # original ASIDE first (never delete-then-rename: that window
-    # strands the data entirely if the second op fails or the driver
-    # dies between them).
-    hpath = jvm.org.apache.hadoop.fs.Path
-    backup = hpath(path.rstrip("/") + "_precompact")
-    if fs.exists(backup) and not fs.delete(backup, True):
-        raise IOError(f"compact_files: stale backup {backup} undeletable")
-    if not fs.rename(p, backup):
-        raise IOError(
-            f"compact_files: could not move original {path} aside; "
-            f"original untouched, compacted data intact at {tmp}"
-        )
-    if not fs.rename(hpath(tmp), p):
-        # put the original back so readers never see a missing dataset
-        fs.rename(backup, p)
-        raise IOError(
-            f"compact_files: rename {tmp} -> {path} failed; original "
-            f"restored, compacted data is intact at {tmp}"
-        )
-    if not fs.delete(backup, True):
-        raise IOError(
-            f"compact_files: swap complete but backup {backup} was not "
-            "deleted; remove it manually"
-        )
-    return n_before, n_after

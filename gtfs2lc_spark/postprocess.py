@@ -8,9 +8,9 @@ map). Decomposition into Spark ops, preserving exact semantics:
 - J8 movement merge (sameMovement/mergeMovement, sort.js:97-135):
   same-movement connections are ADJACENT in the descending sort (the
   movement key is a prefix of the sort key), so the merge is local to a
-  movement group. We groupBy the 5-key; singleton groups (the vast
-  majority) bypass Python entirely; only multi-row groups run the exact
-  sequential pairwise merge in applyInPandas.
+  movement group. One window over each group in descending id order
+  plus one aggregate reproduce the sequential pairwise merge exactly,
+  in the JVM, for any group size (see merge_movements).
 - J9 linking (joinConnections, sort.js:137-190): "per-trip last seen
   connection in a descending scan" ≡ lead() over an ascending per-trip
   window; the split/join cross-trip links are as-of lookups ("first
@@ -22,7 +22,6 @@ map). Decomposition into Spark ops, preserving exact semantics:
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -45,218 +44,78 @@ def _key_struct(prefix: str = "") -> F.Column:
     return F.struct(*[F.coalesce(F.col(prefix + k), F.lit("")).alias(k) for k in SORT_KEYS])
 
 
-def _merge_group_pdf(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Exact sequential pairwise merge of one movement group, scanned in
-    descending order (mergeMovement, sort.js:107-135)."""
-    pdf = pdf.sort_values("id", ascending=False)
-    rows = pdf.to_dict("records")
-    for r in rows:
-        r["joinedWithTrip"] = []
-        r["willSplitInto"] = []
-    out: list[dict] = []
-    prev: dict | None = None
-    for c in rows:
-        if prev is None:
-            prev = c
-            continue
-        merged = None
-        c_pu, p_pu = c.get("gtfs_pickupType"), prev.get("gtfs_pickupType")
-        c_do, p_do = c.get("gtfs_dropOffType"), prev.get("gtfs_dropOffType")
-        if c_pu == NA and p_pu != NA:
-            merged = prev
-            merged["joinedWithTrip"].append(c["gtfs_trip"])
-        elif p_pu == NA and c_pu != NA:
-            merged = c
-            merged["joinedWithTrip"].append(prev["gtfs_trip"])
-        elif c_do == NA and p_do != NA:
-            merged = prev
-            merged["willSplitInto"].append(c["gtfs_trip"])
-        elif p_do == NA and c_do != NA:
-            merged = c
-            merged["willSplitInto"].append(prev["gtfs_trip"])
-        if merged is not None:
-            prev = merged
-            continue
-        out.append(prev)
-        prev = c
-    if prev is not None:
-        out.append(prev)
-    return pd.DataFrame(out)
-
-
-def merge_movements(
-    jsonld: DataFrame, big_group_threshold: int | None = 10_000
-) -> DataFrame:
+def merge_movements(jsonld: DataFrame) -> DataFrame:
     """J8: collapse same-movement join/split counterparts.
 
-    The reference's sequential pairwise scan (mergeMovement,
-    sort.js:107-135) is a FOLD over the group's rows in descending id
-    order — expressed here as F.aggregate over the collected group
-    array: pure JVM expressions, zero Python. (The first cut routed
-    multi-row groups through applyInPandas; per-group pandas overhead on
-    ~14k two-row groups made the post-processor ~10x slower than this
-    fold — see PLANS.md.)
+    The reference scans each movement group in descending id order and
+    merges pairwise (mergeMovement, sort.js:107-135). Give each row the
+    class ``v = 2*[pickup NotAvailable] + [dropOff NotAvailable]``: in
+    that scan the row of lower class always absorbs the other (a pickup
+    difference lands in ``joinedWithTrip``, else a dropOff difference
+    in ``willSplitInto``), and an equal class emits the current
+    survivor and starts a new one. So the survivor's class just before
+    a row is the prefix minimum ``m`` of ``v`` over the rows scanned
+    before it, and ``m`` never rises. Each row is then one of:
 
-    Scale shape: ONE shuffle, FULLY LAZY. The movement key is
-    hash-partitioned once (the group-count window); both routing
-    branches read that same exchange (ReuseExchange), so the downstream
-    groupBys (HashPartitioning on the same attributes) add no further
-    exchange. Groups larger than ``big_group_threshold`` — a
-    pathological identical-movement pile-up that would (a) build an
-    unbounded collect_list buffer and (b) hit the fold's O(n^2)
-    accumulator-array concat — route to the exact sequential pandas
-    merge (``_merge_group_pdf``, O(n) per group, Arrow-batched); normal
-    collision-sized groups (2-3 rows) never leave the JVM.
+    - a start (first row, or ``v == m``): a new survivor, empty lists;
+    - a takeover (``v < m``): replaces the survivor, with the replaced
+      survivor's trip as its only list entry (the replaced survivor's
+      own lists are dropped, like the reference's ``merged = connection``);
+    - absorbed (``v > m``): appended to the current survivor's list.
 
-    The routing is part of the SAME lazy plan: oversized movement keys
-    are detected by a SKINNY key-count aggregation (only the 5 movement
-    key columns shuffle for it) kept > threshold — normally ZERO rows —
-    and broadcast into a left_anti (JVM fold path) / left_semi
-    (applyInPandas path) probe pair. With an empty oversized set the
-    anti probe is a free codegen'd filter and the Python stage receives
-    zero rows — Spark's pandas exec nodes short-circuit empty
-    partitions without spawning a worker. No eager materialization, no
-    driver probe, no extra job, no per-branch count window (the
-    round-3 eager-guard shape cost ~1.7 s fixed per call at 208k
-    connections; the count-window branch pair it briefly became cost
-    ~0.4 s). ``big_group_threshold=None`` drops the guard entirely for
-    callers that vouch groups are collision-sized.
+    One window pass numbers the starts (segments) and the starts plus
+    takeovers (sub-segments); one aggregate per segment keeps the row
+    of minimum class — the last takeover, or the start — and appends
+    the absorbed trips of its own sub-segment in scan order. Rows
+    absorbed by a survivor that was later taken over vanish, as in the
+    reference. One shuffle, no Python, O(n log n) for any group size.
     """
     cols = jsonld.columns
     kcols = [f"_k_{k}" for k in MOVEMENT_KEYS]
+
+    def na_bit(c):
+        return F.when(F.col(c) == NA, 1).otherwise(0)
+
     keyed = jsonld.select(
         *cols,
         *[F.coalesce(F.col(k), F.lit("")).alias(kc) for k, kc in zip(MOVEMENT_KEYS, kcols)],
+        (2 * na_bit("gtfs_pickupType") + na_bit("gtfs_dropOffType")).alias("_v"),
     )
-    if big_group_threshold is not None:
-        # probe on an 8-byte hash of the movement key, not the 5 long
-        # URI/time strings (~300 bytes/row through the agg shuffle): a
-        # hash COLLISION merely routes an extra group to the pandas
-        # path, which is exact for any group — correctness never
-        # depends on collision-freedom
-        kh = F.xxhash64(*kcols).alias("_kh")
-        keyed = keyed.select("*", kh)
-        big_keys = (
-            keyed.groupBy("_kh")
-            .agg(F.count(F.lit(1)).alias("_gn"))
-            .where(F.col("_gn") > big_group_threshold)
-            .select("_kh")
-        )
-        bk = F.broadcast(big_keys)
-        small = keyed.join(bk, ["_kh"], "left_anti").drop("_kh")
-        big = keyed.join(bk, ["_kh"], "left_semi").drop("_kh")
-    else:
-        # guard disabled: single groupBy shuffle, no key-count agg
-        small, big = keyed, None
-    empty = F.array().cast("array<string>")
-    out_ddl = (
-        "struct<"
-        + ",".join(f"`{c}`:string" for c in cols)
-        + ",`joinedWithTrip`:array<string>,`willSplitInto`:array<string>>"
-    )
-    acc_ddl = f"struct<`out`:array<{out_ddl}>,`prev`:{out_ddl},`has_prev`:boolean>"
-
-    def rebuild(r, joined, split):
-        """outrow struct from a row/outrow struct + replacement arrays."""
-        return F.struct(
-            *[r[c].alias(c) for c in cols],
-            joined.alias("joinedWithTrip"),
-            split.alias("willSplitInto"),
-        )
-
-    def blank(x):
-        return F.coalesce(x, F.lit(""))
-
-    na = F.lit(NA)
-
-    def step(acc, c):
-        prev = acc["prev"]
-        c_pu, p_pu = blank(c["gtfs_pickupType"]), blank(prev["gtfs_pickupType"])
-        c_do, p_do = blank(c["gtfs_dropOffType"]), blank(prev["gtfs_dropOffType"])
-        keep = lambda merged: F.struct(  # noqa: E731
-            acc["out"].alias("out"), merged.alias("prev"), F.lit(True).alias("has_prev")
-        )
-        emit_prev = F.struct(
-            F.concat(acc["out"], F.array(prev)).alias("out"),
-            rebuild(c, empty, empty).alias("prev"),
-            F.lit(True).alias("has_prev"),
-        )
-        return (
-            F.when(~acc["has_prev"], keep(rebuild(c, empty, empty)))
-            # exact rule order of mergeMovement: pickup both ways first,
-            # then dropOff both ways, else no merge
-            .when(
-                (c_pu == na) & (p_pu != na),
-                keep(rebuild(prev, F.concat(prev["joinedWithTrip"], F.array(c["gtfs_trip"])), prev["willSplitInto"])),
-            )
-            .when(
-                # absorbed-prev's accumulated lists are DISCARDED, like
-                # the reference's `merged = connection` (c starts fresh)
-                (p_pu == na) & (c_pu != na),
-                keep(rebuild(c, F.array(prev["gtfs_trip"]), empty)),
-            )
-            .when(
-                (c_do == na) & (p_do != na),
-                keep(rebuild(prev, prev["joinedWithTrip"], F.concat(prev["willSplitInto"], F.array(c["gtfs_trip"])))),
-            )
-            .when(
-                (p_do == na) & (c_do != na),
-                keep(rebuild(c, empty, F.array(prev["gtfs_trip"]))),
-            )
-            .otherwise(emit_prev)
-        )
-
-    # descending id scan order (sort.js:45-95 external desc sort): ids
-    # are unique, so sorting the row structs (id is the first field)
-    # ascending and reversing reproduces pandas sort_values(ascending=False)
-    rows_desc = F.reverse(
-        F.array_sort(
-            F.collect_list(
-                F.struct(F.col("id").alias("id"), *[F.col(c).alias(c) for c in cols if c != "id"])
-            )
-        )
-    )
-    init = F.struct(
-        F.array().cast(f"array<{out_ddl}>").alias("out"),
-        F.lit(None).cast(out_ddl).alias("prev"),
-        F.lit(False).alias("has_prev"),
-    )
-    folded = F.aggregate(
-        rows_desc,
-        init.cast(acc_ddl),
-        step,
-        lambda acc: F.when(
-            acc["has_prev"], F.concat(acc["out"], F.array(acc["prev"]))
-        ).otherwise(acc["out"]),
-    )
-    out_cols = cols + ["joinedWithTrip", "willSplitInto"]
-    small_out = (
-        small.groupBy(*kcols)
-        .agg(folded.alias("_merged"))
-        .select(F.explode("_merged").alias("_r"))
-        .select(*[F.col("_r")[c].alias(c) for c in out_cols])
+    scan = Window.partitionBy(*kcols).orderBy(F.col("id").desc())
+    before = scan.rowsBetween(Window.unboundedPreceding, -1)
+    upto = scan.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    v, m = F.col("_v"), F.col("_m")
+    start = m.isNull() | (v == m)
+    survivor = m.isNull() | (v <= m)  # a start or a takeover
+    scanned = keyed.withColumn("_m", F.min("_v").over(before)).select(
+        "*",
+        F.sum(start.cast("int")).over(upto).alias("_seg"),
+        F.sum(survivor.cast("int")).over(upto).alias("_sub"),
+        # trip of the survivor a takeover replaces
+        F.when(v < m, F.last(F.when(survivor, F.col("gtfs_trip")), ignorenulls=True).over(before))
+        .alias("_inherit"),
+        # pair differs in pickup -> joinedWithTrip, else willSplitInto
+        (F.shiftright(v, 1) != F.shiftright(m, 1)).alias("_j"),
     )
 
-    # Oversized-group escape hatch: exact sequential merge in pandas
-    # (one Arrow batch stream per group — no unbounded JVM agg buffer).
-    # The branch is always in the plan when the guard is on, but pandas
-    # exec short-circuits empty partitions, so the common case (no
-    # oversized group) never actually spawns a Python worker.
-    if big is None:
-        return small_out
-
-    out_schema = ", ".join(
-        [f"`{f.name}` {f.dataType.simpleString()}" for f in jsonld.schema.fields]
-        + ["`joinedWithTrip` array<string>", "`willSplitInto` array<string>"]
+    merged = scanned.groupBy(*kcols, "_seg").agg(
+        F.min_by(F.struct(*cols, "_inherit", "_j", "_sub"), "_v").alias("_s"),
+        F.collect_list(F.when(v > m, F.struct("id", "_sub", "_j", "gtfs_trip"))).alias("_abs"),
     )
-    drop_cols = kcols
+    s = F.col("_s")
+    # absorbed rows of the survivor's own sub-segment, descending id
+    tail = F.sort_array(F.filter("_abs", lambda a: a["_sub"] == s["_sub"]), asc=False)
 
-    def _merge_big(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = _merge_group_pdf(pdf.drop(columns=drop_cols))
-        return out[out_cols]
+    def trips(joined):
+        head = F.when(s["_inherit"].isNotNull() & (s["_j"] == joined), F.array(s["_inherit"]))
+        rest = F.transform(F.filter(tail, lambda a: a["_j"] == joined), lambda a: a["gtfs_trip"])
+        return F.concat(F.coalesce(head, F.array().cast("array<string>")), rest)
 
-    big_out = big.groupBy(*kcols).applyInPandas(_merge_big, schema=out_schema)
-    return small_out.unionByName(big_out)
+    return merged.select(
+        *[s[c].alias(c) for c in cols],
+        trips(True).alias("joinedWithTrip"),
+        trips(False).alias("willSplitInto"),
+    )
 
 
 def link_next_connections(merged: DataFrame) -> DataFrame:
@@ -364,9 +223,7 @@ def link_next_connections(merged: DataFrame) -> DataFrame:
     return out
 
 
-def join_and_sort(
-    jsonld: DataFrame, big_group_threshold: int | None = 10_000
-) -> DataFrame:
+def join_and_sort(jsonld: DataFrame) -> DataFrame:
     """Full post-processor: merge movements, link nextConnection, order
     ascending by the reference comparator (sort.js:210-233).
 
@@ -374,8 +231,8 @@ def join_and_sort(
     by spark.gtfs2lc.materialize): J9 references it from five plan
     branches (lead window, split-link keys, setters, last-connections,
     final projection), and without the cut each branch would re-run the
-    movement-merge fold — measured ~11% slower and far less stable at
-    208k connections."""
-    merged = materialize(merge_movements(jsonld, big_group_threshold), "j8-merged")
+    movement merge — measured ~11% slower and far less stable at 208k
+    connections."""
+    merged = materialize(merge_movements(jsonld), "j8-merged")
     linked = link_next_connections(merged)
     return linked.orderBy(*[F.coalesce(F.col(k), F.lit("")) for k in SORT_KEYS])

@@ -1,72 +1,6 @@
-"""Physical layout: bucketed co-located joins (no Exchange) and
-partition-pruned scans (layout.py)."""
+"""Physical layout: the Z-order key (layout.py)."""
 
 from __future__ import annotations
-
-from pyspark.sql import functions as F
-
-from gtfs2lc_spark import layout
-
-
-def test_bucketed_join_has_no_exchange_and_matches_plain_join(spark, tmp_path):
-    spark.sql(f"CREATE DATABASE IF NOT EXISTS lyt LOCATION '{tmp_path}/wh'")
-    try:
-        docs = spark.range(0, 2000).selectExpr(
-            "id AS doc_id", "id % 7 AS feat"
-        )
-        labels = spark.range(0, 2000, 2).selectExpr(
-            "id AS doc_id", "id % 3 AS lbl"
-        )
-        layout.write_bucketed(docs, "lyt.docs_b", "doc_id", n_buckets=8,
-                              sort_cols="doc_id")
-        layout.write_bucketed(labels, "lyt.labels_b", "doc_id", n_buckets=8,
-                              sort_cols="doc_id")
-        j = layout.bucketed_join(spark, "lyt.docs_b", "lyt.labels_b", "doc_id")
-        # THE contract: the join plan contains zero Exchange — the
-        # write-time bucketing is the shuffle, paid once.
-        assert layout.join_has_no_exchange(j)
-        got = {(r["doc_id"], r["feat"], r["lbl"]) for r in j.collect()}
-        want = {
-            (r["doc_id"], r["feat"], r["lbl"])
-            for r in docs.join(labels, "doc_id").collect()
-        }
-        assert got == want and len(got) == 1000
-        # bucket-count mismatch re-shuffles (the guard the helper's
-        # convention exists to avoid): 8-bucket vs 4-bucket must exchange
-        layout.write_bucketed(labels, "lyt.labels_b4", "doc_id", n_buckets=4)
-        j_bad = layout.bucketed_join(spark, "lyt.docs_b", "lyt.labels_b4", "doc_id")
-        assert not layout.join_has_no_exchange(j_bad)
-    finally:
-        spark.sql("DROP DATABASE IF EXISTS lyt CASCADE")
-
-
-def test_bucketed_groupby_reuses_bucket_clustering(spark, tmp_path):
-    """An aggregation keyed on the bucket column needs no Exchange
-    either — bucketing amortizes over aggs, not just joins."""
-    spark.sql(f"CREATE DATABASE IF NOT EXISTS lyt2 LOCATION '{tmp_path}/wh2'")
-    try:
-        df = spark.range(0, 1000).selectExpr("id % 50 AS k", "id AS v")
-        layout.write_bucketed(df, "lyt2.fact_b", "k", n_buckets=8)
-        agg = spark.table("lyt2.fact_b").groupBy("k").agg(F.sum("v").alias("s"))
-        assert layout.join_has_no_exchange(agg)
-        assert agg.count() == 50
-    finally:
-        spark.sql("DROP DATABASE IF EXISTS lyt2 CASCADE")
-
-
-def test_partitioned_scan_prunes(spark, tmp_path):
-    path = str(tmp_path / "corpus")
-    df = spark.createDataFrame(
-        [(i, f"t{i}", ["en", "de", "fr"][i % 3]) for i in range(90)],
-        "doc_id bigint, text string, lang string",
-    )
-    layout.write_partitioned(df, path, "lang")
-    scan = spark.read.parquet(path).where(F.col("lang") == "en")
-    assert layout.scan_is_pruned(scan, "lang")
-    assert scan.count() == 30
-    # a non-partition filter is NOT a partition prune
-    scan2 = spark.read.parquet(path).where(F.col("doc_id") < 10)
-    assert not layout.scan_is_pruned(scan2, "doc_id")
 
 
 def test_zorder_key_bit_interleave(spark):
@@ -91,64 +25,3 @@ def test_zorder_key_bit_interleave(spark):
         return z
 
     assert got == [morton(x, y) for x, y in rows]
-
-
-def test_zorder_layout_skips_files_on_both_dims(spark, tmp_path):
-    """The point of Z-order: after write_zordered on (x, y), a narrow
-    predicate on EITHER dimension overlaps only a fraction of the
-    files' footer [min,max] ranges — whereas an x-sorted layout serves
-    x but makes every file a candidate for a y predicate."""
-    from pyspark.sql import functions as F
-
-    from gtfs2lc_spark import layout
-
-    # independent dimensions (full 128x128 grid): x and y must not be
-    # functionally dependent or the z-key degenerates to a 1-D curve
-    df = spark.range(20000).select(
-        (F.col("id") % 128).alias("x"),
-        ((F.col("id") / 128).cast("long") % 128).alias("y"),
-    )
-    zpath = str(tmp_path / "zorder")
-    xpath = str(tmp_path / "xsort")
-    layout.write_zordered(df, zpath, ["x", "y"], bits=7, n_files=16)
-    (
-        df.repartitionByRange(16, "x")
-        .sortWithinPartitions("x")
-        .write.mode("overwrite")
-        .parquet(xpath)
-    )
-
-    zx = layout.files_overlapping(zpath, "x", 0, 15)
-    zy = layout.files_overlapping(zpath, "y", 0, 15)
-    xx = layout.files_overlapping(xpath, "x", 0, 15)
-    xy = layout.files_overlapping(xpath, "y", 0, 15)
-    assert zx[1] == 16 and xy[1] == 16
-    # z-order: BOTH dimensions skip most files
-    assert zx[0] <= zx[1] // 2, (zx, zy)
-    assert zy[0] <= zy[1] // 2, (zx, zy)
-    # x-sort: x skips, y cannot
-    assert xx[0] <= 3
-    assert xy[0] == xy[1]
-    # the layouts hold identical data
-    assert (
-        spark.read.parquet(zpath).orderBy("x", "y").collect()
-        == df.orderBy("x", "y").collect()
-    )
-
-
-def test_compact_files_preserves_data(spark, tmp_path):
-    path = str(tmp_path / "shards")
-    df = spark.range(5000).select(
-        F.col("id"), (F.col("id") % 97).alias("k")
-    )
-    df.repartition(64).write.mode("overwrite").parquet(path)
-    import glob
-
-    assert len(glob.glob(path + "/*.parquet")) == 64
-    before, after = layout.compact_files(spark, path, target_mb=128, sort_cols=["k"])
-    assert before == 64 and after == 1
-    files = glob.glob(path + "/*.parquet")
-    assert len(files) == 1
-    got = spark.read.parquet(path).orderBy("id").collect()
-    want = df.orderBy("id").collect()
-    assert got == want

@@ -2,10 +2,79 @@
 splittingAndJoiningTrips tests (/root/reference/test/
 splittingAndJoiningTrips.test.js:18-64, current-code semantics)."""
 
+import random
+
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 from gtfs2lc_spark import postprocess
+
+NA = postprocess.NA
+SCHEMA = (
+    "id string, departureStop string, arrivalStop string, "
+    "departureTime string, arrivalTime string, gtfs_trip string, "
+    "gtfs_route string, direction string, gtfs_pickupType string, "
+    "gtfs_dropOffType string"
+)
+
+
+def _merge_group_pdf(pdf: pd.DataFrame) -> pd.DataFrame:
+    """Exact sequential pairwise merge of one movement group, scanned in
+    descending order (mergeMovement, sort.js:107-135)."""
+    pdf = pdf.sort_values("id", ascending=False)
+    rows = pdf.to_dict("records")
+    for r in rows:
+        r["joinedWithTrip"] = []
+        r["willSplitInto"] = []
+    out: list[dict] = []
+    prev: dict | None = None
+    for c in rows:
+        if prev is None:
+            prev = c
+            continue
+        merged = None
+        c_pu, p_pu = c.get("gtfs_pickupType"), prev.get("gtfs_pickupType")
+        c_do, p_do = c.get("gtfs_dropOffType"), prev.get("gtfs_dropOffType")
+        if c_pu == NA and p_pu != NA:
+            merged = prev
+            merged["joinedWithTrip"].append(c["gtfs_trip"])
+        elif p_pu == NA and c_pu != NA:
+            merged = c
+            merged["joinedWithTrip"].append(prev["gtfs_trip"])
+        elif c_do == NA and p_do != NA:
+            merged = prev
+            merged["willSplitInto"].append(c["gtfs_trip"])
+        elif p_do == NA and c_do != NA:
+            merged = c
+            merged["willSplitInto"].append(prev["gtfs_trip"])
+        if merged is not None:
+            prev = merged
+            continue
+        out.append(prev)
+        prev = c
+    if prev is not None:
+        out.append(prev)
+    return pd.DataFrame(out)
+
+
+def _expected_merge(rows):
+    """id -> (joinedWithTrip, willSplitInto) of the surviving rows, by
+    running _merge_group_pdf over each movement group of ``rows``."""
+    pdf = pd.DataFrame(rows, columns=SCHEMA.replace(" string", "").split(", "))
+    want = {}
+    for _, g in pdf.groupby(["departureTime", "arrivalTime", "gtfs_route",
+                             "departureStop", "arrivalStop"], dropna=False):
+        for r in _merge_group_pdf(g).to_dict("records"):
+            want[r["id"]] = (tuple(r["joinedWithTrip"]), tuple(r["willSplitInto"]))
+    return want
+
+
+def _snap(out):
+    return {
+        r.id: (tuple(r.joinedWithTrip), tuple(r.willSplitInto))
+        for r in out.collect()
+    }
 
 
 @pytest.fixture(scope="module")
@@ -105,13 +174,7 @@ def _mk_jsonld(spark, rows):
         )
         for (rid, trip, pu, do) in rows
     ]
-    return spark.createDataFrame(
-        data,
-        "id string, departureStop string, arrivalStop string, "
-        "departureTime string, arrivalTime string, gtfs_trip string, "
-        "gtfs_route string, direction string, gtfs_pickupType string, "
-        "gtfs_dropOffType string",
-    )
+    return spark.createDataFrame(data, SCHEMA)
 
 
 def test_three_way_join_collision_absorber_last(spark):
@@ -137,8 +200,8 @@ def test_three_way_join_collision_absorber_first(spark):
     """Same 3 rows, but the absorber has the LOWEST id: the reference's
     sequential scan meets the two NA-pickup rows first (no rule matches
     between two NA rows), emits the first joiner unmerged, then the
-    absorber absorbs only the second joiner. Order-dependent — and our
-    applyInPandas group merge must reproduce it exactly."""
+    absorber absorbs only the second joiner. Order-dependent — and
+    merge_movements must reproduce it exactly."""
     df = _mk_jsonld(spark, [
         ("id_a_main", "main", None, None),   # lowest id -> scanned last
         ("id_y_join1", "join1", "gtfs:NotAvailable", None),
@@ -164,144 +227,93 @@ def test_three_way_split_collision(spark):
     assert out[0].joinedWithTrip == []
 
 
-def test_merge_fold_matches_python_reference(spark):
-    """Property check: the pure-JVM F.aggregate fold must reproduce
-    _merge_group_pdf (the direct transcription of mergeMovement)
-    exactly, over randomized collision groups of sizes 1-6 with random
-    NA pickup/dropOff flags. Deterministic seed."""
-    import random
-
-    import pandas as pd
-
-    rng = random.Random(7)
-    NA = postprocess.NA
+def test_merge_matches_python_reference(spark):
+    """Property check: merge_movements must reproduce _merge_group_pdf
+    (the direct transcription of mergeMovement) exactly, over
+    randomized collision groups of 1-12 rows with random NA
+    pickup/dropOff flags, for several deterministic seeds."""
     rows = []
     gid = 0
-    for size in [1, 2, 2, 3, 3, 4, 5, 6] * 8:
-        gid += 1
-        for i in range(size):
-            pu = rng.choice([None, NA, "gtfs:Regular"])
-            do = rng.choice([None, NA, "gtfs:Regular"])
-            rows.append((
-                f"id_{gid:03d}_{rng.randrange(1000):03d}_{i}",
-                f"http://x/stops/D{gid}", f"http://x/stops/A{gid}",
-                f"2007-01-01T{gid:02d}:00:00.000Z", f"2007-01-01T{gid:02d}:10:00.000Z",
-                f"http://x/trips/t{gid}_{i}", "http://x/routes/R", None, pu, do,
-            ))
-    schema = ("id string, departureStop string, arrivalStop string, "
-              "departureTime string, arrivalTime string, gtfs_trip string, "
-              "gtfs_route string, direction string, gtfs_pickupType string, "
-              "gtfs_dropOffType string")
-    df = spark.createDataFrame(rows, schema)
-    cols = df.columns
-
-    got = {
-        r.id: (tuple(r.joinedWithTrip), tuple(r.willSplitInto))
-        for r in postprocess.merge_movements(df).collect()
-    }
-
-    # independent expectation: _merge_group_pdf per movement group
-    pdf = pd.DataFrame(rows, columns=schema.replace(" string", "").split(", "))
-    want = {}
-    for _, g in pdf.groupby(["departureTime", "arrivalTime", "gtfs_route",
-                             "departureStop", "arrivalStop"], dropna=False):
-        merged = postprocess._merge_group_pdf(g[cols])
-        for _, r in merged.iterrows():
-            want[r["id"]] = (tuple(r["joinedWithTrip"]), tuple(r["willSplitInto"]))
-
-    assert got == want
+    for seed in (7, 11, 23, 42, 99):
+        rng = random.Random(seed)
+        for size in list(range(1, 13)) * 4:
+            gid += 1
+            for i in range(size):
+                rows.append((
+                    f"id_{gid:04d}_{rng.randrange(1000):03d}_{i:02d}",
+                    f"http://x/stops/D{gid}", f"http://x/stops/A{gid}",
+                    f"2007-01-01T{gid % 24:02d}:00:00.000Z",
+                    f"2007-01-01T{gid % 24:02d}:10:00.000Z",
+                    f"http://x/trips/t{gid}_{i}", "http://x/routes/R", None,
+                    rng.choice([None, NA, "gtfs:Regular"]),
+                    rng.choice([None, NA, "gtfs:Regular"]),
+                ))
+    df = spark.createDataFrame(rows, SCHEMA)
+    assert _snap(postprocess.merge_movements(df)) == _expected_merge(rows)
 
 
-def test_mega_movement_group_bounded(spark):
+PILEUP_CLASSES = {
+    # (pickup, dropOff) by row index; the scan visits the highest id first
+    "same_class": lambda i: (NA, None),
+    "cycling_classes": lambda i: [(None, None), (NA, None), (None, NA), (NA, NA)][i % 4],
+}
+
+
+@pytest.mark.parametrize("case", ["absorber", *PILEUP_CLASSES])
+def test_mega_movement_group_bounded(spark, case):
     """VERDICT r2 item 3: a pathological identical-movement pile-up
-    (100k rows sharing one movement key) must complete without an
-    unbounded JVM agg buffer — routed through the exact sequential
-    pandas merge — and must keep exact mergeMovement semantics: the
-    absorber (highest id, scanned first in the descending scan) absorbs
-    every NotAvailable-pickup row."""
+    (100k rows sharing one movement key) must complete and keep exact
+    mergeMovement semantics:
+
+    - absorber: the absorber (highest id, scanned first in the
+      descending scan) absorbs every NotAvailable-pickup row;
+    - same_class: no two rows merge, so every row comes out;
+    - cycling_classes: the class cycles through all four pickup/dropOff
+      combinations (starts, takeovers, both list kinds), checked
+      against _merge_group_pdf."""
     n = 100_000
-    joiners = spark.range(n - 1).select(
-        F.format_string("id_%06d", "id").alias("id"),
-        F.lit("http://x/stops/A").alias("departureStop"),
-        F.lit("http://x/stops/B").alias("arrivalStop"),
-        F.lit("2007-01-01T08:00:00.000Z").alias("departureTime"),
-        F.lit("2007-01-01T08:10:00.000Z").alias("arrivalTime"),
-        F.format_string("http://x/trips/t%06d", "id").alias("gtfs_trip"),
-        F.lit("http://x/routes/R").alias("gtfs_route"),
-        F.lit(None).cast("string").alias("direction"),
-        F.lit(postprocess.NA).alias("gtfs_pickupType"),
-        F.lit(None).cast("string").alias("gtfs_dropOffType"),
-    )
-    absorber = spark.createDataFrame(
-        [("zz_main", "http://x/stops/A", "http://x/stops/B",
-          "2007-01-01T08:00:00.000Z", "2007-01-01T08:10:00.000Z",
-          "http://x/trips/main", "http://x/routes/R", None, None, None)],
-        "id string, departureStop string, arrivalStop string, "
-        "departureTime string, arrivalTime string, gtfs_trip string, "
-        "gtfs_route string, direction string, gtfs_pickupType string, "
-        "gtfs_dropOffType string",
-    )
-    out = postprocess.merge_movements(
-        joiners.unionByName(absorber), big_group_threshold=10_000
-    ).collect()
-    assert len(out) == 1
-    row = out[0]
-    assert row.gtfs_trip == "http://x/trips/main"
-    assert len(row.joinedWithTrip) == n - 1
-    # descending-scan absorption order: t099998, t099997, ...
-    assert row.joinedWithTrip[0] == "http://x/trips/t099998"
-    assert row.joinedWithTrip[-1] == "http://x/trips/t000000"
-
-
-def test_big_group_route_matches_jvm_fold(spark):
-    """Routing parity: forcing every multi-row group through the pandas
-    escape hatch (threshold=1) must reproduce the JVM fold exactly,
-    over randomized collision groups."""
-    import random
-
-    rng = random.Random(11)
-    NA = postprocess.NA
-    rows = []
-    for gid in range(1, 40):
-        for i in range(rng.choice([1, 2, 2, 3, 4, 5])):
-            rows.append((
-                f"id_{gid:03d}_{rng.randrange(1000):03d}_{i}",
-                f"http://x/stops/D{gid}", f"http://x/stops/A{gid}",
-                f"2007-01-01T{gid:02d}:00:00.000Z", f"2007-01-01T{gid:02d}:10:00.000Z",
-                f"http://x/trips/t{gid}_{i}", "http://x/routes/R", None,
-                rng.choice([None, NA, "gtfs:Regular"]),
-                rng.choice([None, NA, "gtfs:Regular"]),
-            ))
-    schema = ("id string, departureStop string, arrivalStop string, "
-              "departureTime string, arrivalTime string, gtfs_trip string, "
-              "gtfs_route string, direction string, gtfs_pickupType string, "
-              "gtfs_dropOffType string")
-    df = spark.createDataFrame(rows, schema)
-
-    def snap(out):
-        return {
-            r.id: (tuple(r.joinedWithTrip), tuple(r.willSplitInto))
-            for r in out.collect()
-        }
-
-    assert snap(postprocess.merge_movements(df, big_group_threshold=1)) == snap(
-        postprocess.merge_movements(df)
-    )
+    if case == "absorber":
+        flags = [(NA, None)] * (n - 1)
+    else:
+        flags = [PILEUP_CLASSES[case](i) for i in range(n)]
+    rows = [
+        (f"id_{i:06d}", "http://x/stops/A", "http://x/stops/B",
+         "2007-01-01T08:00:00.000Z", "2007-01-01T08:10:00.000Z",
+         f"http://x/trips/t{i:06d}", "http://x/routes/R", None, pu, do)
+        for i, (pu, do) in enumerate(flags)
+    ]
+    if case == "absorber":
+        rows.append(("zz_main", "http://x/stops/A", "http://x/stops/B",
+                     "2007-01-01T08:00:00.000Z", "2007-01-01T08:10:00.000Z",
+                     "http://x/trips/main", "http://x/routes/R", None, None, None))
+    got = _snap(postprocess.merge_movements(spark.createDataFrame(rows, SCHEMA)))
+    if case == "absorber":
+        assert list(got) == ["zz_main"]
+        joined, split = got["zz_main"]
+        assert len(joined) == n - 1 and split == ()
+        # descending-scan absorption order: t099998, t099997, ...
+        assert joined[0] == "http://x/trips/t099998"
+        assert joined[-1] == "http://x/trips/t000000"
+    elif case == "same_class":
+        assert len(got) == n
+        assert set(got.values()) == {((), ())}
+    else:
+        assert got == _expected_merge(rows)
 
 
 def test_merge_movements_is_lazy_with_guard_on(spark, jsonld):
-    """VERDICT r3 #2: the big-group guard must be a plan-time decision,
-    not a call-time job — merge_movements with the guard ON (default)
-    triggers ZERO Spark jobs during construction, and the oversized
-    routing lives in the SAME lazy plan (both branches present)."""
-    jl = jsonld.drop("feed_id", "type", "departure_ts", "arrival_ts")
+    """Plan lock: building the merge runs no Spark job (no eager
+    checkpoint, no driver probe), and the executed plan is one hash
+    shuffle on the movement key with no Python node."""
+    # checkpointed so the plan starts at a scan: the cached fixture's
+    # own plan (with its exchanges) would otherwise print inside it
+    jl = jsonld.drop("feed_id", "type", "departure_ts", "arrival_ts").localCheckpoint()
     tracker = spark.sparkContext._jsc.sc().statusTracker()
     n_before = len(list(tracker.getJobIdsForGroup(None)))
     plan = postprocess.merge_movements(jl)  # construction only
     n_after = len(list(tracker.getJobIdsForGroup(None)))
-    assert n_after == n_before  # no eager checkpoint, no driver probe
+    assert n_after == n_before
     phys = plan._jdf.queryExecution().executedPlan().toString()
-    # both routing branches are in the one plan: the JVM fold (aggregate
-    # over sorted structs) and the pandas escape hatch
-    assert "FlatMapGroupsInPandas" in phys
-    assert "aggregate(" in phys or "Union" in phys
+    assert phys.count("Exchange hashpartitioning") == 1, phys
+    assert "FlatMapGroupsInPandas" not in phys
+    assert "ArrowEvalPython" not in phys
