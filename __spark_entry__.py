@@ -1757,8 +1757,8 @@ def _q_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_key_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Join-key skew profiler: top-10 hottest user_id keys with share
-    and cumulative share — the measurement that triggers salted_agg /
-    salted_join before a straggler does."""
+    and cumulative share — the measurement that triggers salted_agg
+    before a straggler does."""
     from gtfs2lc_spark import skew
 
     e = _load(spark, sf_dir, "events")

@@ -1,7 +1,5 @@
 """Deduplication operators for web-scale corpora.
 
-- exact: hash-groupBy on a canonical fingerprint (one shuffle on the
-  hash — the minimum possible).
 - MinHash + LSH: shingle -> 32-perm minhash signature -> banded LSH
   bucketing -> candidate pairs -> exact Jaccard verification. Signature
   computation is pure array expressions (codegen'd, no Python); only
@@ -19,7 +17,7 @@ import random
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .text import fingerprint, tokens
+from .text import tokens
 
 _MERSENNE = 4294967311  # prime > 2^32
 _MAX_A = 1 << 30
@@ -51,18 +49,6 @@ def _token_hash32(c: Column, hash_fn: str) -> Column:
     if hash_fn == "md5":
         return portable_hash32(c)
     return F.pmod(F.xxhash64(c), F.lit(1 << 32))
-
-
-def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Keep the smallest id per normalized-text fingerprint."""
-    h = fingerprint(F.col(text_col)).alias("fp")
-    w = Window.partitionBy("fp").orderBy(id_col)
-    return (
-        df.select("*", h)
-        .withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_rn", "fp")
-    )
 
 
 def word_shingles(text: Column, k: int = 3) -> Column:
@@ -104,25 +90,6 @@ def minhash_signature_from_hashes(
         for (a, b) in params
     ]
     return F.array(*sig)
-
-
-def minhash_signature(
-    shingles: Column, num_perm: int = 32, seed: int = 42, hash_fn: str = "xxhash64"
-) -> Column:
-    """num_perm-wide minhash signature, fully JVM-side.
-
-    h32 = hash32(shingle); sig_p = min((a_p*h32+b_p) mod P).
-    ``hash_fn``: 'xxhash64' (production) or 'md5' (portable_hash32 —
-    exactly reproducible in the DuckDB oracle).
-
-    NOTE: this single-Column form re-evaluates the shingle-hash
-    transform once per permutation (HOFs are CodegenFallback — no
-    subexpression elimination). Hot paths should stage the hash array
-    in a select and use :func:`minhash_signature_from_hashes`, like
-    :func:`lsh_candidate_pairs` does.
-    """
-    h32 = F.transform(shingles, lambda s: _token_hash32(s, hash_fn))
-    return minhash_signature_from_hashes(h32, num_perm, seed)
 
 
 def lsh_candidate_pairs(
@@ -373,23 +340,6 @@ def near_duplicate_clusters(
     )
 
 
-def simhash64(
-    text: Column, seed: int = 42, hash_fn: str = "xxhash64", bits: int = 64
-) -> Column:
-    """``bits``-wide SimHash over word tokens, pure array expressions.
-
-    bit_j(doc) = sign of sum over tokens of (+1 if bit j of
-    hash(token) else -1). Computed as: for each bit j, count of
-    set bits minus half the token count.
-
-    ``hash_fn='md5'`` uses the 60-bit portable hash (so ``bits`` must be
-    <= 60) — every bit is then reproducible in the DuckDB oracle.
-    """
-    if hash_fn == "md5":
-        assert bits <= 60, "portable hash is 60-bit"
-    return simhash_from_hashes(_simhash_token_hashes(text, seed, hash_fn), bits)
-
-
 def _simhash_token_hashes(text: Column, seed: int, hash_fn: str) -> Column:
     toks = F.filter(tokens(text), lambda t: t != "")
     if hash_fn == "md5":
@@ -630,8 +580,8 @@ def duplicated_spans(
     Skew note: every occurrence of one boilerplate shingle meets in
     one task at stages 2-3 (the join/agg key is the shingle). The
     aggregations are map-side combinable so only the semi-join probe
-    is exposed; for a corpus with a pathological mega-duplicate,
-    route stage 2 through ``skew.salted_join(..., how='left_semi')``.
+    is exposed; for a corpus with a pathological mega-duplicate, salt
+    stage 2's probe side and replicate its build side once per salt.
 
     ``materialize_positions`` (default True): the position set feeds
     FOUR plan branches (hash count, hash probe, substring count,

@@ -47,8 +47,8 @@ def dedupe_batch(
 ) -> DataFrame:
     """Documents of ``docs`` that survive BOTH dedup stages:
 
-    1. within-batch: smallest ``id_col`` per fingerprint wins (the
-       exact_dedup decision, deterministic);
+    1. within-batch: smallest ``id_col`` per fingerprint wins
+       (deterministic);
     2. cross-batch: fingerprints already in the history store lose
        (one ``left_anti`` join — the store side is the skinny
        fingerprint table, not the corpus).

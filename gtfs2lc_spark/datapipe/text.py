@@ -1124,22 +1124,6 @@ def normalize_text(text_col: Column) -> Column:
     return F.trim(F.regexp_replace(no_ctl, r"\s+", " "))
 
 
-def clean_corpus(
-    df: DataFrame, text_col: str = "text", keep_original: bool = False
-) -> DataFrame:
-    """Apply :func:`normalize_text` in place (schema preserved;
-    ``keep_original`` adds ``<text_col>_raw``)."""
-    cols = []
-    for c in df.columns:
-        if c == text_col:
-            if keep_original:
-                cols.append(F.col(c).alias(f"{c}_raw"))
-            cols.append(normalize_text(F.col(c)).alias(c))
-        else:
-            cols.append(F.col(c))
-    return df.select(*cols)
-
-
 def negative_samples(
     df: DataFrame,
     k: int = 4,

@@ -79,21 +79,21 @@ def detect_gtfs(text: pd.Series) -> pd.DataFrame:
     )
 
 
-def detect_pages(pages: DataFrame, detect_partitions: int | None = None) -> DataFrame:
+def detect_pages(pages: DataFrame) -> DataFrame:
     """pages -> (url, warc_ts, gtfs_file, feed_id, header, body), one
     row per url (newest crawl wins), GTFS pages only.
 
-    ``detect_partitions`` bounds the pandas-UDF stage's task count
-    (default: the session's defaultParallelism). Every Python task costs
-    a worker spin-up (pandas import ≈ 1.5 s CPU), so the UDF stage
-    should run exactly one task per core — the cheap JVM prefilter can
-    stay as parallel as the scan likes.
+    The pandas-UDF stage runs ``defaultParallelism`` tasks. Every Python
+    task costs a worker spin-up (pandas import ≈ 1.5 s CPU), so the UDF
+    stage should run exactly one task per core — the cheap JVM
+    prefilter can stay as parallel as the scan likes.
     """
     prefiltered = pages.where(F.col("text").startswith(GTFS_MARKER)).select(
         "url", "warc_ts", "text"
     )
-    n = detect_partitions or pages.sparkSession.sparkContext.defaultParallelism
-    prefiltered = prefiltered.repartition(n)
+    prefiltered = prefiltered.repartition(
+        pages.sparkSession.sparkContext.defaultParallelism
+    )
     det = (
         prefiltered.withColumn("g", detect_gtfs("text"))
         .where(F.col("g.gtfs_file").isNotNull())
@@ -117,19 +117,17 @@ def detect_pages(pages: DataFrame, detect_partitions: int | None = None) -> Data
     )
 
 
-def extract_entities(
-    pages: DataFrame, persist: bool = True, detect_partitions: int | None = None
-) -> dict[str, DataFrame]:
+def extract_entities(pages: DataFrame) -> dict[str, DataFrame]:
     """pages -> {entity name: all-string DataFrame + feed_id/url lineage}.
 
     Missing optional files (calendar/calendar_dates) simply produce
     empty DataFrames, matching the reference's empty-stream substitution
     (lib/stores/StoreManager.js:56,72-75).
 
-    ``persist`` (default) materializes the detected-pages intermediate
-    ONCE (``materialize``; local checkpoint by default, reliable
-    checkpoint / parquet staging via spark.gtfs2lc.materialize on a
-    cluster). Two reasons, both load-bearing:
+    The detected-pages intermediate is materialized ONCE
+    (``materialize``; local checkpoint by default, reliable checkpoint /
+    parquet staging via spark.gtfs2lc.materialize on a cluster). Two
+    reasons, both load-bearing:
 
     1. Catalyst does not share common sub-plans: the six entity
        lineages (and every downstream job) would each re-run the pages
@@ -143,11 +141,10 @@ def extract_entities(
     The detected set is ~10^3-10^6x smaller than the pages table; on a
     real cluster the equivalent is writing it to a parquet/Iceberg
     staging table — the reference's own "rule shard" checkpoint
-    (SURVEY.md §3.1 step 3).
+    (SURVEY.md §3.1 step 3). For the lazy plan, call
+    ``entities_from_detected(detect_pages(pages))``.
     """
-    detected = detect_pages(pages, detect_partitions)
-    if persist:
-        detected = materialize(detected, "detected-pages")
+    detected = materialize(detect_pages(pages), "detected-pages")
     return entities_from_detected(detected)
 
 

@@ -326,8 +326,3 @@ def pages_df_scaled(
     if n_partitions:
         out = out.repartition(n_partitions)
     return out
-
-
-def expected_service_dates() -> dict[str, int]:
-    """Expanded service-set sizes of the fixture (FIXTURES.md §3)."""
-    return {"FULLW": 180, "WE": 51, "W": 130}

@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession  # noqa: F401
 
 # absolute imports: spark-submit executes this file as a top-level
 # script (no package parent), with the package zip on --py-files
-from gtfs2lc_spark import fixtures, pipeline, postprocess, sinks
+from gtfs2lc_spark import FEED_TIMEZONE_DEFAULT, fixtures, pipeline, postprocess, sinks
 from gtfs2lc_spark import materialize as materialize_mod
 from gtfs2lc_spark.checkpoint import HistoryStore, convert_incremental
 from gtfs2lc_spark.extraction import extract_entities
@@ -92,11 +92,10 @@ def format_header(fmt: str) -> str | None:
 def build_outputs(
     conns: DataFrame,
     fmt: str,
-    base_uris: dict | None,
+    uris: URIStrategy,
     join_and_sort: bool,
     message_counter: bool = False,
 ) -> DataFrame:
-    uris = URIStrategy(base_uris)
     if fmt == "csv":
         return sinks.connections_to_csv_rows(conns)
     if fmt == "json":
@@ -159,7 +158,7 @@ def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
                     help="RDF 1.2 message-log framing for turtle/ntriples/"
                          "triples-parquet (W4): message-ordered text output; "
                          "triples-parquet keeps the message_counter column")
-    ap.add_argument("--feed-tz", default="Europe/Brussels")
+    ap.add_argument("--feed-tz", default=FEED_TIMEZONE_DEFAULT)
     ap.add_argument("--salt", type=int, default=pipeline.DEFAULT_SALT_N)
     ap.add_argument("--compressed", action="store_true",
                     help="gzip text output (S6, reference --compressed)")
@@ -213,7 +212,7 @@ def run(spark: SparkSession, args: argparse.Namespace) -> dict:
         base_uris = FEED_SCOPED_BASE_URIS
 
     out = build_outputs(
-        conns, args.format, base_uris, args.join_and_sort,
+        conns, args.format, URIStrategy(base_uris, args.feed_tz), args.join_and_sort,
         message_counter=getattr(args, "message_counter", False),
     )
     header = format_header(args.format)

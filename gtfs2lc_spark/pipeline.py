@@ -41,9 +41,20 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from . import FEED_TIMEZONE_DEFAULT
 from .materialize import materialize
 
 DEFAULT_SALT_N = 64
+
+
+def _shuffle_partitions(df: DataFrame) -> int:
+    """Partition count for the explicit (AQE-exempt) exchanges: the
+    session's shuffle partitions, never fewer than one per core."""
+    spark = df.sparkSession
+    return max(
+        spark.sparkContext.defaultParallelism,
+        int(spark.conf.get("spark.sql.shuffle.partitions", "32")),
+    )
 
 
 def _nullif_empty(c: Column) -> Column:
@@ -198,12 +209,7 @@ def stop_times_to_rules(
     # derivation serially (profiled: a 7 s single-task stage at 1440
     # feeds, the dominant serial term in the 2->8 scaling pair). Same
     # trap as the J6/J7 exchanges below, same fix.
-    spark = stop_times.sparkSession
-    n_parts = max(
-        spark.sparkContext.defaultParallelism,
-        int(spark.conf.get("spark.sql.shuffle.partitions", "32")),
-    )
-    st = st.repartition(n_parts, "feed_id", "trip_id")
+    st = st.repartition(_shuffle_partitions(stop_times), "feed_id", "trip_id")
     w = Window.partitionBy("feed_id", "trip_id").orderBy("stop_sequence_int")
 
     paired = (
@@ -338,8 +344,7 @@ def dfm_seconds(c: Column) -> Column:
 def rules_to_connections(
     rules: DataFrame,
     services: DataFrame,
-    feed_tz: str = "Europe/Brussels",
-    dedupe: bool = True,
+    feed_tz: str = FEED_TIMEZONE_DEFAULT,
     salt_n: int | None = DEFAULT_SALT_N,
 ) -> DataFrame:
     """rule × service-day -> connections with absolute timestamps.
@@ -350,10 +355,10 @@ def rules_to_connections(
     system-local Date (lib/ConnectionsBuilder.js:28-36,72-77; SURVEY
     §1.5). Never wall-clock interval addition.
 
-    ``dedupe`` reproduces the history-store side effect that even a
-    fresh run emits each (uniqueId, serviceDate) once, first rule in
-    (trip_id, stop_sequence) order winning (st2c.js:134-181; SURVEY §7.4
-    risk 6).
+    J7 always runs: it reproduces the history-store side effect that
+    even a fresh run emits each (uniqueId, serviceDate) once, first rule
+    in (trip_id, stop_sequence) order winning (st2c.js:134-181; SURVEY
+    §7.4 risk 6).
 
     ``salt_n`` adds a deterministic salt and repartitions RULES (with an
     explicit partition count) right before the explode. Placement is
@@ -380,109 +385,104 @@ def rules_to_connections(
         )
         .drop("service_id_key")
     )
-    spark = rules.sparkSession
-    n_parts = max(
-        spark.sparkContext.defaultParallelism,
-        int(spark.conf.get("spark.sql.shuffle.partitions", "32")),
-    )
+    n_parts = _shuffle_partitions(rules)
     empty = F.array().cast("array<string>")
-    if dedupe:
-        # J7 fresh-run semantics (st2c.js:134-181): a later rule with the
-        # same uniqueId emits only service dates not already emitted by
-        # earlier rules ("earlier" = (trip_id, stop_sequence) order, the
-        # cleaner's stream order). Done at RULE level, before the ~180x
-        # explode, so the dedupe machinery moves rules, not connections.
-        #
-        # Shape (rewritten r4 — see NOTES_r4): duplicated uniqueIds are
-        # RARE in real GTFS (2-3 joined/split rules at most), so the
-        # plan routes on a skinny duplicate-key set instead of running
-        # per-row window machinery over everything:
-        #
-        #   1. dup_keys = a SKINNY (2-column) count aggregation over the
-        #      rules, kept > 1 — normally zero-to-a-handful of rows;
-        #      the full-width rule rows never shuffle for it;
-        #   2. clean rows bypass dedupe entirely via a BROADCAST
-        #      left_anti probe — no exchange, no sort, and with an
-        #      empty dup set the probe is a free codegen'd filter
-        #      (measured: within ~2% of no-guard at the 720-feed
-        #      headline config, vs ~19% for a count-window branch pair
-        #      and ~16% for co-partitioned shuffle-hash probes);
-        #   3. only dup-group rows (left_semi) run the exact dedupe: an
-        #      F.aggregate fold over the group's rules in (trip_id,
-        #      stop_sequence) order with an array_union seen-set
-        #      accumulator + array_except emission — LINEAR in group
-        #      size x dates (the seen-set is bounded by the group's
-        #      distinct dates), unlike the O(g^2)-cell prefix-union
-        #      window it replaces (hostile-corpus guard, VERDICT r3 #5;
-        #      1,000-duplicate-rule pytest drives this path).
-        #
-        # Worst-case bounds, both LOUD failures not silent corruption:
-        # a corpus with ~10^8+ DISTINCT duplicated uniqueIds exceeds
-        # the broadcast limit; a single uniqueId duplicated ~10^5+
-        # times exceeds the fold's agg buffer.
-        # probe on an 8-byte hash of (feed_id, unique_id): a collision
-        # merely routes a clean group through the exact fold — zero
-        # correctness dependence on collision-freedom — and the agg
-        # shuffle moves longs, not uniqueId strings
-        kh = F.xxhash64("feed_id", "unique_id").alias("_kh")
-        dup_keys = (
-            rules.select(kh)
-            .groupBy("_kh")
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .where(F.col("_n") > 1)
-            .select("_kh")
-        )
-        dk = F.broadcast(dup_keys)
-        keyed = with_dates.select("*", kh)
-        clean = keyed.join(dk, ["_kh"], "left_anti").drop("_kh")
-        dirty = keyed.join(dk, ["_kh"], "left_semi").drop("_kh")
+    # J7 fresh-run semantics (st2c.js:134-181): a later rule with the
+    # same uniqueId emits only service dates not already emitted by
+    # earlier rules ("earlier" = (trip_id, stop_sequence) order, the
+    # cleaner's stream order). Done at RULE level, before the ~180x
+    # explode, so the dedupe machinery moves rules, not connections.
+    #
+    # Shape (rewritten r4 — see NOTES_r4): duplicated uniqueIds are
+    # RARE in real GTFS (2-3 joined/split rules at most), so the
+    # plan routes on a skinny duplicate-key set instead of running
+    # per-row window machinery over everything:
+    #
+    #   1. dup_keys = a SKINNY (2-column) count aggregation over the
+    #      rules, kept > 1 — normally zero-to-a-handful of rows;
+    #      the full-width rule rows never shuffle for it;
+    #   2. clean rows bypass dedupe entirely via a BROADCAST
+    #      left_anti probe — no exchange, no sort, and with an
+    #      empty dup set the probe is a free codegen'd filter
+    #      (measured: within ~2% of no-guard at the 720-feed
+    #      headline config, vs ~19% for a count-window branch pair
+    #      and ~16% for co-partitioned shuffle-hash probes);
+    #   3. only dup-group rows (left_semi) run the exact dedupe: an
+    #      F.aggregate fold over the group's rules in (trip_id,
+    #      stop_sequence) order with an array_union seen-set
+    #      accumulator + array_except emission — LINEAR in group
+    #      size x dates (the seen-set is bounded by the group's
+    #      distinct dates), unlike the O(g^2)-cell prefix-union
+    #      window it replaces (hostile-corpus guard, VERDICT r3 #5;
+    #      1,000-duplicate-rule pytest drives this path).
+    #
+    # Worst-case bounds, both LOUD failures not silent corruption:
+    # a corpus with ~10^8+ DISTINCT duplicated uniqueIds exceeds
+    # the broadcast limit; a single uniqueId duplicated ~10^5+
+    # times exceeds the fold's agg buffer.
+    # probe on an 8-byte hash of (feed_id, unique_id): a collision
+    # merely routes a clean group through the exact fold — zero
+    # correctness dependence on collision-freedom — and the agg
+    # shuffle moves longs, not uniqueId strings
+    kh = F.xxhash64("feed_id", "unique_id").alias("_kh")
+    dup_keys = (
+        rules.select(kh)
+        .groupBy("_kh")
+        .agg(F.count(F.lit(1)).alias("_n"))
+        .where(F.col("_n") > 1)
+        .select("_kh")
+    )
+    dk = F.broadcast(dup_keys)
+    keyed = with_dates.select("*", kh)
+    clean = keyed.join(dk, ["_kh"], "left_anti").drop("_kh")
+    dirty = keyed.join(dk, ["_kh"], "left_semi").drop("_kh")
 
-        data_cols = [c for c in with_dates.columns if c != "dates"]
-        row_struct = F.struct(
-            F.col("trip_id").alias("trip_id"),
-            F.col("stop_sequence_int").alias("stop_sequence_int"),
-            F.struct(*[F.col(c).alias(c) for c in data_cols]).alias("r"),
-            F.coalesce("dates", empty).alias("dates"),
-        )
-        # array_sort on structs = (trip_id, stop_sequence_int, ...) asc
-        # with a deterministic whole-row tiebreak — the cleaner's stream
-        # order (bin/gtfs2lc-clean.js:34-38)
-        rows_sorted = F.array_sort(F.collect_list(row_struct))
-        row_ddl = with_dates.drop("dates").schema.simpleString()[len("struct<"):-1]
-        out_ddl = f"struct<r:struct<{row_ddl}>,dates:array<string>>"
-        acc_ddl = f"struct<seen:array<string>,out:array<{out_ddl}>>"
+    data_cols = [c for c in with_dates.columns if c != "dates"]
+    row_struct = F.struct(
+        F.col("trip_id").alias("trip_id"),
+        F.col("stop_sequence_int").alias("stop_sequence_int"),
+        F.struct(*[F.col(c).alias(c) for c in data_cols]).alias("r"),
+        F.coalesce("dates", empty).alias("dates"),
+    )
+    # array_sort on structs = (trip_id, stop_sequence_int, ...) asc
+    # with a deterministic whole-row tiebreak — the cleaner's stream
+    # order (bin/gtfs2lc-clean.js:34-38)
+    rows_sorted = F.array_sort(F.collect_list(row_struct))
+    row_ddl = with_dates.drop("dates").schema.simpleString()[len("struct<"):-1]
+    out_ddl = f"struct<r:struct<{row_ddl}>,dates:array<string>>"
+    acc_ddl = f"struct<seen:array<string>,out:array<{out_ddl}>>"
 
-        def step(acc, x):
-            return F.struct(
-                F.array_union(acc["seen"], x["dates"]).alias("seen"),
-                F.concat(
-                    acc["out"],
-                    F.array(
-                        F.struct(
-                            x["r"].alias("r"),
-                            F.array_except(x["dates"], acc["seen"]).alias("dates"),
-                        )
-                    ),
-                ).alias("out"),
-            )
+    def step(acc, x):
+        return F.struct(
+            F.array_union(acc["seen"], x["dates"]).alias("seen"),
+            F.concat(
+                acc["out"],
+                F.array(
+                    F.struct(
+                        x["r"].alias("r"),
+                        F.array_except(x["dates"], acc["seen"]).alias("dates"),
+                    )
+                ),
+            ).alias("out"),
+        )
 
-        init = F.struct(
-            empty.alias("seen"), F.array().cast(f"array<{out_ddl}>").alias("out")
+    init = F.struct(
+        empty.alias("seen"), F.array().cast(f"array<{out_ddl}>").alias("out")
+    )
+    dirty_deduped = (
+        dirty.groupBy("feed_id", "unique_id")
+        .agg(
+            F.aggregate(
+                rows_sorted, init.cast(acc_ddl), step, lambda a: a["out"]
+            ).alias("_o")
         )
-        dirty_deduped = (
-            dirty.groupBy("feed_id", "unique_id")
-            .agg(
-                F.aggregate(
-                    rows_sorted, init.cast(acc_ddl), step, lambda a: a["out"]
-                ).alias("_o")
-            )
-            .select(F.explode("_o").alias("_x"))
-            .select(
-                *[F.col(f"_x.r.{c}").alias(c) for c in data_cols],
-                F.col("_x.dates").alias("dates"),
-            )
+        .select(F.explode("_o").alias("_x"))
+        .select(
+            *[F.col(f"_x.r.{c}").alias(c) for c in data_cols],
+            F.col("_x.dates").alias("dates"),
         )
-        with_dates = clean.unionByName(dirty_deduped.select(*with_dates.columns))
+    )
+    with_dates = clean.unionByName(dirty_deduped.select(*with_dates.columns))
 
     # r6 (guide §2.3 — do per-row work BEFORE the fan-out): the
     # duration strings are RULE-level values, constant across a rule's
@@ -612,8 +612,7 @@ def convert(
     stops: DataFrame,
     calendar: DataFrame,
     calendar_dates: DataFrame,
-    feed_tz: str = "Europe/Brussels",
-    dedupe: bool = True,
+    feed_tz: str = FEED_TIMEZONE_DEFAULT,
     salt_n: int | None = DEFAULT_SALT_N,
 ) -> DataFrame:
     """Full entity-tables -> connections pipeline (reference §3.1 steps
@@ -629,4 +628,4 @@ def convert(
     rules."""
     services = materialize(expand_services(calendar, calendar_dates), "services")
     rules = materialize(stop_times_to_rules(stop_times, trips, routes, stops), "rules")
-    return rules_to_connections(rules, services, feed_tz, dedupe, salt_n)
+    return rules_to_connections(rules, services, feed_tz, salt_n)

@@ -75,7 +75,7 @@ def build_session(
         # 8.1 s default on the 60k-rule skew join) — input-byte
         # detection cannot price a 180x output fan-out, and sub-MB
         # advisory sizes fragment every other exchange. Defaults kept;
-        # explicit salting (skew.salted_join / pipeline salt_n) remains
+        # explicit salting (pipeline salt_n) remains
         # the fix for that shape, as PLANS.md documents.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")

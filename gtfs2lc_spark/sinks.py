@@ -11,7 +11,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from . import BOARDING_TYPES, GTFS, LC, RDF_TYPE, XSD
-from .uris import ConnectionColumns, URIStrategy
+from .uris import ARR_STOP_PREFIX, ARRIVAL_TS, DEP_STOP_PREFIX, DEPARTURE_TS, URIStrategy
 
 ISO_FMT = "yyyy-MM-dd'T'HH:mm:ss.SSS'Z'"
 
@@ -82,23 +82,22 @@ def connections_to_jsonld(
     to SQL engines); ``jsonld_lines`` re-keys them to the exact JSON-LD
     keys when serializing.
     """
-    uris = uris or URIStrategy(cc=ConnectionColumns())
-    cc = uris.cc
+    uris = uris or URIStrategy()
     return conns.select(
         "feed_id",
         uris.connection_id().alias("id"),
         F.lit("Connection").alias("type"),
-        uris.stop_id(cc.dep_stop_prefix).alias("departureStop"),
-        uris.stop_id(cc.arr_stop_prefix).alias("arrivalStop"),
-        iso(F.col(cc.departure_ts)).alias("departureTime"),
-        iso(F.col(cc.arrival_ts)).alias("arrivalTime"),
+        uris.stop_id(DEP_STOP_PREFIX).alias("departureStop"),
+        uris.stop_id(ARR_STOP_PREFIX).alias("arrivalStop"),
+        iso(F.col(DEPARTURE_TS)).alias("departureTime"),
+        iso(F.col(ARRIVAL_TS)).alias("arrivalTime"),
         uris.trip_id().alias("gtfs_trip"),
         uris.route_id().alias("gtfs_route"),
         F.col("headsign").alias("direction"),
         _boarding(F.col("pickup_type"), short=True).alias("gtfs_pickupType"),
         _boarding(F.col("drop_off_type"), short=True).alias("gtfs_dropOffType"),
-        F.col(cc.departure_ts).alias("departure_ts"),
-        F.col(cc.arrival_ts).alias("arrival_ts"),
+        F.col(DEPARTURE_TS).alias("departure_ts"),
+        F.col(ARRIVAL_TS).alias("arrival_ts"),
     )
 
 
@@ -227,8 +226,7 @@ def turtle_message_lines(conns: DataFrame, uris: URIStrategy | None = None) -> D
     Pure column expressions: the serialization is a narrow map-side op.
     The worker-0 header (version + prefixes) is ``turtle_header()``,
     written once by the caller (O5 semantics)."""
-    uris = uris or URIStrategy(cc=ConnectionColumns())
-    cc = uris.cc
+    uris = uris or URIStrategy()
     iri = lambda c: F.concat(F.lit("<"), c, F.lit(">"))  # noqa: E731
 
     def lit_dt(c: Column, dt: str) -> Column:
@@ -239,10 +237,10 @@ def turtle_message_lines(conns: DataFrame, uris: URIStrategy | None = None) -> D
     )
     parts = [
         F.concat(iri(uris.connection_id()), F.lit(" a lc:Connection")),
-        F.concat(F.lit("lc:departureStop "), iri(uris.stop_id(cc.dep_stop_prefix))),
-        F.concat(F.lit("lc:arrivalStop "), iri(uris.stop_id(cc.arr_stop_prefix))),
-        F.concat(F.lit("lc:departureTime "), lit_dt(iso(F.col(cc.departure_ts)), "xsd:dateTime")),
-        F.concat(F.lit("lc:arrivalTime "), lit_dt(iso(F.col(cc.arrival_ts)), "xsd:dateTime")),
+        F.concat(F.lit("lc:departureStop "), iri(uris.stop_id(DEP_STOP_PREFIX))),
+        F.concat(F.lit("lc:arrivalStop "), iri(uris.stop_id(ARR_STOP_PREFIX))),
+        F.concat(F.lit("lc:departureTime "), lit_dt(iso(F.col(DEPARTURE_TS)), "xsd:dateTime")),
+        F.concat(F.lit("lc:arrivalTime "), lit_dt(iso(F.col(ARRIVAL_TS)), "xsd:dateTime")),
         F.concat(F.lit("gtfs:trip "), iri(uris.trip_id())),
         F.concat(F.lit("gtfs:route "), iri(uris.route_id())),
         # conditional parts: concat_ws skips nulls
@@ -485,7 +483,7 @@ def triples_with_message_counter(
     ordinal-for-ordinal parity with the reference's worker-stream
     merge order (which depends on its thread scheduling and shard
     round-robin; URI order is reproducible, stream order is not)."""
-    uris = uris or URIStrategy(cc=ConnectionColumns())
+    uris = uris or URIStrategy()
     from .materialize import materialize
 
     # materialize once: dense_index runs 3 separate jobs (sample,
@@ -539,8 +537,7 @@ def connections_to_triples(
     copy; A/B-measured ~5% at the 21.6M-quad headline, 4.30 s vs 4.51 s
     best interleaved.)
     """
-    uris = uris or URIStrategy(cc=ConnectionColumns())
-    cc = uris.cc
+    uris = uris or URIStrategy()
     subj = uris.connection_id()
 
     def t(pred: str, obj: Column, kind: str, dt: str | None = None) -> Column:
@@ -559,10 +556,10 @@ def connections_to_triples(
 
     quads = F.array(
         t(RDF_TYPE, F.lit(f"{LC}Connection"), "iri"),
-        t(f"{LC}departureStop", uris.stop_id(cc.dep_stop_prefix), "iri"),
-        t(f"{LC}arrivalStop", uris.stop_id(cc.arr_stop_prefix), "iri"),
-        t(f"{LC}departureTime", iso(F.col(cc.departure_ts)), "literal", f"{XSD}dateTime"),
-        t(f"{LC}arrivalTime", iso(F.col(cc.arrival_ts)), "literal", f"{XSD}dateTime"),
+        t(f"{LC}departureStop", uris.stop_id(DEP_STOP_PREFIX), "iri"),
+        t(f"{LC}arrivalStop", uris.stop_id(ARR_STOP_PREFIX), "iri"),
+        t(f"{LC}departureTime", iso(F.col(DEPARTURE_TS)), "literal", f"{XSD}dateTime"),
+        t(f"{LC}arrivalTime", iso(F.col(ARRIVAL_TS)), "literal", f"{XSD}dateTime"),
         t(f"{GTFS}trip", uris.trip_id(), "iri"),
         t(f"{GTFS}route", uris.route_id(), "iri"),
         t(f"{GTFS}headsign", headsign, "literal", f"{XSD}string"),

@@ -1,13 +1,12 @@
-"""Explicit skew handling: salted two-phase aggregation and salted
-broadcast-replicated joins.
+"""Explicit skew handling: salted two-phase aggregation and a key-skew
+profiler.
 
 The pipeline already salts its one known hot spot (the J6 service-day
 explode repartitions on a salted key, pipeline.py); these helpers make
-the same technique available as reusable operators for ad-hoc corpus
-work where AQE's runtime skew splitting doesn't apply (aggregations —
-AQE skew handling only splits JOIN partitions) or where the skew is
-known ahead of time and one wants the plan pinned rather than
-runtime-dependent.
+the same technique available for ad-hoc corpus work where AQE's
+runtime skew splitting doesn't apply (aggregations — AQE skew handling
+only splits JOIN partitions) or where the skew is known ahead of time
+and one wants the plan pinned rather than runtime-dependent.
 
 gtfs2lc parity note: the reference is single-process and never
 partitions (SURVEY.md §4); skew is purely a distributed-engine concern
@@ -16,7 +15,7 @@ introduced by this port's target scale.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -68,74 +67,14 @@ def salted_agg(
     )
 
 
-def salted_join(
-    big: DataFrame,
-    small: DataFrame,
-    on: str,
-    n_salts: int = 16,
-    how: str = "inner",
-    n_parts: int | None = None,
-) -> DataFrame:
-    """Skew-safe equi-join: the BIG side gets a random salt in
-    [0, n_salts), the SMALL side is replicated once per salt value, and
-    the join key becomes (key, salt) — a hot key's rows land on
-    ``n_salts`` different reducers instead of one straggler task.
-
-    Use when the small side is too big to broadcast outright but a
-    known zipf key would straggle a SortMergeJoin; replication costs
-    ``n_salts x |small|``, so pick the smallest salt count that breaks
-    the straggler. (If the small side FITS in memory, broadcast it —
-    that is strictly better and the default everywhere else in this
-    repo.)
-    """
-    if how not in ("inner", "left", "left_outer", "leftouter", "left_semi",
-                   "leftsemi", "left_anti", "leftanti"):
-        raise ValueError(
-            f"salted_join supports inner/left-side joins only, got '{how}': "
-            "the replicated small side would emit its unmatched rows once "
-            "per salt under right/full semantics"
-        )
-    if n_parts is None:
-        spark = big.sparkSession
-        n_parts = max(
-            spark.sparkContext.defaultParallelism,
-            int(spark.conf.get("spark.sql.shuffle.partitions", "32")),
-        )
-    # the EXPLICIT numPartitions repartition on (key, salt) is
-    # load-bearing, same reason as pipeline.rules_to_connections: the
-    # pre-join bytes of a skewed-but-small fact side are tiny, so AQE
-    # would coalesce the (key, salt) exchange back down to a handful of
-    # partitions and re-serialize the hot key's fan-out onto one task —
-    # measured 6.3 s coalesced vs 0.98 s explicit on the 60k-rule x 180-
-    # date skew bench. REPARTITION_BY_NUM is AQE-coalesce-exempt, and
-    # HashPartitioning(key, salt) satisfies the join's distribution so
-    # the SMJ adds NO further exchange on either side.
-    salted_big = big.withColumn(
-        "_salt",
-        F.pmod(F.xxhash64(F.col(on), F.monotonically_increasing_id()),
-               F.lit(int(n_salts))).cast("int"),
-    ).repartition(int(n_parts), F.col(on), F.col("_salt"))
-    replicated = small.withColumn(
-        "_salt", F.explode(F.array(*[F.lit(i) for i in range(int(n_salts))]))
-    ).repartition(int(n_parts), F.col(on), F.col("_salt"))
-    # pin a sort-merge join: the replicated side is n_salts x |small| by
-    # construction — if it fit in broadcast memory the caller should
-    # broadcast the ORIGINAL small side and skip salting entirely, and
-    # letting AQE pick a broadcast of the blown-up side is exactly the
-    # 8-GiB-broadcast failure this operator exists to avoid. SMJ on
-    # (key, salt) is the classic salted shape: no single reducer owns a
-    # hot key, and neither side needs to fit in task memory.
-    return salted_big.join(replicated.hint("merge"), [on, "_salt"], how).drop("_salt")
-
-
 def key_profile(
     df: DataFrame,
     key_col: str,
     top_n: int = 10,
 ) -> DataFrame:
     """Join/agg-key distribution profiler — the measurement that decides
-    whether a key needs :func:`salted_agg`/:func:`salted_join` BEFORE
-    the straggler burns an hour at 100 TB. One map-side-combinable
+    whether a key needs :func:`salted_agg` BEFORE the straggler burns
+    an hour at 100 TB. One map-side-combinable
     count per key (the shuffle carries one row per DISTINCT key), a
     1-row broadcast total, and a TOP-N pick that compiles to
     TakeOrderedAndProject (per-partition heaps, no global sort

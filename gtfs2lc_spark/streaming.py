@@ -46,11 +46,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from . import pipeline, sinks
+from . import FEED_TIMEZONE_DEFAULT, pipeline, sinks
 from .checkpoint import HistoryStore
 from .extraction import detect_pages, entities_from_detected
 from .materialize import materialize, sweep_staging
 from .schemas import PAGES_SCHEMA
+from .uris import URIStrategy
 
 
 def read_pages_stream(spark: SparkSession, pages_dir: str) -> DataFrame:
@@ -68,7 +69,7 @@ def process_pages_batch(
     store: HistoryStore,
     staging_dir: str,
     output_dir: str,
-    feed_tz: str = "Europe/Brussels",
+    feed_tz: str = FEED_TIMEZONE_DEFAULT,
     salt_n: int | None = 16,
 ) -> None:
     """One idempotent micro-batch step (see module docstring). Public so
@@ -142,9 +143,10 @@ def process_pages_batch(
     delta = store.differential(conns, before_snapshot=batch_id)
     # persist: consumed twice (output + history commit)
     delta = materialize(delta, "stream-delta")
-    sinks.jsonld_lines(sinks.connections_to_jsonld(delta)).write.mode(
-        "overwrite"
-    ).text(f"{output_dir}/batch={batch_id}")
+    jsonld = sinks.connections_to_jsonld(delta, URIStrategy(feed_tz=feed_tz))
+    sinks.jsonld_lines(jsonld).write.mode("overwrite").text(
+        f"{output_dir}/batch={batch_id}"
+    )
     store.commit(
         delta, run_info={"stream_batch_id": batch_id}, snapshot_id=batch_id
     )
@@ -155,151 +157,6 @@ def process_pages_batch(
     sweep_staging(spark)
 
 
-def departure_volume_stream(
-    spark: SparkSession,
-    connections_dir: str,
-    watermark: str = "1 hour",
-    window: str = "15 minutes",
-) -> DataFrame:
-    """Event-time windowed aggregation over a stream of connections:
-    departures per ``window`` of event time (departure_ts), with a
-    ``watermark`` bounding how late a connection may arrive and still
-    count. The standard Structured Streaming shape — withWatermark +
-    window() groupBy — so state is bounded and, in append mode, a
-    window emits exactly once when the watermark passes it (late rows
-    inside the watermark are still aggregated; older ones are dropped).
-
-    Input: a directory of connection parquet (e.g. the pipeline's
-    triples-parquet staging or any sink that keeps departure_ts).
-    Returns the unstarted streaming DataFrame; callers pick the sink.
-    """
-    schema = (
-        "feed_id string, trip_id string, departure_ts timestamp, "
-        "arrival_ts timestamp, dep_stop_id string, arr_stop_id string"
-    )
-    s = spark.readStream.schema(schema).option("maxFilesPerTrigger", "8").parquet(
-        connections_dir
-    )
-    return (
-        s.withWatermark("departure_ts", watermark)
-        .groupBy(F.window("departure_ts", window).alias("w"))
-        .agg(
-            F.count(F.lit(1)).alias("n_departures"),
-            F.approx_count_distinct("trip_id").alias("n_trips_approx"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            "n_departures",
-            "n_trips_approx",
-        )
-    )
-
-
-def trip_session_stream(
-    spark: SparkSession,
-    connections_dir: str,
-) -> DataFrame:
-    """Custom stateful streaming operator (applyInPandasWithState): a
-    running per-trip session — connection count + first departure /
-    last arrival epoch — maintained in the state store across
-    micro-batches AND query restarts. Each batch emits the updated
-    session row for every trip it touched (update semantics).
-
-    The Arrow-batched state path is the Spark-native replacement for
-    hand-rolled per-key stream state (the reference's in-process Maps,
-    e.g. tripsLastConnection in bin/linkedconnections-sort.js:138).
-    """
-    import pandas as pd  # noqa: F401 (worker-side)
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    schema = (
-        "feed_id string, trip_id string, departure_ts timestamp, "
-        "arrival_ts timestamp, dep_stop_id string, arr_stop_id string"
-    )
-    s = spark.readStream.schema(schema).option("maxFilesPerTrigger", "8").parquet(
-        connections_dir
-    )
-
-    out_schema = (
-        "feed_id string, trip_id string, n_connections long, "
-        "first_departure_epoch long, last_arrival_epoch long"
-    )
-    state_schema = "n long, first_dep long, last_arr long"
-
-    def update(key, pdfs, state: GroupState):
-        import pandas as pd
-
-        n, first_dep, last_arr = state.get if state.exists else (0, None, None)
-        for pdf in pdfs:
-            n += len(pdf)
-            dep = (pdf["departure_ts"].astype("int64") // 10**9).min()
-            arr = (pdf["arrival_ts"].astype("int64") // 10**9).max()
-            first_dep = int(dep) if first_dep is None else min(first_dep, int(dep))
-            last_arr = int(arr) if last_arr is None else max(last_arr, int(arr))
-        state.update((n, first_dep, last_arr))
-        yield pd.DataFrame(
-            [
-                {
-                    "feed_id": key[0],
-                    "trip_id": key[1],
-                    "n_connections": n,
-                    "first_departure_epoch": first_dep,
-                    "last_arrival_epoch": last_arr,
-                }
-            ]
-        )
-
-    return s.groupBy("feed_id", "trip_id").applyInPandasWithState(
-        update, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
-    )
-
-
-def user_session_stream(
-    spark: SparkSession,
-    events_dir: str,
-    gap: str = "30 minutes",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Streaming gap sessionization — the Structured Streaming twin of
-    datapipe.events.sessionize, using the NATIVE ``session_window``
-    dynamic-gap state operator: a user's session grows while events
-    keep arriving within ``gap``; when the watermark passes the
-    session's close it emits exactly once (append mode).
-
-    Built-in session windows keep the merge logic (overlapping
-    sessions coalescing as late events arrive) in the JVM state store
-    — no Python state path, bounded by the watermark.  The batch
-    operator remains the replay/backfill tool; this is the live view.
-    """
-    schema = (
-        "event_id bigint, ts timestamp, user_id bigint, "
-        "event_type string, value double, props string"
-    )
-    s = spark.readStream.schema(schema).option("maxFilesPerTrigger", "8").parquet(
-        events_dir
-    )
-    return (
-        s.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap).alias("w"), F.col("user_id"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.min("ts").alias("session_start"),
-            F.max("ts").alias("session_end"),
-            F.sum("value").alias("total_value"),
-        )
-        .select(
-            "user_id",
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            "n_events",
-            "session_start",
-            "session_end",
-            "total_value",
-        )
-    )
-
-
 def start_incremental_conversion(
     spark: SparkSession,
     pages_dir: str,
@@ -307,7 +164,7 @@ def start_incremental_conversion(
     history_dir: str,
     stream_checkpoint_dir: str,
     staging_dir: str | None = None,
-    feed_tz: str = "Europe/Brussels",
+    feed_tz: str = FEED_TIMEZONE_DEFAULT,
     salt_n: int | None = 16,
     available_now: bool = True,
 ) -> StreamingQuery:
@@ -406,97 +263,3 @@ def start_corpus_dedup_stream(
     if available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()
-
-
-def click_attribution_stream(
-    spark: SparkSession,
-    events_dir: str,
-    max_delay: str = "30 minutes",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """STREAM-STREAM event-time interval join — the remaining
-    Structured Streaming join surface: each click paired with every
-    view by the same user in the preceding ``max_delay`` (ad/referrer
-    attribution shape). Both sides carry a watermark and the join
-    condition carries the event-time interval, so Spark can size the
-    join state exactly: a buffered view is dropped once the click-side
-    watermark passes ``view_ts + max_delay``, and state never grows
-    with the corpus — the property that keeps this runnable on an
-    unbounded stream.
-
-    Both sides derive from ONE file stream filtered by event_type (the
-    planner still executes a genuine stream-stream join; two separate
-    sources would work identically). Inner join: a click with no view
-    inside the window emits nothing — the batch twin for last-touch
-    picking (and the oracle-checked semantics) is datapipe's asof_join.
-    Returns the unstarted streaming DataFrame (append mode).
-    """
-    schema = (
-        "event_id bigint, ts timestamp, user_id bigint, "
-        "event_type string, value double, props string"
-    )
-    s = spark.readStream.schema(schema).option("maxFilesPerTrigger", "8").parquet(
-        events_dir
-    )
-    views = (
-        s.where(F.col("event_type") == "view")
-        .select(
-            F.col("user_id").alias("v_user"),
-            F.col("event_id").alias("view_id"),
-            F.col("ts").alias("view_ts"),
-        )
-        .withWatermark("view_ts", watermark)
-    )
-    clicks = (
-        s.where(F.col("event_type") == "click")
-        .select(
-            F.col("user_id").alias("c_user"),
-            F.col("event_id").alias("click_id"),
-            F.col("ts").alias("click_ts"),
-            F.col("value").alias("click_value"),
-        )
-        .withWatermark("click_ts", watermark)
-    )
-    joined = clicks.join(
-        views,
-        F.expr(
-            f"""
-            c_user = v_user
-            AND view_ts <= click_ts
-            AND view_ts >= click_ts - interval {max_delay}
-            """
-        ),
-    )
-    return joined.select(
-        F.col("c_user").alias("user_id"),
-        "click_id",
-        "click_ts",
-        "click_value",
-        "view_id",
-        "view_ts",
-    )
-
-
-def dedup_events_stream(
-    spark: SparkSession,
-    events_dir: str,
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Native streaming dedup: ``dropDuplicatesWithinWatermark`` on the
-    event id — the JVM state-store twin of the corpus dedup stream for
-    the at-least-once-delivery case (a re-delivered event inside the
-    watermark horizon is dropped by keyed state; state for ids older
-    than the watermark is evicted, so memory is bounded by the horizon
-    x arrival rate, not the stream's lifetime). Use the history-store
-    stream for exactly-once dedup across arbitrary time; use this for
-    cheap in-flight duplicate suppression."""
-    schema = (
-        "event_id bigint, ts timestamp, user_id bigint, "
-        "event_type string, value double, props string"
-    )
-    s = spark.readStream.schema(schema).option("maxFilesPerTrigger", "8").parquet(
-        events_dir
-    )
-    return s.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
-        ["event_id"]
-    )

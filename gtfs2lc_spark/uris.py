@@ -23,10 +23,21 @@ attrs -> ``route_<attr>``, departure/arrival stop attrs ->
 from __future__ import annotations
 
 import re
-from dataclasses import dataclass, field
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+from . import FEED_TIMEZONE_DEFAULT
+
+# the column layout contract above; a standalone stop template
+# ({stops.*}) resolves against the departure stop
+TRIP_PREFIX = "trip_"
+ROUTE_PREFIX = "route_"
+DEP_STOP_PREFIX = "dep_"
+ARR_STOP_PREFIX = "arr_"
+DEPARTURE_TS = "departure_ts"
+ARRIVAL_TS = "arrival_ts"
+TRIP_START_TS = "trip_start_ts"
 
 # multi-feed namespacing of the defaults: one corpus, many feeds ->
 # URIs must not collide across feeds ({feed} = lineage feed_id)
@@ -80,37 +91,12 @@ def percent_encode(col: Column) -> Column:
     return enc
 
 
-@dataclass
-class ConnectionColumns:
-    """Maps reference object paths onto DataFrame column names."""
-
-    trip_prefix: str = "trip_"
-    route_prefix: str = "route_"
-    dep_stop_prefix: str = "dep_"
-    arr_stop_prefix: str = "arr_"
-    departure_ts: str = "departure_ts"
-    arrival_ts: str = "arrival_ts"
-    trip_start_ts: str = "trip_start_ts"
-    feed_tz: str = "Europe/Brussels"
-    # for the standalone stop template, which prefix is "the" stop
-    stop_prefix: str = "dep_"
-    extra: dict = field(default_factory=dict)
-
-    def trip_attr(self, attr: str) -> Column:
-        return F.col(self.trip_prefix + attr)
-
-    def route_attr(self, attr: str) -> Column:
-        return F.col(self.route_prefix + attr)
-
-    def stop_attr(self, attr: str, prefix: str | None = None) -> Column:
-        return F.col((prefix or self.stop_prefix) + attr)
-
-    def local_fmt(self, ts_col: str, pattern: str) -> Column:
-        """date-fns format() renders in the process-local timezone —
-        i.e. the feed timezone (SURVEY.md §1.5)."""
-        if not _SAFE_DATE_TOKENS.match(pattern):
-            raise TemplateError(f"Unsupported date pattern: {pattern}")
-        return F.date_format(F.from_utc_timestamp(F.col(ts_col), self.feed_tz), pattern)
+def _local_fmt(ts_col: str, pattern: str, feed_tz: str) -> Column:
+    """date-fns format() renders in the process-local timezone —
+    i.e. the feed timezone (SURVEY.md §1.5)."""
+    if not _SAFE_DATE_TOKENS.match(pattern):
+        raise TemplateError(f"Unsupported date pattern: {pattern}")
+    return F.date_format(F.from_utc_timestamp(F.col(ts_col), feed_tz), pattern)
 
 
 _PATH_RE = re.compile(r"^(connection|trips|routes|stops)((?:\.[A-Za-z_$][\w$]*)+)$")
@@ -122,76 +108,79 @@ _SUBSTR_RE = re.compile(
 )
 
 
-def _resolve_path(path: str, cc: ConnectionColumns, stop_prefix: str | None) -> Column:
+# date-valued paths -> timestamp columns, for format() and the inline
+# {trips.startTime(pattern)} form
+_TS_PATH_COLUMNS = {
+    "connection.departureTime": DEPARTURE_TS,
+    "connection.arrivalTime": ARRIVAL_TS,
+    "trips.startTime": TRIP_START_TS,
+}
+
+_TS_ATTR_COLUMNS = {
+    "startTime": TRIP_START_TS,
+    "departureTime": DEPARTURE_TS,
+    "arrivalTime": ARRIVAL_TS,
+}
+
+
+def _resolve_path(path: str, stop_prefix: str | None) -> Column:
     """Property-path resolution (lib/URIStrategy.js:158-167), as a Column."""
     m = _PATH_RE.match(path)
     if not m:
         raise TemplateError(f"Unsupported base URI resolver expression: {path}")
     root, rest = m.group(1), m.group(2).lstrip(".").split(".")
     if root == "trips":
-        return cc.trip_attr(rest[0])
+        return F.col(TRIP_PREFIX + rest[0])
     if root == "routes":
-        return cc.route_attr(rest[0])
+        return F.col(ROUTE_PREFIX + rest[0])
     if root == "stops":
-        return cc.stop_attr(rest[0], stop_prefix)
+        return F.col((stop_prefix or DEP_STOP_PREFIX) + rest[0])
     # root == connection
     attr = rest[0]
     if attr == "departureStop":
         sub = rest[1] if len(rest) > 1 else "stop_id"
-        return cc.stop_attr(sub, cc.dep_stop_prefix)
+        return F.col(DEP_STOP_PREFIX + sub)
     if attr == "arrivalStop":
         sub = rest[1] if len(rest) > 1 else "stop_id"
-        return cc.stop_attr(sub, cc.arr_stop_prefix)
+        return F.col(ARR_STOP_PREFIX + sub)
     if attr == "departureTime":
-        return F.col(cc.departure_ts)
+        return F.col(DEPARTURE_TS)
     if attr == "arrivalTime":
-        return F.col(cc.arrival_ts)
-    if attr in cc.extra:
-        return F.col(cc.extra[attr])
+        return F.col(ARRIVAL_TS)
     return F.col(attr)
 
 
 def compile_resolver(
-    expression: str, cc: ConnectionColumns, stop_prefix: str | None = None
+    expression: str, feed_tz: str, stop_prefix: str | None = None
 ) -> Column:
     """Resolver mini-language -> Column (lib/URIStrategy.js:125-156).
 
     Supports: property path | format(path,'pattern') | path.substring(a[,b]).
     Anything else raises TemplateError, matching the reference's rejection
-    of executable expressions.
+    of executable expressions. ``format()`` renders in ``feed_tz``.
     """
     normalized = re.sub(r";$", "", expression.strip())
     m = _FORMAT_RE.match(normalized)
     if m:
         path, pattern = m.group(1), m.group(3)
-        ts = _ts_path_column(path, cc)
+        ts = _TS_PATH_COLUMNS.get(path)
         if ts is not None:
-            return cc.local_fmt(ts, pattern)
+            return _local_fmt(ts, pattern, feed_tz)
         raise TemplateError(f"format() over non-date path: {path}")
     m = _SUBSTR_RE.match(normalized)
     if m:
-        base = _resolve_path(m.group(1), cc, stop_prefix)
+        base = _resolve_path(m.group(1), stop_prefix)
         start = int(m.group(2))
         if m.group(3) is not None:
             return F.substring(base, start + 1, int(m.group(3)) - start)
         return F.substring(base, start + 1, 2**31 - 1)
     if _PATH_RE.match(normalized):
-        return _resolve_path(normalized, cc, stop_prefix)
+        return _resolve_path(normalized, stop_prefix)
     raise TemplateError(f"Unsupported base URI resolver expression: {expression}")
 
 
-def _ts_path_column(path: str, cc: ConnectionColumns) -> str | None:
-    if path in ("connection.departureTime",):
-        return cc.departure_ts
-    if path in ("connection.arrivalTime",):
-        return cc.arrival_ts
-    if path in ("trips.startTime",):
-        return cc.trip_start_ts
-    return None
-
-
 def _resolve_var(
-    name: str, cc: ConnectionColumns, resolve: dict, stop_prefix: str | None
+    name: str, feed_tz: str, resolve: dict, stop_prefix: str | None
 ) -> Column:
     """One template variable -> Column (lib/URIStrategy.js:74-123).
 
@@ -200,7 +189,7 @@ def _resolve_var(
     corpora can namespace their URIs and avoid cross-feed collisions.
     """
     if name in resolve:
-        return compile_resolver(resolve[name], cc, stop_prefix)
+        return compile_resolver(resolve[name], feed_tz, stop_prefix)
     if name == "feed":
         return F.col("feed_id")
     source, _, attr = name.partition(".")
@@ -208,17 +197,12 @@ def _resolve_var(
     m = re.match(r"^(startTime|departureTime|arrivalTime)\((.*)\)$", attr)
     if m:
         which, pattern = m.group(1), m.group(2)
-        ts = {
-            "startTime": cc.trip_start_ts,
-            "departureTime": cc.departure_ts,
-            "arrivalTime": cc.arrival_ts,
-        }[which]
         if source not in ("trips", "connection"):
             # reference resolveValue: unknown source -> null -> '' fill
             return F.lit(None).cast("string")
-        return cc.local_fmt(ts, pattern)
+        return _local_fmt(_TS_ATTR_COLUMNS[which], pattern, feed_tz)
     if _PATH_RE.match(name):
-        return _resolve_path(name, cc, stop_prefix)
+        return _resolve_path(name, stop_prefix)
     # Reference parity (resolveValue, lib/URIStrategy.js:74-123): a bare
     # template variable with no resolver entry and no recognized source
     # yields null, and uri-templates fills it as '' — so a PARTIAL
@@ -231,7 +215,7 @@ def _resolve_var(
 
 def compile_template(
     template: str,
-    cc: ConnectionColumns,
+    feed_tz: str,
     resolve: dict | None = None,
     stop_prefix: str | None = None,
 ) -> Column:
@@ -239,7 +223,7 @@ def compile_template(
 
     Literal spans stay literal; each ``{var}`` becomes a
     percent-encoded resolved Column. Null/missing values render as ''
-    (uri-templates fills undefined as empty).
+    (uri-templates fills undefined as empty). Dates render in ``feed_tz``.
     """
     resolve = resolve or {}
     parts: list[Column] = []
@@ -247,7 +231,7 @@ def compile_template(
     for m in _VAR_RE.finditer(template):
         if m.start() > pos:
             parts.append(F.lit(template[pos : m.start()]))
-        val = _resolve_var(m.group(1), cc, resolve, stop_prefix)
+        val = _resolve_var(m.group(1), feed_tz, resolve, stop_prefix)
         parts.append(percent_encode(F.coalesce(val.cast("string"), F.lit(""))))
         pos = m.end()
     if pos < len(template):
@@ -259,7 +243,7 @@ class URIStrategy:
     """Compiled URI strategy over a connections DataFrame
     (reference: lib/URIStrategy.js; defaults reproduced verbatim)."""
 
-    def __init__(self, base_uris: dict | None = None, cc: ConnectionColumns | None = None):
+    def __init__(self, base_uris: dict | None = None, feed_tz: str = FEED_TIMEZONE_DEFAULT):
         merged = dict(DEFAULT_BASE_URIS)
         if base_uris:
             for k in ("stop", "route", "trip", "connection"):
@@ -267,24 +251,24 @@ class URIStrategy:
                     merged[k] = base_uris[k]
             merged["resolve"] = base_uris.get("resolve", {})
         self.base_uris = merged
-        self.cc = cc or ConnectionColumns()
+        self.feed_tz = feed_tz
 
     def connection_id(self) -> Column:
         return compile_template(
-            self.base_uris["connection"], self.cc, self.base_uris.get("resolve")
+            self.base_uris["connection"], self.feed_tz, self.base_uris.get("resolve")
         )
 
     def stop_id(self, prefix: str) -> Column:
         return compile_template(
-            self.base_uris["stop"], self.cc, self.base_uris.get("resolve"), stop_prefix=prefix
+            self.base_uris["stop"], self.feed_tz, self.base_uris.get("resolve"), stop_prefix=prefix
         )
 
     def trip_id(self) -> Column:
         return compile_template(
-            self.base_uris["trip"], self.cc, self.base_uris.get("resolve")
+            self.base_uris["trip"], self.feed_tz, self.base_uris.get("resolve")
         )
 
     def route_id(self) -> Column:
         return compile_template(
-            self.base_uris["route"], self.cc, self.base_uris.get("resolve")
+            self.base_uris["route"], self.feed_tz, self.base_uris.get("resolve")
         )

@@ -24,13 +24,6 @@ def docs(spark):
     return spark.createDataFrame(rows, "doc_id long, text string, lang string")
 
 
-def test_exact_dedup(docs):
-    out = dedup.exact_dedup(docs)
-    ids = {r.doc_id for r in out.collect()}
-    assert 1 in ids and 2 not in ids  # doc 2 is an exact dup of 1
-    assert {3, 4, 5, 6, 7, 8} <= ids
-
-
 def test_fingerprint_normalization(spark):
     df = spark.createDataFrame(
         [("a b  c",), ("  A   b C ",)], "text string"
@@ -53,15 +46,6 @@ def test_minhash_jaccard_exactness(docs):
     # doc1 vs doc3: 13 tokens, 11 shingles each; one word changed at
     # position 8 affects shingles 6,7,8 -> 8 common / 14 union
     assert math.isclose(pairs[(1, 3)], 8 / 14, rel_tol=1e-6)
-
-
-def test_simhash_near_for_near_texts(docs):
-    sh = docs.select("doc_id", dedup.simhash64(F.col("text")).alias("sh")).collect()
-    m = {r.doc_id: r.sh for r in sh}
-    assert m[1] == m[2]
-    ham13 = bin((m[1] ^ m[3]) & ((1 << 64) - 1)).count("1")
-    ham16 = bin((m[1] ^ m[6]) & ((1 << 64) - 1)).count("1")
-    assert ham13 < ham16  # near-dup closer than unrelated text
 
 
 def test_simhash_candidates(docs):
@@ -359,13 +343,6 @@ def test_decode_image_features_real_bmp_corpus(spark):
         assert feats[0] == 4 + doc_id % 5 and feats[1] == 3 + doc_id % 4
     # distinct images -> distinct centroid features (not a constant fake)
     assert len({tuple(f[5:7]) for f in out.values()}) > 1
-
-
-def test_sample_frames(spark):
-    df = spark.createDataFrame([(1, bytes(range(200)))], "id long, blob binary")
-    out = multimodal.sample_frames(df, "blob", every_n_bytes=64, max_frames=8).collect()
-    assert len(out) == 4  # floor(200/64)=3 -> frames 0..3
-    assert out[0].frame_bytes == bytes(range(64))
 
 
 def test_hash_split_and_sample_deterministic(spark):

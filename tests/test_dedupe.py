@@ -58,20 +58,13 @@ def test_twin_trip_dedup(spark):
 
     conns = pipeline.convert(
         stop_times, trips, routes, stops, calendar, calendar_dates,
-        dedupe=True, salt_n=None,
+        salt_n=None,
     )
     rows = conns.select("trip_id", "service_date").collect()
     got = {(r.trip_id, r.service_date) for r in rows}
     # T1 (first in stream order) keeps mon(0101)+tue(0102);
     # T2 emits only its new date wed(0103) — tue deduped away.
     assert got == {("T1", "20070101"), ("T1", "20070102"), ("T2", "20070103")}
-
-    # without dedupe both trips emit everything
-    conns2 = pipeline.convert(
-        stop_times, trips, routes, stops, calendar, calendar_dates,
-        dedupe=False, salt_n=None,
-    )
-    assert conns2.count() == 4
 
 
 def test_connected_components_chain_and_islands(spark):
@@ -212,7 +205,7 @@ def test_thousand_duplicate_rules_route_linear_path(spark):
 
     conns = pipeline.convert(
         stop_times, trips, routes, stops, calendar, calendar_dates,
-        dedupe=True, salt_n=None,
+        salt_n=None,
     )
     got = {(r.trip_id, r.service_date) for r in conns.select("trip_id", "service_date").collect()}
     # first rule (T0000) claims mon; T0001 adds tue; 998 others add nothing

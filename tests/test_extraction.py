@@ -75,7 +75,7 @@ def test_quoted_csv_fields(spark):
     text = f"{fixtures.GTFS_MARKER} stops.txt feed=qf\n{csv}"
     ts = datetime(2026, 1, 15, tzinfo=timezone.utc)
     pages = spark.createDataFrame([("u", ts, b"", text, "en")], PAGES_SCHEMA)
-    stops = extraction.extract_entities(pages, persist=False)["stops"]
+    stops = extraction.entities_from_detected(extraction.detect_pages(pages))["stops"]
     row = stops.first()
     assert row.stop_name == 'Main St, Platform "A"'
     assert row.stop_id == "S1"
@@ -168,7 +168,7 @@ def test_recrawled_page_newest_wins_batch_path(spark):
     )
     doubled = pages.unionByName(older)
 
-    det = detect_pages(doubled, detect_partitions=2)
+    det = detect_pages(doubled)
     assert det.groupBy("url").count().agg(F.max("count")).first()[0] == 1
     # the NEWEST crawl's timestamp survives
     st = det.where(F.col("url").contains("stop_times")).first()
@@ -210,7 +210,7 @@ def test_hostile_header_variant_count_stays_linear(spark):
         [(u, None, None, t, "en") for u, t in rows],
         "url string, warc_ts timestamp, html binary, text string, lang string",
     )
-    e = extraction.extract_entities(pages, persist=False)
+    e = extraction.entities_from_detected(extraction.detect_pages(pages))
     stops = e["stops"]
     got = {r.stop_id: (r.stop_name, r.stop_desc) for r in stops.collect()}
     assert len(got) == 100
@@ -254,7 +254,7 @@ def test_generic_tail_branch_required_check_and_quoting(spark):
         [(u, None, None, t, "en") for u, t in rows],
         "url string, warc_ts timestamp, html binary, text string, lang string",
     )
-    e = extraction.extract_entities(pages, persist=False)
+    e = extraction.entities_from_detected(extraction.detect_pages(pages))
     got = {r.stop_id: r.stop_name for r in e["stops"].collect()}
     assert len(got) == 20 and "X" not in got.values()
     assert got["Q07"] == 'quoted, "name" 7'

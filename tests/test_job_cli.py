@@ -59,6 +59,25 @@ def test_jsonld_format_has_context_first(spark, tmp_path):
     assert rec["@id"].startswith("http")
 
 
+def test_feed_tz_reaches_trip_uris(spark, tmp_path):
+    """--feed-tz decides the trip-day date in the URIs, not only the
+    timestamps. AAMV4 runs on the weekend service and starts at 15:00
+    on Saturdays, which is already Sunday in Brussels: rendered in the
+    feed's own zone, every trip-day URI is a Saturday or a Sunday."""
+    from datetime import datetime
+
+    lines = _lines(_run(
+        spark, tmp_path, "jsonld", "--single-file", "--feed-tz", "America/Los_Angeles"
+    ))
+    recs = [json.loads(ln) for ln in lines[1:]]
+    days = {
+        r["gtfs:trip"].rsplit("/", 1)[1] for r in recs if "/trips/AAMV4/" in r["gtfs:trip"]
+    }
+    assert days
+    weekdays = {datetime.strptime(d, "%Y%m%d").strftime("%a") for d in days}
+    assert weekdays <= {"Sat", "Sun"}, sorted(days)
+
+
 def test_mongo_format(spark, tmp_path):
     lines = _lines(_run(spark, tmp_path, "mongo"))
     rec = json.loads(lines[0])

@@ -21,7 +21,7 @@ def test_scan_pushdown_and_pruning(spark, pages_parquet):
     """The GTFS-marker prefilter and the (url, warc_ts, text)
     projection must reach the parquet scan — html/lang are never read
     (warc_ts is read for the newest-crawl-per-url dedup)."""
-    det = extraction.detect_pages(spark.read.parquet(pages_parquet), detect_partitions=2)
+    det = extraction.detect_pages(spark.read.parquet(pages_parquet))
     plan = _executed_plan(det)
     assert "StringStartsWith(text,#gtfs-file:)" in plan
     scan_line = next(l for l in plan.split("\n") if "FileScan parquet" in l)
@@ -47,9 +47,7 @@ def test_embedding_neardup_plan_has_no_cartesian(spark):
 def test_pipeline_plan_is_broadcast_only(spark, pages_parquet):
     """No SortMergeJoin anywhere; dimension enrichment is all broadcast;
     the exploded connections never shuffle (only rule-sized exchanges)."""
-    e = extraction.extract_entities(
-        spark.read.parquet(pages_parquet), detect_partitions=2
-    )
+    e = extraction.extract_entities(spark.read.parquet(pages_parquet))
     tr = sinks.connections_to_triples(
         pipeline.convert(
             e["stop_times"], e["trips"], e["routes"], e["stops"],

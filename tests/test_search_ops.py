@@ -294,9 +294,8 @@ def test_normalize_text_closed_form(spark):
     d = spark.createDataFrame(
         [(1, "\x01a\tb\x07  c\x7f \n d ")], "doc_id bigint, text string"
     )
-    got = text.clean_corpus(d, keep_original=True).collect()[0]
+    got = d.select(text.normalize_text(F.col("text")).alias("text")).first()
     assert got["text"] == "a b c d"
-    assert got["text_raw"] == "\x01a\tb\x07  c\x7f \n d "
 
 
 def test_negative_samples_contract(spark):
@@ -416,29 +415,6 @@ def test_khop_min_distance_and_bound(spark):
         for r in kg.khop_distances(edges, seeds, k=10).collect()
     }
     assert full == {0: 0, 1: 1, 3: 1, 2: 2, 4: 2}
-
-
-def test_decode_audio_features_deterministic_and_stub(spark):
-    import pytest
-
-    from gtfs2lc_spark.datapipe import multimodal
-
-    d = spark.createDataFrame(
-        [(1, b"a" * 100), (2, b"")], "doc_id bigint, blob binary"
-    )
-    rows = {
-        r["doc_id"]: r["features"]
-        for r in multimodal.decode_audio_features(d, "blob").collect()
-    }
-    assert len(rows[1]) == multimodal.FEATURE_DIM
-    assert rows[2] == [0.0] * multimodal.FEATURE_DIM
-    again = {
-        r["doc_id"]: r["features"]
-        for r in multimodal.decode_audio_features(d, "blob").collect()
-    }
-    assert rows == again
-    with pytest.raises(NotImplementedError):
-        multimodal.decode_audio_features(d, "blob", fake=False)
 
 
 # ----------------------------------------------- curriculum / centroids

@@ -177,7 +177,7 @@ def test_turtle_messages(connections):
 def test_turtle_escaping(spark):
     """Literal escaping: quotes/backslashes in headsigns must survive a
     Turtle round-trip."""
-    from gtfs2lc_spark.uris import ConnectionColumns, URIStrategy
+    from gtfs2lc_spark.uris import URIStrategy
 
     df = spark.createDataFrame(
         [("F1", 'say "hi" \\ there', "T1", "R1", "A", "B",
@@ -189,7 +189,7 @@ def test_turtle_escaping(spark):
      .withColumn("departure_ts", F.to_timestamp("departure_ts")) \
      .withColumn("arrival_ts", F.to_timestamp("arrival_ts")) \
      .withColumn("trip_start_ts", F.to_timestamp("trip_start_ts"))
-    line = sinks.turtle_message_lines(df, URIStrategy(cc=ConnectionColumns())).first().line
+    line = sinks.turtle_message_lines(df, URIStrategy()).first().line
     _, messages = _parse_turtle_messages(line)
     (subj, pred, obj) = [q for q in messages[0] if q[1] == "gtfs:headsign"][0]
     assert obj == '"say \\"hi\\" \\\\ there"^^xsd:string'

@@ -1,5 +1,5 @@
 """Explicit skew handling (skew.py): salted two-phase aggregation and
-salted replicated joins."""
+the salted service-day explode on a skewed feed."""
 
 from __future__ import annotations
 
@@ -51,65 +51,6 @@ def test_salted_agg_rejects_non_decomposable(spark):
         skew.salted_agg(df, ["k"], {"m": ("avg", "v")})
 
 
-def test_salted_join_matches_plain_join(spark):
-    big = spark.range(0, 3000).select(
-        F.when(F.col("id") % 5 < 4, F.lit(1)).otherwise(F.col("id") % 50)
-        .cast("long").alias("k"),
-        F.col("id").alias("payload"),
-    )
-    small = spark.range(0, 50).select(
-        F.col("id").alias("k"), (F.col("id") * 2).alias("dim")
-    )
-    got = {
-        (r["k"], r["payload"], r["dim"])
-        for r in skew.salted_join(big, small, "k", n_salts=4).collect()
-    }
-    want = {
-        (r["k"], r["payload"], r["dim"])
-        for r in big.join(small, "k").collect()
-    }
-    assert got == want and len(got) == 3000
-
-
-def test_salted_join_left_semantics_and_outer_guard(spark):
-    big = spark.createDataFrame(
-        [(1, "a"), (1, "b"), (99, "orphan")], "k bigint, payload string"
-    )
-    small = spark.createDataFrame([(1, "dim1")], "k bigint, dim string")
-    rows = skew.salted_join(big, small, "k", n_salts=4, how="left").collect()
-    # unmatched left row appears exactly ONCE, null-extended
-    orphans = [r for r in rows if r["payload"] == "orphan"]
-    assert len(orphans) == 1 and orphans[0]["dim"] is None
-    assert len(rows) == 3
-    with pytest.raises(ValueError):
-        skew.salted_join(big, small, "k", how="full")
-
-
-def test_salted_join_plan_is_copartitioned_smj(spark):
-    """The (key, salt) repartitions must be REPARTITION_BY_NUM (AQE-
-    coalesce-exempt — a skewed-but-small fact side would otherwise be
-    coalesced back onto one task) and must satisfy the SMJ's
-    distribution so the join adds no further exchange."""
-    # a literal key would constant-fold out of the join condition and
-    # change the required distribution — use a real skewed column
-    big = spark.range(0, 100).select(
-        F.when(F.col("id") % 10 < 9, F.lit("hot"))
-        .otherwise(F.lit("cold")).alias("k"),
-        F.col("id").alias("v"),
-    )
-    small = spark.range(0, 5).select(
-        F.when(F.col("id") % 2 == 0, F.lit("hot")).otherwise(F.lit("cold")).alias("k"),
-        F.col("id").alias("d"),
-    )
-    plan = skew.salted_join(big, small, "k", n_salts=4, n_parts=8)\
-        ._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("REPARTITION_BY_NUM") == 2
-    assert "SortMergeJoin" in plan
-    # exactly the two explicit exchanges — none inserted by the join
-    assert plan.count("Exchange") == 2
-    assert "BroadcastHashJoin" not in plan
-
-
 def test_skewed_feed_salted_matches_unsalted(spark):
     """north_rule risk shape: ONE mega-trip owns ~95% of stop_times.
     convert() output must be IDENTICAL for every salt mode (salting is
@@ -135,25 +76,3 @@ def test_skewed_feed_salted_matches_unsalted(spark):
     assert unsalted.where(F.col("trip_id") == "MEGA").count() == 299 * 180
     assert unsalted.exceptAll(salted).count() == 0
     assert salted.exceptAll(unsalted).count() == 0
-
-
-def test_salted_join_skewed_rules_matches_plain(spark):
-    """The bench's skewjoin pair, at pytest scale: salted_join of skewed
-    rules x exploded service dates == the plain join, row-for-row."""
-    from gtfs2lc_spark import fixtures, pipeline
-
-    ents = fixtures.skewed_entities(spark, mega_rows=200)
-    rules = pipeline.stop_times_to_rules(
-        ents["stop_times"], ents["trips"], ents["routes"], ents["stops"]
-    ).withColumn("k", F.concat_ws("|", "feed_id", "trip_service_id"))
-    dates = pipeline.expand_services(
-        ents["calendar"], ents["calendar_dates"]
-    ).select(
-        F.concat_ws("|", "feed_id", "service_id").alias("k"),
-        F.explode("dates").alias("service_date"),
-    )
-    plain = rules.join(dates, "k")
-    salted = skew.salted_join(rules, dates, "k", n_salts=8)
-    assert salted.columns == plain.columns
-    assert plain.count() == salted.count()
-    assert plain.exceptAll(salted).count() == 0

@@ -129,107 +129,6 @@ def test_crash_between_output_and_commit(spark, tmp_path):
     assert store.snapshots() == [0]
 
 
-def test_departure_volume_watermark(spark, tmp_path):
-    """Event-time windowed agg with watermark: windows finalize (append
-    mode) once the watermark passes; a row later than the watermark is
-    dropped, one inside it still counts."""
-    import uuid
-
-    tmp = str(tmp_path)
-    conns = f"{tmp}/conns"
-    schema = ("feed_id string, trip_id string, departure_ts timestamp, "
-              "arrival_ts timestamp, dep_stop_id string, arr_stop_id string")
-
-    def write_batch(rows):
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode("append").parquet(conns)
-
-    def ts(s):
-        import datetime
-        return datetime.datetime.fromisoformat(s)
-
-    # batch 1: two windows' worth of events
-    write_batch([
-        ("f", "t1", ts("2007-01-01 08:02:00"), ts("2007-01-01 08:10:00"), "A", "B"),
-        ("f", "t2", ts("2007-01-01 08:07:00"), ts("2007-01-01 08:20:00"), "A", "C"),
-        ("f", "t1", ts("2007-01-01 08:20:00"), ts("2007-01-01 08:30:00"), "B", "C"),
-    ])
-    # batch 2: late-but-inside-watermark row for 08:00 window, plus an
-    # event far ahead that advances the watermark beyond both windows
-    write_batch([
-        ("f", "t3", ts("2007-01-01 08:05:00"), ts("2007-01-01 08:15:00"), "A", "B"),
-        ("f", "t9", ts("2007-01-01 12:00:00"), ts("2007-01-01 12:10:00"), "X", "Y"),
-    ])
-
-    name = f"vol_{uuid.uuid4().hex[:8]}"
-    q = (
-        streaming.departure_volume_stream(spark, conns, watermark="1 hour", window="15 minutes")
-        .writeStream.format("memory").queryName(name).outputMode("append")
-        .option("checkpointLocation", f"{tmp}/ckpt_vol")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    got = {
-        r.window_start.isoformat(): r.n_departures
-        for r in spark.sql(f"SELECT * FROM {name}").collect()
-    }
-    # both 08:00 and 08:15 windows finalized by the 12:00 watermark;
-    # the 12:00 window itself is NOT emitted (watermark hasn't passed)
-    assert got.get("2007-01-01T08:00:00") == 3  # incl. the late t3 row
-    assert got.get("2007-01-01T08:15:00") == 1
-    assert "2007-01-01T12:00:00" not in got
-
-
-def test_trip_session_state_survives_restart(spark, tmp_path):
-    """applyInPandasWithState: per-trip session state accumulates across
-    micro-batches and across QUERY RESTARTS (state store checkpoint)."""
-    import datetime
-    import uuid
-
-    tmp = str(tmp_path)
-    conns = f"{tmp}/conns"
-    ckpt = f"{tmp}/ckpt_sess"
-    schema = ("feed_id string, trip_id string, departure_ts timestamp, "
-              "arrival_ts timestamp, dep_stop_id string, arr_stop_id string")
-    ts = datetime.datetime.fromisoformat
-
-    def run_once(rows):
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode("append").parquet(conns)
-        out = f"{tmp}/sess_out_{uuid.uuid4().hex[:8]}"
-        q = (
-            streaming.trip_session_stream(spark, conns)
-            .writeStream.foreachBatch(
-                lambda df, _bid: df.write.mode("append").parquet(out)
-            )
-            .outputMode("update")
-            .option("checkpointLocation", ckpt).trigger(availableNow=True).start()
-        )
-        q.awaitTermination(300)
-        return {
-            (r.feed_id, r.trip_id): (r.n_connections, r.first_departure_epoch, r.last_arrival_epoch)
-            for r in spark.read.parquet(out).collect()
-        }
-
-    got1 = run_once([
-        ("f", "t1", ts("2007-01-01 08:00:00"), ts("2007-01-01 08:10:00"), "A", "B"),
-        ("f", "t1", ts("2007-01-01 08:10:00"), ts("2007-01-01 08:20:00"), "B", "C"),
-        ("f", "t2", ts("2007-01-01 09:00:00"), ts("2007-01-01 09:30:00"), "A", "C"),
-    ])
-    assert got1[("f", "t1")][0] == 2
-    assert got1[("f", "t2")][0] == 1
-
-    # restart with a NEW query over the SAME checkpoint: state persists,
-    # t1's count continues from 2 -> 3 and first_departure stays 08:00
-    got2 = run_once([
-        ("f", "t1", ts("2007-01-01 08:20:00"), ts("2007-01-01 08:30:00"), "C", "D"),
-    ])
-    n, first_dep, last_arr = got2[("f", "t1")]
-    assert n == 3
-    assert first_dep == int(ts("2007-01-01 08:00:00").replace(tzinfo=datetime.timezone.utc).timestamp())
-    assert last_arr == int(ts("2007-01-01 08:30:00").replace(tzinfo=datetime.timezone.utc).timestamp())
-    assert ("f", "t2") not in got2  # untouched trip not re-emitted
-
-
 def test_recrawled_url_replaces_staged_page(spark, tmp_path):
     """ADVICE r2 (medium): a url re-crawled in a later batch must
     REPLACE its staged rows, not duplicate them — otherwise the
@@ -356,132 +255,3 @@ def test_backfilled_older_crawl_does_not_replace_newer(spark, tmp_path):
         spark, newest, 2, store, f"{tmp}/staging", f"{tmp}/out", salt_n=8
     )
     assert spark.read.text(f"{tmp}/out/batch=*").count() > n0
-
-
-def test_user_session_stream_gap_merge(spark, tmp_path):
-    """Native session_window gap sessionization: events within the gap
-    merge into one session; a later event past the gap opens another;
-    sessions emit (append) only once the watermark passes their close."""
-    import datetime
-
-    tmp = str(tmp_path)
-    events = f"{tmp}/events"
-    schema = ("event_id bigint, ts timestamp, user_id bigint, "
-              "event_type string, value double, props string")
-    ts = datetime.datetime.fromisoformat
-
-    rows = [
-        # user 1: three events 10 min apart -> ONE session 08:00-08:20
-        (1, ts("2026-01-01T08:00:00"), 1, "a", 1.0, ""),
-        (2, ts("2026-01-01T08:10:00"), 1, "a", 2.0, ""),
-        (3, ts("2026-01-01T08:20:00"), 1, "a", 3.0, ""),
-        # user 1: past the 30-min gap -> second session
-        (4, ts("2026-01-01T10:00:00"), 1, "a", 4.0, ""),
-        # user 2: single event
-        (5, ts("2026-01-01T08:05:00"), 2, "a", 5.0, ""),
-        # far-future event: advances the watermark so everything above
-        # is finalized and emitted in append mode
-        (6, ts("2026-01-02T00:00:00"), 3, "a", 0.0, ""),
-    ]
-    spark.createDataFrame(rows, schema).coalesce(1).write.mode("append").parquet(events)
-
-    name = "user_sessions_mem"
-    q = (
-        streaming.user_session_stream(spark, events, gap="30 minutes", watermark="1 hour")
-        .writeStream.format("memory").queryName(name).outputMode("append")
-        .option("checkpointLocation", f"{tmp}/ckpt_usess")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    got = {
-        (r.user_id, r.session_start.isoformat()): (r.n_events, r.total_value,
-                                                   r.session_end.isoformat())
-        for r in spark.sql(f"SELECT * FROM {name}").collect()
-    }
-    assert got[(1, "2026-01-01T08:00:00")] == (3, 6.0, "2026-01-01T08:20:00")
-    assert got[(1, "2026-01-01T10:00:00")] == (1, 4.0, "2026-01-01T10:00:00")
-    assert got[(2, "2026-01-01T08:05:00")] == (1, 5.0, "2026-01-01T08:05:00")
-    # the watermark-advancing event's own session is NOT final yet
-    assert not any(u == 3 for (u, _s) in got)
-
-
-def test_click_attribution_stream_interval_join(spark, tmp_path):
-    """Stream-stream event-time interval join: a click pairs with every
-    view by the same user within the preceding 30 minutes — views
-    outside the window, other users' views, and views AFTER the click
-    never pair. Inner-join append semantics: unmatched clicks emit
-    nothing."""
-    import datetime
-
-    tmp = str(tmp_path)
-    events = f"{tmp}/events"
-    schema = ("event_id bigint, ts timestamp, user_id bigint, "
-              "event_type string, value double, props string")
-    ts = datetime.datetime.fromisoformat
-
-    rows = [
-        # user 1: two views then a click 10 min after the second —
-        # view 11 (25 min before) and view 12 (10 min before) both attribute
-        (11, ts("2026-01-01T08:00:00"), 1, "view", 0.0, ""),
-        (12, ts("2026-01-01T08:15:00"), 1, "view", 0.0, ""),
-        (13, ts("2026-01-01T08:25:00"), 1, "click", 9.5, ""),
-        # user 1: view 50 min before a second click -> outside the window
-        (14, ts("2026-01-01T10:00:00"), 1, "view", 0.0, ""),
-        (15, ts("2026-01-01T10:50:00"), 1, "click", 1.0, ""),
-        # user 2: view AFTER the click -> no attribution either way
-        (21, ts("2026-01-01T08:30:00"), 2, "click", 2.0, ""),
-        (22, ts("2026-01-01T08:40:00"), 2, "view", 0.0, ""),
-        # watermark pusher
-        (99, ts("2026-01-02T00:00:00"), 9, "other", 0.0, ""),
-    ]
-    spark.createDataFrame(rows, schema).coalesce(1).write.mode("append").parquet(events)
-
-    name = "attribution_mem"
-    q = (
-        streaming.click_attribution_stream(
-            spark, events, max_delay="30 minutes", watermark="1 hour"
-        )
-        .writeStream.format("memory").queryName(name).outputMode("append")
-        .option("checkpointLocation", f"{tmp}/ckpt_attr")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    got = {
-        (r.click_id, r.view_id)
-        for r in spark.sql(f"SELECT * FROM {name}").collect()
-    }
-    assert got == {(13, 11), (13, 12)}
-
-
-def test_dedup_events_stream_drops_redelivery(spark, tmp_path):
-    """dropDuplicatesWithinWatermark: a re-delivered event id inside
-    the watermark horizon emits once; distinct ids all emit."""
-    import datetime
-
-    tmp = str(tmp_path)
-    events = f"{tmp}/events"
-    schema = ("event_id bigint, ts timestamp, user_id bigint, "
-              "event_type string, value double, props string")
-    ts = datetime.datetime.fromisoformat
-    rows = [
-        (1, ts("2026-01-01T08:00:00"), 1, "a", 1.0, ""),
-        (1, ts("2026-01-01T08:00:30"), 1, "a", 1.0, ""),  # redelivery
-        (2, ts("2026-01-01T08:01:00"), 1, "a", 2.0, ""),
-        (1, ts("2026-01-01T08:02:00"), 1, "a", 1.0, ""),  # redelivery again
-        (3, ts("2026-01-01T09:30:00"), 2, "a", 3.0, ""),
-    ]
-    spark.createDataFrame(rows, schema).coalesce(1).write.mode("append").parquet(events)
-
-    name = "dedup_stream_mem"
-    q = (
-        streaming.dedup_events_stream(spark, events, watermark="1 hour")
-        .writeStream.format("memory").queryName(name).outputMode("append")
-        .option("checkpointLocation", f"{tmp}/ckpt_ddw")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    got = [r.event_id for r in spark.sql(f"SELECT event_id FROM {name}").collect()]
-    assert sorted(got) == [1, 2, 3]

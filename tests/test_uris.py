@@ -4,8 +4,8 @@
 import pytest
 from pyspark.sql import functions as F
 
+from gtfs2lc_spark import FEED_TIMEZONE_DEFAULT as TZ
 from gtfs2lc_spark.uris import (
-    ConnectionColumns,
     TemplateError,
     URIStrategy,
     compile_resolver,
@@ -60,9 +60,8 @@ def test_percent_encode_rfc6570(spark):
 
 
 def test_resolver_substring_and_format(conn_df):
-    cc = ConnectionColumns()
-    sub = compile_resolver("connection.departureStop.stop_id.substring(0, 6)", cc)
-    fmt = compile_resolver("format(connection.departureTime, 'yyyyMMdd_HH:mm')", cc)
+    sub = compile_resolver("connection.departureStop.stop_id.substring(0, 6)", TZ)
+    fmt = compile_resolver("format(connection.departureTime, 'yyyyMMdd_HH:mm')", TZ)
     row = conn_df.select(sub.alias("s"), fmt.alias("f")).first()
     assert row.s == "BEATTY"
     assert row.f == "20070106_08:00"  # rendered in feed tz (Brussels, CET)
@@ -70,13 +69,12 @@ def test_resolver_substring_and_format(conn_df):
 
 def test_rejects_executable_expressions():
     """Arbitrary JS must throw (reference URIStrategy.test.js:61-69)."""
-    cc = ConnectionColumns()
     with pytest.raises(TemplateError):
-        compile_resolver("connection.departureStop.stop_id; process.exit(1)", cc)
+        compile_resolver("connection.departureStop.stop_id; process.exit(1)", TZ)
     with pytest.raises(TemplateError):
-        compile_resolver("require('fs').readFileSync('/etc/passwd')", cc)
+        compile_resolver("require('fs').readFileSync('/etc/passwd')", TZ)
     with pytest.raises(TemplateError):
-        compile_resolver("global.foo", cc)
+        compile_resolver("global.foo", TZ)
 
 
 def test_custom_template_with_resolve(conn_df):
@@ -93,10 +91,18 @@ def test_custom_template_with_resolve(conn_df):
     assert out.cid == "http://ex.org/c/070106/BEATTY%20AIRPORT"
 
 
+def test_template_dates_render_in_feed_tz(conn_df):
+    """Trip-day dates follow the strategy's feed timezone: 07:00 UTC
+    is still the previous evening in Los Angeles."""
+    la = URIStrategy(feed_tz="America/Los_Angeles")
+    out = conn_df.select(la.trip_id().alias("trip"), la.connection_id().alias("cid")).first()
+    assert out.trip == "http://example.org/trips/T1%20x/20070105"
+    assert out.cid == "http://example.org/connections/20070105/BEATTY%20AIRPORT/T1%20x"
+
+
 def test_template_fills_missing_as_empty(conn_df):
-    cc = ConnectionColumns()
     # uri-templates fills undefined vars as '' — NULL must render ''
-    col2 = compile_template("http://ex.org/{routes.route_long_name}/x", cc)
+    col2 = compile_template("http://ex.org/{routes.route_long_name}/x", TZ)
     df = conn_df.withColumn("route_route_long_name", F.lit(None).cast("string"))
     assert df.select(col2.alias("u")).first().u == "http://ex.org//x"
 
