@@ -127,12 +127,9 @@ def build_outputs(
     if fmt == "ntriples":
         if message_counter:
             # framed N-Triples: triples grouped by message in counter
-            # order (the dense_index machinery assigns the ordinal; the
-            # sort is a range partition over (counter, pred) — scalable)
-            framed = sinks.triples_with_message_counter(conns, uris)
-            return sinks.triples_to_ntriples_lines(
-                framed.orderBy("message_counter", "pred")
-            )
+            # order — the counter is the dense rank of subj, so a range
+            # sort on (subj, pred) emits the same log without computing it
+            triples = triples.orderBy("subj", "pred")
         return sinks.triples_to_ntriples_lines(triples)
     if message_counter:
         return sinks.triples_with_message_counter(conns, uris)

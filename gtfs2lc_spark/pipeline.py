@@ -154,22 +154,11 @@ def keep_last_per_key(df: DataFrame, *key_cols: str) -> DataFrame:
     ``_line`` lineage column (posexplode line number / CSV row id)
     breaking ties within a page — i.e. the last line of the last page.
     (Page urls carry no reference-defined ordering; url-major is the
-    pinned deterministic choice.) Inputs without order lineage get a
-    deterministic
-    lexicographically-greatest pick instead (documented arbitrary —
-    duplicate keys are malformed GTFS either way; what matters is ONE
-    row, deterministically, instead of a join multiply)."""
-    cols = df.columns
-    data = [c for c in cols if c != "feed_id" and c not in key_cols]
-    if "_line" in cols:
-        order = (
-            F.struct(F.col("url"), F.col("_line"))
-            if "url" in cols
-            else F.col("_line")
-        )
-    else:
-        order = F.struct(*[F.col(c) for c in data])
+    pinned deterministic choice.) Every entity table carries ``url``
+    and ``_line`` (extraction, ``sources.read_gtfs_dir``, fixtures)."""
+    data = [c for c in df.columns if c != "feed_id" and c not in key_cols]
     row = F.struct(*[F.col(c).alias(c) for c in data])
+    order = F.struct(F.col("url"), F.col("_line"))
     return (
         df.groupBy("feed_id", *key_cols)
         .agg(F.max_by(row, order).alias("_row"))
@@ -256,36 +245,17 @@ def stop_times_to_rules(
         .drop("route_key")
     )
 
-    # P2 — headsign chain (current-code semantics, st2c.js:55-62):
-    # arrival stop's stop_headsign (only if stops.txt carries one) ->
-    # trip_headsign -> route_long_name
-    headsign_chain = []
-    if "arr_stop_headsign" in enriched.columns:
-        headsign_chain.append(_nullif_empty(F.col("arr_stop_headsign")))
-    headsign_chain += [
-        _nullif_empty(F.col("trip_trip_headsign")),
-        _nullif_empty(F.col("route_route_long_name")),
-    ]
-
     # P3 — stop_code fallback ids (only used inside uniqueId)
     def code_or_id(prefix: str) -> Column:
-        if f"{prefix}stop_code" in enriched.columns:
-            return F.coalesce(
-                _nullif_empty(F.col(f"{prefix}stop_code")), F.col(f"{prefix}stop_id")
-            )
-        return F.col(f"{prefix}stop_id")
-
-    trip_short = (
-        _blank(F.col("trip_trip_short_name"))
-        if "trip_trip_short_name" in enriched.columns
-        else F.lit("")
-    )
+        return F.coalesce(
+            _nullif_empty(F.col(f"{prefix}stop_code")), F.col(f"{prefix}stop_id")
+        )
 
     # P4 — rule uniqueId (st2c.js:78-89); JS Array.join renders null as ''
     unique_id = F.concat_ws(
         "/",
         F.regexp_replace(_blank(F.col("route_route_long_name")), r"\s", ""),
-        trip_short,
+        _blank(F.col("trip_trip_short_name")),
         code_or_id("dep_"),
         code_or_id("arr_"),
         _blank(F.col("trip_start_dfm")),
@@ -305,12 +275,13 @@ def stop_times_to_rules(
         F.col("stop_sequence_int"),
         _blank(F.col("prev_pickup_type")).alias("pickup_type"),
         _blank(F.col("drop_off_type")).alias("drop_off_type"),
-        F.coalesce(*headsign_chain).alias("headsign"),
-        # previous_headsign reads stop_headsign off the DEPARTURE stops.txt
-        # row (st2c.js:63-66) — stops.txt has no such column, so this is
-        # null unless the stops table carries one; NOT the lagged
-        # stop_times.stop_headsign (a latent reference quirk, kept as-is)
-        (_nullif_empty(F.col("dep_stop_headsign")) if "dep_stop_headsign" in enriched.columns else F.lit(None).cast("string")).alias("previous_headsign"),
+        # P2 — headsign chain (st2c.js:55-62): the arrival stops.txt
+        # row's stop_headsign comes first there, but stops.txt has no
+        # such column (SURVEY §2 P2), so trip_headsign -> route_long_name
+        F.coalesce(
+            _nullif_empty(F.col("trip_trip_headsign")),
+            _nullif_empty(F.col("route_route_long_name")),
+        ).alias("headsign"),
         unique_id.alias("unique_id"),
         *[
             c
@@ -387,43 +358,16 @@ def rules_to_connections(
     )
     n_parts = _shuffle_partitions(rules)
     empty = F.array().cast("array<string>")
-    # J7 fresh-run semantics (st2c.js:134-181): a later rule with the
-    # same uniqueId emits only service dates not already emitted by
-    # earlier rules ("earlier" = (trip_id, stop_sequence) order, the
-    # cleaner's stream order). Done at RULE level, before the ~180x
-    # explode, so the dedupe machinery moves rules, not connections.
-    #
-    # Shape (rewritten r4 — see NOTES_r4): duplicated uniqueIds are
-    # RARE in real GTFS (2-3 joined/split rules at most), so the
-    # plan routes on a skinny duplicate-key set instead of running
-    # per-row window machinery over everything:
-    #
-    #   1. dup_keys = a SKINNY (2-column) count aggregation over the
-    #      rules, kept > 1 — normally zero-to-a-handful of rows;
-    #      the full-width rule rows never shuffle for it;
-    #   2. clean rows bypass dedupe entirely via a BROADCAST
-    #      left_anti probe — no exchange, no sort, and with an
-    #      empty dup set the probe is a free codegen'd filter
-    #      (measured: within ~2% of no-guard at the 720-feed
-    #      headline config, vs ~19% for a count-window branch pair
-    #      and ~16% for co-partitioned shuffle-hash probes);
-    #   3. only dup-group rows (left_semi) run the exact dedupe: an
-    #      F.aggregate fold over the group's rules in (trip_id,
-    #      stop_sequence) order with an array_union seen-set
-    #      accumulator + array_except emission — LINEAR in group
-    #      size x dates (the seen-set is bounded by the group's
-    #      distinct dates), unlike the O(g^2)-cell prefix-union
-    #      window it replaces (hostile-corpus guard, VERDICT r3 #5;
-    #      1,000-duplicate-rule pytest drives this path).
-    #
-    # Worst-case bounds, both LOUD failures not silent corruption:
-    # a corpus with ~10^8+ DISTINCT duplicated uniqueIds exceeds
-    # the broadcast limit; a single uniqueId duplicated ~10^5+
-    # times exceeds the fold's agg buffer.
-    # probe on an 8-byte hash of (feed_id, unique_id): a collision
-    # merely routes a clean group through the exact fold — zero
-    # correctness dependence on collision-freedom — and the agg
-    # shuffle moves longs, not uniqueId strings
+    # J7 fresh-run semantics (st2c.js:134-181): each (uniqueId, service
+    # date) is emitted once, by the first rule in (trip_id,
+    # stop_sequence) order — the cleaner's stream order
+    # (bin/gtfs2lc-clean.js:34-38). Done at RULE level, before the
+    # ~180x explode. Duplicated uniqueIds are rare in real GTFS, so
+    # rules route on an 8-byte hash of (feed_id, unique_id): a skinny
+    # count finds the duplicated keys, clean rules pass a broadcast
+    # left_anti probe untouched (within ~2% of no guard at 720 feeds),
+    # and only dirty rules (left_semi) take the aggregate below. A hash
+    # collision only sends a clean group through the exact path.
     kh = F.xxhash64("feed_id", "unique_id").alias("_kh")
     dup_keys = (
         rules.select(kh)
@@ -437,52 +381,27 @@ def rules_to_connections(
     clean = keyed.join(dk, ["_kh"], "left_anti").drop("_kh")
     dirty = keyed.join(dk, ["_kh"], "left_semi").drop("_kh")
 
+    # dirty rules: explode their dates, keep the minimal rule per
+    # (uniqueId, date) — whole-row tiebreak — and regroup each winning
+    # rule's dates. One exchange in front clusters both aggregates; a
+    # uniqueId duplicated g times costs g x dates rows, never g^2.
     data_cols = [c for c in with_dates.columns if c != "dates"]
-    row_struct = F.struct(
-        F.col("trip_id").alias("trip_id"),
-        F.col("stop_sequence_int").alias("stop_sequence_int"),
-        F.struct(*[F.col(c).alias(c) for c in data_cols]).alias("r"),
-        F.coalesce("dates", empty).alias("dates"),
-    )
-    # array_sort on structs = (trip_id, stop_sequence_int, ...) asc
-    # with a deterministic whole-row tiebreak — the cleaner's stream
-    # order (bin/gtfs2lc-clean.js:34-38)
-    rows_sorted = F.array_sort(F.collect_list(row_struct))
-    row_ddl = with_dates.drop("dates").schema.simpleString()[len("struct<"):-1]
-    out_ddl = f"struct<r:struct<{row_ddl}>,dates:array<string>>"
-    acc_ddl = f"struct<seen:array<string>,out:array<{out_ddl}>>"
-
-    def step(acc, x):
-        return F.struct(
-            F.array_union(acc["seen"], x["dates"]).alias("seen"),
-            F.concat(
-                acc["out"],
-                F.array(
-                    F.struct(
-                        x["r"].alias("r"),
-                        F.array_except(x["dates"], acc["seen"]).alias("dates"),
-                    )
-                ),
-            ).alias("out"),
-        )
-
-    init = F.struct(
-        empty.alias("seen"), F.array().cast(f"array<{out_ddl}>").alias("out")
+    rule = F.struct(
+        "trip_id", "stop_sequence_int", F.struct(*data_cols).alias("r")
     )
     dirty_deduped = (
-        dirty.groupBy("feed_id", "unique_id")
-        .agg(
-            F.aggregate(
-                rows_sorted, init.cast(acc_ddl), step, lambda a: a["out"]
-            ).alias("_o")
-        )
-        .select(F.explode("_o").alias("_x"))
+        dirty.repartition("feed_id", "unique_id")
         .select(
-            *[F.col(f"_x.r.{c}").alias(c) for c in data_cols],
-            F.col("_x.dates").alias("dates"),
+            "feed_id", "unique_id", rule.alias("_w"),
+            F.explode(F.coalesce("dates", empty)).alias("_d"),
         )
+        .groupBy("feed_id", "unique_id", "_d")
+        .agg(F.min("_w").alias("_w"))
+        .groupBy("feed_id", "unique_id", "_w")
+        .agg(F.array_sort(F.collect_list("_d")).alias("dates"))
+        .select("_w.r.*", "dates")
     )
-    with_dates = clean.unionByName(dirty_deduped.select(*with_dates.columns))
+    with_dates = clean.unionByName(dirty_deduped)
 
     # r6 (guide §2.3 — do per-row work BEFORE the fan-out): the
     # duration strings are RULE-level values, constant across a rule's

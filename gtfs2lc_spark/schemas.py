@@ -33,6 +33,9 @@ PAGES_SCHEMA = T.StructType(
 )
 
 # ---- GTFS entity tables (columns = reference sample-feed headers) -----------
+# trip_short_name and stop_code (uniqueId parts, SURVEY §2 P3/P4) are not in
+# the sample-feed headers; they sit LAST so the sample CSV rows still map
+# onto these tuples by position (oracle._values_cte pads the tail with '').
 
 LINEAGE_COLS = ("feed_id", "url")
 
@@ -55,6 +58,7 @@ TRIPS_COLS = (
     "direction_id",
     "block_id",
     "shape_id",
+    "trip_short_name",
 )
 ROUTES_COLS = (
     "route_id",
@@ -75,6 +79,7 @@ STOPS_COLS = (
     "stop_lon",
     "zone_id",
     "stop_url",
+    "stop_code",
 )
 CALENDAR_COLS = (
     "service_id",

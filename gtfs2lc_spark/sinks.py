@@ -101,31 +101,44 @@ def connections_to_jsonld(
     )
 
 
+# (JSON-LD key, connections_to_jsonld column) in the key order of
+# lib/Connections2JSONLD.js:44-71 — jsonld_lines, mongold_lines and the
+# sortjob reader all derive from these pairs
+JSONLD_KEYS = (
+    ("@id", "id"),
+    ("@type", "type"),
+    ("departureStop", "departureStop"),
+    ("arrivalStop", "arrivalStop"),
+    ("departureTime", "departureTime"),
+    ("arrivalTime", "arrivalTime"),
+    ("gtfs:trip", "gtfs_trip"),
+    ("gtfs:route", "gtfs_route"),
+    ("direction", "direction"),
+    ("gtfs:pickupType", "gtfs_pickupType"),
+    ("gtfs:dropOffType", "gtfs_dropOffType"),
+)
+
+
+def _jsonld_col(jsonld: DataFrame, col: str) -> Column:
+    """``type`` is dropped before join_and_sort; it is always 'Connection'."""
+    if col == "type" and col not in jsonld.columns:
+        return F.lit("Connection")
+    return F.col(col)
+
+
 def jsonld_lines(jsonld: DataFrame) -> DataFrame:
     """One JSON text line per connection, exact reference key set/order.
 
     to_json omits null fields, matching the reference's conditional
     direction/pickupType/dropOffType keys.
     """
-    fields = [
-        F.col("id").alias("@id"),
-        (F.col("type") if "type" in jsonld.columns else F.lit("Connection")).alias("@type"),
-        F.col("departureStop"),
-        F.col("arrivalStop"),
-        F.col("departureTime"),
-        F.col("arrivalTime"),
-        F.col("gtfs_trip").alias("gtfs:trip"),
-        F.col("gtfs_route").alias("gtfs:route"),
-        F.col("direction"),
-        F.col("gtfs_pickupType").alias("gtfs:pickupType"),
-        F.col("gtfs_dropOffType").alias("gtfs:dropOffType"),
-    ]
+    fields = [_jsonld_col(jsonld, c).alias(k) for k, c in JSONLD_KEYS]
     if "nextConnection" in jsonld.columns:
         fields.append(F.col("nextConnection"))
     return jsonld.select(F.to_json(F.struct(*fields)).alias("line"))
 
 
-def _raw_connection_obj(conns: DataFrame, wrap_dates: bool) -> Column:
+def _raw_connection_obj(wrap_dates: bool) -> Column:
     """Shared raw-Connection struct (the Connection shape of
     lib/ConnectionsBuilder.js:42-53): nested full stop/trip/route rows,
     keys in the reference's insertion order, Dates as ISO strings.
@@ -134,10 +147,7 @@ def _raw_connection_obj(conns: DataFrame, wrap_dates: bool) -> Column:
     from .schemas import ROUTES_COLS, STOPS_COLS, TRIPS_COLS
 
     def row_struct(prefix: str, cols: tuple[str, ...], *extra) -> Column:
-        return F.struct(
-            *[F.col(f"{prefix}{c}").alias(c) for c in cols if f"{prefix}{c}" in conns.columns],
-            *extra,
-        )
+        return F.struct(*[F.col(f"{prefix}{c}").alias(c) for c in cols], *extra)
 
     def time(c: str) -> Column:
         rendered = iso(F.col(c))
@@ -166,7 +176,7 @@ def raw_json_lines(conns: DataFrame) -> DataFrame:
     """The reference's ``json`` format: raw Connection objects as
     ND-JSON (lib/streams/JSONLinesStringer.js)."""
     return conns.select(
-        F.to_json(_raw_connection_obj(conns, wrap_dates=False)).alias("line")
+        F.to_json(_raw_connection_obj(wrap_dates=False)).alias("line")
     )
 
 
@@ -176,20 +186,15 @@ def mongold_lines(jsonld: DataFrame) -> DataFrame:
     Connections2JSONLD): '@id' -> '_id', timestamps wrapped as
     {"$date": iso}. Key order mirrors the reference's mutation order
     (original keys first, _id appended last)."""
-    date = lambda c: F.struct(F.col(c).alias("$date"))  # noqa: E731
-    fields = [
-        (F.col("type") if "type" in jsonld.columns else F.lit("Connection")).alias("@type"),
-        F.col("departureStop"),
-        F.col("arrivalStop"),
-        date("departureTime").alias("departureTime"),
-        date("arrivalTime").alias("arrivalTime"),
-        F.col("gtfs_trip").alias("gtfs:trip"),
-        F.col("gtfs_route").alias("gtfs:route"),
-        F.col("direction"),
-        F.col("gtfs_pickupType").alias("gtfs:pickupType"),
-        F.col("gtfs_dropOffType").alias("gtfs:dropOffType"),
-        F.col("id").alias("_id"),
-    ]
+
+    def field(key: str, col: str) -> Column:
+        c = _jsonld_col(jsonld, col)
+        if key in ("departureTime", "arrivalTime"):
+            c = F.struct(c.alias("$date"))
+        return c.alias(key)
+
+    fields = [field(k, c) for k, c in JSONLD_KEYS if k != "@id"]
+    fields.append(F.col("id").alias("_id"))
     return jsonld.select(F.to_json(F.struct(*fields)).alias("line"))
 
 
@@ -201,7 +206,7 @@ def mongo_lines(conns: DataFrame) -> DataFrame:
     lib/Connections2Mongo.js:20-27; no '@id' exists on raw connections,
     so no '_id' is added)."""
     return conns.select(
-        F.to_json(_raw_connection_obj(conns, wrap_dates=True)).alias("line")
+        F.to_json(_raw_connection_obj(wrap_dates=True)).alias("line")
     )
 
 

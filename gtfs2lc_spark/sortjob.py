@@ -28,25 +28,9 @@ from . import postprocess, sinks
 from .job import merge_shards
 from .session import build_session
 
-# the JSON-LD key set of lib/Connections2JSONLD.js:44-71 (+nextConnection
-# so already-linked files round-trip)
-_JSONLD_FIELDS: list[tuple[str, str, T.DataType]] = [
-    ("@id", "id", T.StringType()),
-    ("@type", "type", T.StringType()),
-    ("departureStop", "departureStop", T.StringType()),
-    ("arrivalStop", "arrivalStop", T.StringType()),
-    ("departureTime", "departureTime", T.StringType()),
-    ("arrivalTime", "arrivalTime", T.StringType()),
-    ("gtfs:trip", "gtfs_trip", T.StringType()),
-    ("gtfs:route", "gtfs_route", T.StringType()),
-    ("direction", "direction", T.StringType()),
-    ("gtfs:pickupType", "gtfs_pickupType", T.StringType()),
-    ("gtfs:dropOffType", "gtfs_dropOffType", T.StringType()),
-    ("nextConnection", "nextConnection", T.ArrayType(T.StringType())),
-]
-
+# nextConnection is not read: join_and_sort re-links every chain
 _JSONLD_SCHEMA = T.StructType(
-    [T.StructField(k, dt, True) for (k, _a, dt) in _JSONLD_FIELDS]
+    [T.StructField(k, T.StringType(), True) for k, _c in sinks.JSONLD_KEYS]
 )
 
 
@@ -73,9 +57,9 @@ def read_jsonld_connections(
         F.from_json("value", _JSONLD_SCHEMA).alias("j")
     ).where(F.col("j").getField("@id").isNotNull())
     df = parsed.select(
-        *[F.col("j").getField(k).alias(a) for (k, a, _dt) in _JSONLD_FIELDS]
+        *[F.col("j").getField(k).alias(c) for k, c in sinks.JSONLD_KEYS]
     )
-    return df.drop("nextConnection"), context
+    return df, context
 
 
 def run(spark: SparkSession, args: argparse.Namespace) -> dict:

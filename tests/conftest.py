@@ -37,3 +37,24 @@ def jsonld(connections):
     from gtfs2lc_spark import sinks
 
     return sinks.connections_to_jsonld(connections).cache()
+
+
+@pytest.fixture(scope="session")
+def entity_frame(spark):
+    """Hand-made entity tables in the pipeline's one input
+    shape: ``entity_frame(file_name, cols, rows, feed_id="f")`` maps
+    each row tuple onto ``cols``, pads the file's other canonical
+    ``GTFS_FILE_COLS`` with '' and appends feed_id, url and _line (the
+    row's position)."""
+    from gtfs2lc_spark.schemas import GTFS_FILE_COLS, _string_struct
+
+    def build(file_name, cols, rows, feed_id="f"):
+        canon = GTFS_FILE_COLS[file_name]
+        data = [
+            (*[dict(zip(cols, r)).get(c, "") for c in canon], feed_id, "u", i)
+            for i, r in enumerate(rows)
+        ]
+        schema = _string_struct(*canon, "feed_id", "url").add("_line", "long")
+        return spark.createDataFrame(data, schema)
+
+    return build

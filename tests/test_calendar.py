@@ -30,23 +30,23 @@ def test_exceptions(spark, feed):
     assert "20070106" in s["WE"] and "20070105" not in s["WE"]
 
 
-def test_exception_only_service_flush(spark):
+def test_exception_only_service_flush(entity_frame):
     """Services with calendar_dates but no calendar keep their added days
     (CalendarExpander.js:57-68); removed-only services expand to empty."""
-    cal = spark.createDataFrame(
-        [("S1", "1", "1", "1", "1", "1", "0", "0", "20070101", "20070107", "f", "u")],
-        _string_struct(
-            "service_id", "monday", "tuesday", "wednesday", "thursday", "friday",
-            "saturday", "sunday", "start_date", "end_date", "feed_id", "url",
-        ),
+    cal = entity_frame(
+        "calendar.txt",
+        ["service_id", "monday", "tuesday", "wednesday", "thursday", "friday",
+         "saturday", "sunday", "start_date", "end_date"],
+        [("S1", "1", "1", "1", "1", "1", "0", "0", "20070101", "20070107")],
     )
-    cd = spark.createDataFrame(
+    cd = entity_frame(
+        "calendar_dates.txt",
+        ["service_id", "date", "exception_type"],
         [
-            ("S2", "20070110", "1", "f", "u"),
-            ("S2", "20070111", "1", "f", "u"),
-            ("S3", "20070112", "2", "f", "u"),
+            ("S2", "20070110", "1"),
+            ("S2", "20070111", "1"),
+            ("S3", "20070112", "2"),
         ],
-        _string_struct("service_id", "date", "exception_type", "feed_id", "url"),
     )
     out = {r.service_id: sorted(r.dates) for r in pipeline.expand_services(cal, cd).collect()}
     assert out["S2"] == ["20070110", "20070111"]
@@ -55,48 +55,40 @@ def test_exception_only_service_flush(spark):
     assert out["S1"] == ["20070101", "20070102", "20070103", "20070104", "20070105"]
 
 
-def test_added_date_also_removed_wins(spark):
+def test_added_date_also_removed_wins(entity_frame):
     """The expander inserts added dates unconditionally, before removal
     filtering (CalendarExpander.js:24-36): added ∪ (weekday ∖ removed)."""
-    cal = spark.createDataFrame(
-        [("S", "1", "1", "1", "1", "1", "1", "1", "20070101", "20070102", "f", "u")],
-        _string_struct(
-            "service_id", "monday", "tuesday", "wednesday", "thursday", "friday",
-            "saturday", "sunday", "start_date", "end_date", "feed_id", "url",
-        ),
+    cal = entity_frame(
+        "calendar.txt",
+        ["service_id", "monday", "tuesday", "wednesday", "thursday", "friday",
+         "saturday", "sunday", "start_date", "end_date"],
+        [("S", "1", "1", "1", "1", "1", "1", "1", "20070101", "20070102")],
     )
-    cd = spark.createDataFrame(
+    cd = entity_frame(
+        "calendar_dates.txt",
+        ["service_id", "date", "exception_type"],
         [("S", "20070101", "1"), ("S", "20070101", "2")],
-        _string_struct("service_id", "date", "exception_type"),
-    ).withColumn("feed_id", F.lit("f")).withColumn("url", F.lit("u"))
+    )
     out = {r.service_id: sorted(r.dates) for r in pipeline.expand_services(cal, cd).collect()}
     assert out["S"] == ["20070101", "20070102"]
 
 
-def test_reversed_calendar_range_drops_not_crashes(spark):
+def test_reversed_calendar_range_drops_not_crashes(entity_frame):
     """One malformed calendar row (end_date < start_date) must expand to
     ZERO weekday days — the reference's for-loop runs no iterations —
     instead of failing the whole corpus run (F.sequence throws on
     reversed boundaries)."""
-    from pyspark.sql import functions as F
-
-    from gtfs2lc_spark import pipeline
-    from gtfs2lc_spark.schemas import _string_struct
-
-    cal = spark.createDataFrame(
+    cal = entity_frame(
+        "calendar.txt",
+        ["service_id", "monday", "tuesday", "wednesday", "thursday", "friday",
+         "saturday", "sunday", "start_date", "end_date"],
         [
-            ("BAD", "1", "1", "1", "1", "1", "1", "1", "20070201", "20070101", "f", "u"),
-            ("OK", "0", "0", "0", "0", "0", "0", "1", "20070101", "20070114", "f", "u"),
+            ("BAD", "1", "1", "1", "1", "1", "1", "1", "20070201", "20070101"),
+            ("OK", "0", "0", "0", "0", "0", "0", "1", "20070101", "20070114"),
         ],
-        _string_struct(
-            "service_id", "monday", "tuesday", "wednesday", "thursday",
-            "friday", "saturday", "sunday", "start_date", "end_date",
-            "feed_id", "url",
-        ),
     )
-    cd = spark.createDataFrame(
-        [("BAD", "20070301", "1", "f", "u")],
-        _string_struct("service_id", "date", "exception_type", "feed_id", "url"),
+    cd = entity_frame(
+        "calendar_dates.txt", ["service_id", "date", "exception_type"], [("BAD", "20070301", "1")]
     )
     got = {
         r.service_id: r.dates

@@ -6,55 +6,49 @@ a later rule with extra dates emits only the new dates."""
 from pyspark.sql import functions as F
 
 from gtfs2lc_spark import pipeline
-from gtfs2lc_spark.schemas import _string_struct
 
 
-def _df(spark, cols, rows):
-    return spark.createDataFrame(rows, _string_struct(*cols, "feed_id", "url"))
-
-
-def test_twin_trip_dedup(spark):
-    f = lambda *r: (*r, "f", "u")  # noqa: E731
-    stop_times = _df(
-        spark,
+def test_twin_trip_dedup(entity_frame):
+    stop_times = entity_frame(
+        "stop_times.txt",
         ["trip_id", "arrival_time", "departure_time", "stop_id", "stop_sequence",
          "stop_headsign", "pickup_type", "drop_off_type", "shape_dist_traveled"],
         [
-            f("T1", "8:00:00", "8:00:00", "S1", "1", "", "", "", ""),
-            f("T1", "9:00:00", "9:00:00", "S2", "2", "", "", "", ""),
+            ("T1", "8:00:00", "8:00:00", "S1", "1", "", "", "", ""),
+            ("T1", "9:00:00", "9:00:00", "S2", "2", "", "", "", ""),
             # twin trip: identical movement -> identical uniqueId
-            f("T2", "8:00:00", "8:00:00", "S1", "1", "", "", "", ""),
-            f("T2", "9:00:00", "9:00:00", "S2", "2", "", "", "", ""),
+            ("T2", "8:00:00", "8:00:00", "S1", "1", "", "", "", ""),
+            ("T2", "9:00:00", "9:00:00", "S2", "2", "", "", "", ""),
         ],
     )
-    trips = _df(
-        spark,
+    trips = entity_frame(
+        "trips.txt",
         ["route_id", "service_id", "trip_id", "trip_headsign", "direction_id",
          "block_id", "shape_id"],
-        [f("R", "SVC_A", "T1", "", "", "", ""), f("R", "SVC_B", "T2", "", "", "", "")],
+        [("R", "SVC_A", "T1", "", "", "", ""), ("R", "SVC_B", "T2", "", "", "", "")],
     )
-    routes = _df(
-        spark,
+    routes = entity_frame(
+        "routes.txt",
         ["route_id", "agency_id", "route_short_name", "route_long_name", "route_desc",
          "route_type", "route_url", "route_color", "route_text_color"],
-        [f("R", "A", "1", "Long Name", "", "3", "", "", "")],
+        [("R", "A", "1", "Long Name", "", "3", "", "", "")],
     )
-    stops = _df(
-        spark,
+    stops = entity_frame(
+        "stops.txt",
         ["stop_id", "stop_name", "stop_desc", "stop_lat", "stop_lon", "zone_id", "stop_url"],
-        [f("S1", "", "", "", "", "", ""), f("S2", "", "", "", "", "", "")],
+        [("S1", "", "", "", "", "", ""), ("S2", "", "", "", "", "", "")],
     )
     # SVC_A: mon+tue of one week; SVC_B: tue+wed (overlap tue)
-    calendar = _df(
-        spark,
+    calendar = entity_frame(
+        "calendar.txt",
         ["service_id", "monday", "tuesday", "wednesday", "thursday", "friday",
          "saturday", "sunday", "start_date", "end_date"],
         [
-            f("SVC_A", "1", "1", "0", "0", "0", "0", "0", "20070101", "20070107"),
-            f("SVC_B", "0", "1", "1", "0", "0", "0", "0", "20070101", "20070107"),
+            ("SVC_A", "1", "1", "0", "0", "0", "0", "0", "20070101", "20070107"),
+            ("SVC_B", "0", "1", "1", "0", "0", "0", "0", "20070101", "20070107"),
         ],
     )
-    calendar_dates = _df(spark, ["service_id", "date", "exception_type"], [])
+    calendar_dates = entity_frame("calendar_dates.txt", ["service_id", "date", "exception_type"], [])
 
     conns = pipeline.convert(
         stop_times, trips, routes, stops, calendar, calendar_dates,
@@ -147,61 +141,60 @@ def test_connected_components_converges_exactly_at_budget(spark):
     assert got == {i: 0 for i in range(9)}
 
 
-def test_thousand_duplicate_rules_route_linear_path(spark):
+def test_thousand_duplicate_rules_route_linear_path(entity_frame):
     """VERDICT r3 #5: a hostile feed with 1,000 identical-movement
     trips (one uniqueId group of 1,000 rules) must stay LINEAR — dup
-    groups run the seen-set fold (array_union accumulator), never an
-    O(g^2)-cell prefix-union — with exact J7 semantics: the first rule
-    in (trip_id, stop_sequence) order keeps its dates, later rules emit
-    only dates unseen so far."""
-    f = lambda *r: (*r, "f", "u")  # noqa: E731
+    groups take the min-rule aggregate per (uniqueId, date), g x dates
+    rows, never an O(g^2)-cell prefix-union — with exact J7 semantics:
+    the first rule in (trip_id, stop_sequence) order keeps its dates,
+    later rules emit only dates unseen so far."""
     n = 1_000
     st_rows, trip_rows, cal_rows = [], [], []
     for i in range(n):
         t = f"T{i:04d}"
         st_rows += [
-            f(t, "8:00:00", "8:00:00", "S1", "1", "", "", "", ""),
-            f(t, "9:00:00", "9:00:00", "S2", "2", "", "", "", ""),
+            (t, "8:00:00", "8:00:00", "S1", "1", "", "", "", ""),
+            (t, "9:00:00", "9:00:00", "S2", "2", "", "", "", ""),
         ]
         # every trip its own service: T0000 runs mon, all others run
         # mon+tue — so T0000 (first in order) claims mon, T0001 claims
         # tue, every later trip emits NOTHING
         svc = f"SV{i:04d}"
-        trip_rows.append(f("R", svc, t, "", "", "", ""))
+        trip_rows.append(("R", svc, t, "", "", "", ""))
         cal_rows.append(
-            f(svc, "1", "1" if i > 0 else "0", "0", "0", "0", "0", "0",
-              "20070101", "20070107")
+            (svc, "1", "1" if i > 0 else "0", "0", "0", "0", "0", "0",
+             "20070101", "20070107")
         )
-    stop_times = _df(
-        spark,
+    stop_times = entity_frame(
+        "stop_times.txt",
         ["trip_id", "arrival_time", "departure_time", "stop_id", "stop_sequence",
          "stop_headsign", "pickup_type", "drop_off_type", "shape_dist_traveled"],
         st_rows,
     )
-    trips = _df(
-        spark,
+    trips = entity_frame(
+        "trips.txt",
         ["route_id", "service_id", "trip_id", "trip_headsign", "direction_id",
          "block_id", "shape_id"],
         trip_rows,
     )
-    routes = _df(
-        spark,
+    routes = entity_frame(
+        "routes.txt",
         ["route_id", "agency_id", "route_short_name", "route_long_name", "route_desc",
          "route_type", "route_url", "route_color", "route_text_color"],
-        [f("R", "A", "1", "Long Name", "", "3", "", "", "")],
+        [("R", "A", "1", "Long Name", "", "3", "", "", "")],
     )
-    stops = _df(
-        spark,
+    stops = entity_frame(
+        "stops.txt",
         ["stop_id", "stop_name", "stop_desc", "stop_lat", "stop_lon", "zone_id", "stop_url"],
-        [f("S1", "", "", "", "", "", ""), f("S2", "", "", "", "", "", "")],
+        [("S1", "", "", "", "", "", ""), ("S2", "", "", "", "", "", "")],
     )
-    calendar = _df(
-        spark,
+    calendar = entity_frame(
+        "calendar.txt",
         ["service_id", "monday", "tuesday", "wednesday", "thursday", "friday",
          "saturday", "sunday", "start_date", "end_date"],
         cal_rows,
     )
-    calendar_dates = _df(spark, ["service_id", "date", "exception_type"], [])
+    calendar_dates = entity_frame("calendar_dates.txt", ["service_id", "date", "exception_type"], [])
 
     conns = pipeline.convert(
         stop_times, trips, routes, stops, calendar, calendar_dates,

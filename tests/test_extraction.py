@@ -117,6 +117,48 @@ def test_crlf_pages_extract(spark):
     assert rows == {"S1": "Alpha", "S2": "Beta"}
 
 
+def test_coupled_trains_keep_their_own_unique_ids(spark):
+    """trip_short_name and stop_code are uniqueId parts (st2c.js:68-89):
+    coupled trains IC101 and IC202 share route, stops and times and
+    differ only in their train numbers, so each keeps its connection
+    through J7. Extraction used to drop both columns, giving the two
+    trains one uniqueId and deleting IC202's connection."""
+    st_rows = "".join(
+        f"{t},{hm},{hm},{s},{q}\n"
+        for t in ("IC101", "IC202")
+        for hm, s, q in (("8:00:00", "A", 1), ("9:00:00", "B", 2))
+    )
+    files = {
+        "routes.txt": "route_id,route_long_name\nR,Coast Line\n",
+        "trips.txt": "route_id,service_id,trip_id,trip_short_name\n"
+                     "R,S,IC101,101\nR,S,IC202,202\n",
+        "stops.txt": "stop_id,stop_code,stop_name\nA,,Alpha\nB,8400B,Beta\n",
+        "stop_times.txt": "trip_id,arrival_time,departure_time,stop_id,stop_sequence\n"
+                          + st_rows,
+        "calendar.txt": "service_id,monday,tuesday,wednesday,thursday,friday,"
+                        "saturday,sunday,start_date,end_date\n"
+                        "S,1,0,0,0,0,0,0,20070101,20070101\n",
+        "calendar_dates.txt": "service_id,date,exception_type\nS,20070102,2\n",
+    }
+    pages = None
+    for fname, body in files.items():
+        page = _page(spark, f"http://x/coupled/{fname}",
+                     f"#gtfs-file: {fname} feed=coupled\n{body}")
+        pages = page if pages is None else pages.unionByName(page)
+    e = extraction.extract_entities(pages)
+    conns = pipeline.convert(
+        e["stop_times"], e["trips"], e["routes"], e["stops"],
+        e["calendar"], e["calendar_dates"], salt_n=None,
+    )
+    got = sorted(
+        (r.trip_id, r.unique_id) for r in conns.select("trip_id", "unique_id").collect()
+    )
+    assert got == [
+        ("IC101", "CoastLine/101/A/8400B/8:00:00/8:00:00/9:00:00//"),
+        ("IC202", "CoastLine/202/A/8400B/8:00:00/8:00:00/9:00:00//"),
+    ]
+
+
 def test_header_mapped_by_name(spark):
     """Reordered + extra columns map by name (fast-csv headers:true
     semantics); canonical columns absent from the header fill ''."""

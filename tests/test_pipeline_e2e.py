@@ -115,7 +115,7 @@ def test_empty_calendar_feed(spark, feed):
     assert dates == {"20070605", "20070606", "20070607"}  # FULLW added days only
 
 
-def test_dst_transition_days(spark):
+def test_dst_transition_days(entity_frame):
     """Transition-DAY semantics (SURVEY §1.5 / §7.4 risk 1): timestamps
     are epoch(local midnight) + dfm seconds, never wall-clock interval
     addition. Spring-forward day is 23h long; fall-back day is 25h —
@@ -127,35 +127,29 @@ def test_dst_transition_days(spark):
     from gtfs2lc_spark import pipeline, sinks
 
     def feed(dates):
-        stop_times = spark.createDataFrame(
-            [("T", "2:30:00", "2:30:00", "A", "1", "", "", "", ""),
-             ("T", "26:00:00", "26:00:00", "B", "2", "", "", "", "")],
-            "trip_id string, arrival_time string, departure_time string, "
-            "stop_id string, stop_sequence string, stop_headsign string, "
-            "pickup_type string, drop_off_type string, shape_dist_traveled string",
-        ).withColumn("feed_id", F.lit("f")).withColumn("url", F.lit("u"))
-        trips = spark.createDataFrame(
-            [("R", "S", "T", "h", "", "", "")],
-            "route_id string, service_id string, trip_id string, trip_headsign string, "
-            "trip_short_name string, direction_id string, block_id string",
-        ).withColumn("feed_id", F.lit("f")).withColumn("url", F.lit("u"))
-        routes = spark.createDataFrame(
+        stop_times = entity_frame(
+            "stop_times.txt",
+            ["trip_id", "arrival_time", "departure_time", "stop_id", "stop_sequence"],
+            [("T", "2:30:00", "2:30:00", "A", "1"), ("T", "26:00:00", "26:00:00", "B", "2")],
+        )
+        trips = entity_frame(
+            "trips.txt", ["route_id", "service_id", "trip_id", "trip_headsign"],
+            [("R", "S", "T", "h")],
+        )
+        routes = entity_frame(
+            "routes.txt",
+            ["route_id", "agency_id", "route_short_name", "route_long_name", "route_type"],
             [("R", "a", "r", "Long", "3")],
-            "route_id string, agency_id string, route_short_name string, "
-            "route_long_name string, route_type string",
-        ).withColumn("feed_id", F.lit("f")).withColumn("url", F.lit("u"))
-        stops = spark.createDataFrame(
-            [("A", "An", "", "1", "1", "", ""), ("B", "Bn", "", "2", "2", "", "")],
-            "stop_id string, stop_name string, stop_desc string, stop_lat string, "
-            "stop_lon string, zone_id string, stop_url string",
-        ).withColumn("feed_id", F.lit("f")).withColumn("url", F.lit("u"))
-        calendar = spark.createDataFrame(
-            [], "service_id string, monday string, tuesday string, wednesday string, "
-            "thursday string, friday string, saturday string, sunday string, "
-            "start_date string, end_date string, feed_id string, url string")
-        cdates = spark.createDataFrame(
-            [("S", d, "1", "f", "u") for d in dates],
-            "service_id string, date string, exception_type string, feed_id string, url string")
+        )
+        stops = entity_frame(
+            "stops.txt", ["stop_id", "stop_name", "stop_lat", "stop_lon"],
+            [("A", "An", "1", "1"), ("B", "Bn", "2", "2")],
+        )
+        calendar = entity_frame("calendar.txt", ["service_id"], [])
+        cdates = entity_frame(
+            "calendar_dates.txt", ["service_id", "date", "exception_type"],
+            [("S", d, "1") for d in dates],
+        )
         return pipeline.convert(stop_times, trips, routes, stops, calendar, cdates, salt_n=4)
 
     conns = feed(["20070325", "20071028"]).select(

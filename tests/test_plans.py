@@ -62,9 +62,9 @@ def test_pipeline_plan_is_broadcast_only(spark, pages_parquet):
     # shuffle; approximate tree position via indentation:
     lines = plan.split("\n")
     # the invariant concerns the FINAL 180x service-date explode (J6);
-    # the J7 dedupe's dup-group fold branch explodes its own folded
-    # output below the salt exchange — ALLOWED: it carries zero rows
-    # unless duplicated uniqueIds exist, and those rows are rare by
+    # the J7 dedupe's dup-group branch explodes dirty rules' dates
+    # below the salt exchange — ALLOWED: it carries zero rows unless
+    # duplicated uniqueIds exist, and those rows are rare by
     # construction
     # match the FACT explode only — explode(coalesce(dates, [])) over
     # the rule rows; the r6 date->epoch broadcast dimension has its own

@@ -231,3 +231,79 @@ def test_winsorize_bounds_property(spark, rows, ps):
         qhi = sv[math.ceil(hi_p * n / 100) - 1]
         assert r["clipped"] == min(max(r["value"], qlo), qhi)
         assert r["was_clipped"] == (r["clipped"] != r["value"])
+
+
+_J7_TRIP = st.tuples(
+    st.lists(st.sampled_from(["S1", "S2", "S3"]), min_size=2, max_size=3),
+    st.integers(0, 1),  # timing pattern
+    st.sampled_from([(1, 2, 3), (1, 2, 10), (5, 9, 10)]),  # stop_sequence
+    st.integers(0, 2),  # service
+)
+_J7_FEED = st.tuples(
+    st.lists(_J7_TRIP, min_size=1, max_size=30),
+    st.lists(st.tuples(*[st.sampled_from("01")] * 7), min_size=3, max_size=3),
+)
+
+
+@settings(_SET, max_examples=6)
+@given(feeds=st.lists(_J7_FEED, min_size=1, max_size=3))
+def test_j7_first_rule_wins_matches_stream_model(entity_frame, feeds):
+    """J7 (st2c.js:134-181): with few stops and timing patterns most
+    uniqueIds repeat; rules_to_connections must emit each (uniqueId,
+    service date) once, from the first rule in (trip_id,
+    int(stop_sequence)) order — the reference's stream walk."""
+    from gtfs2lc_spark import pipeline
+
+    times = [("8:00:00", "8:30:00", "9:00:00"), ("10:00:00", "10:30:00", "11:00:00")]
+    frames = {k: None for k in ("stop_times", "trips", "routes", "stops",
+                                "calendar", "calendar_dates")}
+
+    def add(name, frame):
+        frames[name] = frame if frames[name] is None else frames[name].unionByName(frame)
+
+    for i, (trips, flags) in enumerate(feeds):
+        fid = f"f{i}"
+        st_rows, trip_rows = [], []
+        for j, (path, pat, seqs, svc) in enumerate(trips):
+            trip_rows.append(("R", f"SV{svc}", f"T{j}"))
+            st_rows += [
+                (f"T{j}", times[pat][k], times[pat][k], stop, str(seqs[k]))
+                for k, stop in enumerate(path)
+            ]
+        add("stop_times", entity_frame(
+            "stop_times.txt",
+            ["trip_id", "arrival_time", "departure_time", "stop_id", "stop_sequence"],
+            st_rows, fid))
+        add("trips", entity_frame(
+            "trips.txt", ["route_id", "service_id", "trip_id"], trip_rows, fid))
+        add("routes", entity_frame(
+            "routes.txt", ["route_id", "route_long_name"], [("R", "Main Line")], fid))
+        add("stops", entity_frame(
+            "stops.txt", ["stop_id"], [("S1",), ("S2",), ("S3",)], fid))
+        add("calendar", entity_frame(
+            "calendar.txt",
+            ["service_id", "monday", "tuesday", "wednesday", "thursday", "friday",
+             "saturday", "sunday", "start_date", "end_date"],
+            [(f"SV{s}", *f, "20070101", "20070114") for s, f in enumerate(flags)],
+            fid))
+        add("calendar_dates", entity_frame(
+            "calendar_dates.txt", ["service_id", "date", "exception_type"], [], fid))
+
+    rules = pipeline.stop_times_to_rules(
+        frames["stop_times"], frames["trips"], frames["routes"], frames["stops"]
+    )
+    services = pipeline.expand_services(frames["calendar"], frames["calendar_dates"])
+    got = {
+        (r.feed_id, r.trip_id, r.stop_sequence, r.service_date)
+        for r in pipeline.rules_to_connections(rules, services, salt_n=4).collect()
+    }
+
+    dates = {(r.feed_id, r.service_id): r.dates for r in services.collect()}
+    seen, want = set(), set()
+    for r in sorted(rules.collect(),
+                    key=lambda r: (r.feed_id, r.trip_id, int(r.stop_sequence))):
+        for d in dates.get((r.feed_id, r.trip_service_id)) or []:
+            if (r.feed_id, r.unique_id, d) not in seen:
+                seen.add((r.feed_id, r.unique_id, d))
+                want.add((r.feed_id, r.trip_id, r.stop_sequence, d))
+    assert got == want
