@@ -21,6 +21,7 @@ from gtfs2lc_spark import extraction, fixtures, kg, oracle, pipeline, postproces
 from gtfs2lc_spark.datapipe import dedup, multimodal, packing, similarity, sketch, text, web
 from gtfs2lc_spark.datapipe import events as dp_events
 from gtfs2lc_spark.datapipe import stats as dp_stats
+from gtfs2lc_spark.materialize import materialize
 
 
 def _pin_utc(spark: SparkSession) -> None:
@@ -35,10 +36,16 @@ def _load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 def _fixture_connections(spark: SparkSession) -> DataFrame:
+    """The sample feed's connections, materialized: the KG queries read
+    them many times, and each read would otherwise re-plan the J7 and
+    explode exchanges."""
     dfs = fixtures.entity_dfs(spark)
-    return pipeline.convert(
-        dfs["stop_times"], dfs["trips"], dfs["routes"], dfs["stops"],
-        dfs["calendar"], dfs["calendar_dates"], salt_n=16,
+    return materialize(
+        pipeline.convert(
+            dfs["stop_times"], dfs["trips"], dfs["routes"], dfs["stops"],
+            dfs["calendar"], dfs["calendar_dates"], salt_n=16,
+        ),
+        "fixture-connections",
     )
 
 

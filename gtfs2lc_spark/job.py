@@ -30,6 +30,7 @@ from gtfs2lc_spark import FEED_TIMEZONE_DEFAULT, fixtures, pipeline, postprocess
 from gtfs2lc_spark import materialize as materialize_mod
 from gtfs2lc_spark.checkpoint import HistoryStore, convert_incremental
 from gtfs2lc_spark.extraction import extract_entities
+from gtfs2lc_spark.schemas import PAGES_SCHEMA
 from gtfs2lc_spark.session import build_session
 from gtfs2lc_spark.uris import URIStrategy
 
@@ -179,7 +180,9 @@ def run(spark: SparkSession, args: argparse.Namespace) -> dict:
         e = read_gtfs_dir(spark, args.gtfs_dir)
     else:
         if args.pages:
-            pages = spark.read.parquet(args.pages)
+            # the input contract fixes the five columns: a pinned schema
+            # skips the footer-inference job and resolves them by name
+            pages = spark.read.schema(PAGES_SCHEMA).parquet(args.pages)
         elif args.synthesize_feeds:
             pages = fixtures.pages_df_scaled(spark, args.synthesize_feeds, noise_pages=40)
         else:

@@ -31,9 +31,11 @@ and LevelDB; SURVEY.md §4):
   (``materialize``: a local checkpoint here, a reliable checkpoint or
   parquet staging on a cluster), as the reference writes its
   connection-rule shards once (SURVEY §3.1 step 3). The J7 dedupe reads
-  the rules three times and the services twice, so the W1 window and
-  its four dimension broadcasts run once instead of on every read. The
-  rules are pre-explode rows, ~180x fewer than the connections.
+  the rules three times, so the W1 window and its dimension broadcasts
+  run once instead of on every read. The rules are pre-explode rows,
+  ~180x fewer than the connections. The services are read once, by
+  the J4 lookup, which also carries each date's midnight epoch; their
+  materialization stays because dropping it measured no faster.
 """
 
 from __future__ import annotations
@@ -76,78 +78,73 @@ def expand_services(calendar: DataFrame, calendar_dates: DataFrame) -> DataFrame
     Semantics (lib/services/CalendarExpander.js:14-68):
     dates = added ∪ (days-in-[start,end] where weekday flag == '1' ∖ removed);
     services appearing only in calendar_dates keep just their added days
-    (the expander's _flush). Full-outer join reproduces both sides.
+    (the expander's _flush).
 
     Added days are placed first in the array, matching the reference's
-    insertion order (order is otherwise insignificant — consumers treat
-    it as a set).
-    """
-    # duplicate-keyed calendar rows: the reference expands each row and
-    # PUTs into servicesDB — last row per service_id wins
-    calendar = keep_last_per_key(calendar, "service_id")
+    insertion order. The order is load-bearing: the service-day explode
+    emits connections in array order, and that is the output row order.
 
-    # A1 — group exceptions per service (StoreManager.js:52-70)
-    exceptions = calendar_dates.groupBy("feed_id", "service_id").agg(
-        F.sort_array(
-            F.collect_set(F.when(F.col("exception_type") == "1", F.col("date")))
-        ).alias("added"),
-        F.sort_array(
-            F.collect_set(F.when(F.col("exception_type") == "2", F.col("date")))
-        ).alias("removed"),
+    One aggregate over the union of both files, grouped by
+    (feed_id, service_id): the service table is small and needs no joins.
+    """
+    flags = ("sunday", "monday", "tuesday", "wednesday", "thursday", "friday", "saturday")
+    cal = calendar.select(
+        "feed_id",
+        "service_id",
+        F.struct("start_date", "end_date", *flags).alias("_cal"),
+        F.struct("url", "_line").alias("_order"),
+    )
+    exc = calendar_dates.select("feed_id", "service_id", "date", "exception_type")
+
+    def dates_of(exception_type: str) -> Column:
+        return F.sort_array(
+            F.collect_set(F.when(F.col("exception_type") == exception_type, F.col("date")))
+        )
+
+    # duplicate-keyed calendar rows: the reference expands each row and
+    # PUTs into servicesDB, so the last row wins (url-major, see
+    # keep_last_per_key); exception rows carry a null order and never win
+    grouped = (
+        cal.unionByName(exc, allowMissingColumns=True)
+        .groupBy("feed_id", "service_id")
+        .agg(
+            F.max_by("_cal", "_order").alias("_cal"),
+            # A1 — exceptions per service (StoreManager.js:52-70)
+            dates_of("1").alias("added"),
+            dates_of("2").alias("removed"),
+        )
     )
 
     # A2 — enumerate [start_date, end_date], keep days whose weekday flag
-    # is '1'. Pure array expressions (sequence + filter + transform): the
-    # whole expansion is map-side — no explode/groupBy shuffle at all.
-    # dayofweek: 1=Sunday..7=Saturday
-    flags = F.array(
-        "sunday", "monday", "tuesday", "wednesday", "thursday", "friday", "saturday"
+    # is '1' (dayofweek: 1=Sunday..7=Saturday). The reference's loop
+    # (for d = start; d <= end; d++) runs zero iterations when end <
+    # start, but F.sequence THROWS on reversed boundaries, so reversed
+    # ranges and exception-only services (null _cal) get no days.
+    start_d = F.to_date("_cal.start_date", "yyyyMMdd")
+    end_d = F.to_date("_cal.end_date", "yyyyMMdd")
+    days = F.when(
+        start_d <= end_d, F.sequence(start_d, end_d, F.expr("interval 1 day"))
+    ).otherwise(F.array().cast("array<date>"))
+    flag_arr = F.array(*[F.col(f"_cal.{f}") for f in flags])
+    weekday_days = F.transform(
+        F.filter(days, lambda d: F.element_at(flag_arr, F.dayofweek(d)) == "1"),
+        lambda d: F.date_format(d, "yyyyMMdd"),
     )
-    # guard reversed/unparseable ranges: the reference's expansion loop
-    # (for d = start; d <= end; d++) runs zero iterations when
-    # end < start, but F.sequence THROWS on reversed boundaries — one
-    # malformed calendar row in one feed must not kill a corpus run
-    start_d, end_d = F.to_date("start_date", "yyyyMMdd"), F.to_date("end_date", "yyyyMMdd")
-    days = F.when(start_d <= end_d, F.sequence(start_d, end_d, F.expr("interval 1 day"))).otherwise(
-        F.array().cast("array<date>")
-    )
-    weekday_days = calendar.select(
+    # J5 — added first, then the weekday days not removed
+    return grouped.select(
         "feed_id",
         "service_id",
-        F.transform(
-            F.filter(days, lambda d: F.element_at(flags, F.dayofweek(d)) == "1"),
-            lambda d: F.date_format(d, "yyyyMMdd"),
-        ).alias("weekday_days"),
+        F.array_union("added", F.array_except(weekday_days, "removed")).alias("dates"),
     )
 
-    # J5 — full-outer SEMANTICS without a full-outer JOIN: a full outer
-    # forces a sort-merge exchange on both sides, but both directions
-    # are broadcast-able separately: calendars LEFT-broadcast-join their
-    # exceptions, and exception-only services (the expander's _flush,
-    # CalendarExpander.js:57-68) come from a broadcast anti-join.
-    empty = F.array().cast("array<string>")
-    with_exc = weekday_days.join(
-        F.broadcast(exceptions), ["feed_id", "service_id"], "left"
-    ).select(
-        "feed_id",
-        "service_id",
-        F.array_union(
-            F.coalesce("added", empty),
-            F.array_except(F.col("weekday_days"), F.coalesce("removed", empty)),
-        ).alias("dates"),
-    )
-    flush = exceptions.join(
-        F.broadcast(calendar.select("feed_id", "service_id").distinct()),
-        ["feed_id", "service_id"],
-        "left_anti",
-    ).select("feed_id", "service_id", F.col("added").alias("dates"))
-    return with_exc.unionByName(flush)
 
-
-def keep_last_per_key(df: DataFrame, *key_cols: str) -> DataFrame:
-    """One row per (feed_id, *key_cols), reproducing the reference's
-    key->row store semantics: LevelDB ``put`` overwrites, so the LAST
-    row in stream (file) order wins (lib/stores/StoreManager.js:8-35).
+def keep_last_per_key(df: DataFrame, key: str) -> DataFrame:
+    """(feed_id, _key, _row): one row per (feed_id, ``key``), ``_row``
+    a struct of ``key`` and every other data column, reproducing the
+    reference's key->row store semantics: LevelDB ``put`` overwrites, so
+    the LAST row in stream (file) order wins (lib/stores/StoreManager.js:
+    8-35). A dimension file with a duplicated key thus yields ONE lookup
+    row and never multiplies the fact join.
 
     Order is URL-MAJOR: for a dimension file spanning multiple pages,
     rows of the lexicographically greatest url win first, with the
@@ -156,15 +153,9 @@ def keep_last_per_key(df: DataFrame, *key_cols: str) -> DataFrame:
     (Page urls carry no reference-defined ordering; url-major is the
     pinned deterministic choice.) Every entity table carries ``url``
     and ``_line`` (extraction, ``sources.read_gtfs_dir``, fixtures)."""
-    data = [c for c in df.columns if c != "feed_id" and c not in key_cols]
-    row = F.struct(*[F.col(c).alias(c) for c in data])
-    order = F.struct(F.col("url"), F.col("_line"))
-    return (
-        df.groupBy("feed_id", *key_cols)
-        .agg(F.max_by(row, order).alias("_row"))
-        .select(
-            "feed_id", *key_cols, *[F.col(f"_row.{c}").alias(c) for c in data]
-        )
+    data = [key] + [c for c in df.columns if c not in ("feed_id", "url", "_line", key)]
+    return df.groupBy("feed_id", F.col(key).alias("_key")).agg(
+        F.max_by(F.struct(*data), F.struct("url", "_line")).alias("_row")
     )
 
 
@@ -215,49 +206,40 @@ def stop_times_to_rules(
         ~((F.col("arrival_time") == "") & (F.col("departure_time") == ""))
     )
 
-    # J1-J3 — dimension lookups. Prefixed copies of every dim column plus
-    # a join-key column named exactly like the fact side, so the joins are
-    # name-equi (keys dedupe automatically) and all stay broadcast.
-    #
-    # The reference's stores are key->row MAPS (LevelDB put: the LAST
-    # row per key wins, StoreManager.js:8-35) — a dimension file with a
-    # duplicated key must yield ONE lookup row, not multiply the fact
-    # join. keep_last_per_key reproduces that with a tiny aggregation
-    # on the (small, broadcast-side) dimension.
-    def dim(df: DataFrame, prefix: str, key_src: str, key_as: str) -> DataFrame:
-        picked = keep_last_per_key(df, key_src)
-        return picked.select(
-            "feed_id",
-            F.col(key_src).alias(key_as),
-            *[
-                F.col(c).alias(f"{prefix}{c}")
-                for c in picked.columns
-                if c not in ("feed_id", "url", "_line")
-            ],
+    # J1-J3 — dimension lookups, all broadcast. Each dimension is built
+    # once as (feed_id, _key, _row) and joined as is under a role alias,
+    # so the two stops roles plan the same broadcast and the second is a
+    # ReusedExchange of the first.
+    stops_d = keep_last_per_key(stops, "stop_id")
+    trips_d = keep_last_per_key(trips, "trip_id")
+    routes_d = keep_last_per_key(routes, "route_id")
+    roles = (
+        ("dep", stops_d, "f.prev_stop_id"),
+        ("arr", stops_d, "f.stop_id"),
+        ("trip", trips_d, "f.trip_id"),
+        ("route", routes_d, "trip._row.route_id"),
+    )
+    enriched = rules.alias("f")
+    for role, d, fact_key in roles:
+        enriched = enriched.join(
+            F.broadcast(d.alias(role)),
+            (F.col("f.feed_id") == F.col(f"{role}.feed_id"))
+            & (F.col(fact_key) == F.col(f"{role}._key")),
         )
 
-    enriched = (
-        rules.join(F.broadcast(dim(stops, "dep_", "stop_id", "prev_stop_id")), ["feed_id", "prev_stop_id"], "inner")
-        .join(F.broadcast(dim(stops, "arr_", "stop_id", "stop_id")), ["feed_id", "stop_id"], "inner")
-        .join(F.broadcast(dim(trips, "trip_", "trip_id", "trip_id")), ["feed_id", "trip_id"], "inner")
-        .withColumn("route_key", F.col("trip_route_id"))
-        .join(F.broadcast(dim(routes, "route_", "route_id", "route_key")), ["feed_id", "route_key"], "inner")
-        .drop("route_key")
-    )
-
     # P3 — stop_code fallback ids (only used inside uniqueId)
-    def code_or_id(prefix: str) -> Column:
+    def code_or_id(role: str) -> Column:
         return F.coalesce(
-            _nullif_empty(F.col(f"{prefix}stop_code")), F.col(f"{prefix}stop_id")
+            _nullif_empty(F.col(f"{role}._row.stop_code")), F.col(f"{role}._row.stop_id")
         )
 
     # P4 — rule uniqueId (st2c.js:78-89); JS Array.join renders null as ''
     unique_id = F.concat_ws(
         "/",
-        F.regexp_replace(_blank(F.col("route_route_long_name")), r"\s", ""),
-        _blank(F.col("trip_trip_short_name")),
-        code_or_id("dep_"),
-        code_or_id("arr_"),
+        F.regexp_replace(_blank(F.col("route._row.route_long_name")), r"\s", ""),
+        _blank(F.col("trip._row.trip_short_name")),
+        code_or_id("dep"),
+        code_or_id("arr"),
         _blank(F.col("trip_start_dfm")),
         _blank(F.col("prev_departure_time")),
         _blank(F.col("arrival_time")),
@@ -266,8 +248,8 @@ def stop_times_to_rules(
     )
 
     return enriched.select(
-        "feed_id",
-        "trip_id",
+        "f.feed_id",
+        "f.trip_id",
         F.col("trip_start_dfm"),
         F.col("prev_departure_time").alias("departure_dfm"),
         F.col("arrival_time").alias("arrival_dfm"),
@@ -279,15 +261,15 @@ def stop_times_to_rules(
         # row's stop_headsign comes first there, but stops.txt has no
         # such column (SURVEY §2 P2), so trip_headsign -> route_long_name
         F.coalesce(
-            _nullif_empty(F.col("trip_trip_headsign")),
-            _nullif_empty(F.col("route_route_long_name")),
+            _nullif_empty(F.col("trip._row.trip_headsign")),
+            _nullif_empty(F.col("route._row.route_long_name")),
         ).alias("headsign"),
         unique_id.alias("unique_id"),
+        # flattened to the dep_*/arr_*/trip_*/route_* column contract
         *[
-            c
-            for c in enriched.columns
-            if c.startswith(("dep_", "arr_", "trip_", "route_"))
-            and c not in ("trip_id", "trip_start_dfm")
+            F.col(f"{role}._row.{f}").alias(f"{role}_{f}")
+            for role, d, _ in roles
+            for f in d.schema["_row"].dataType.names
         ],
     )
 
@@ -346,18 +328,36 @@ def rules_to_connections(
     Shuffle cost: rules only — the exploded connections never shuffle.
     """
     # J4 — service-dates lookup: left join + empty default (st2c.js:124);
-    # services is a tiny dimension -> broadcast, no fact-side shuffle
+    # services is a tiny dimension -> broadcast, no fact-side shuffle.
+    # Each date rides with the epoch of its local midnight in feed_tz,
+    # computed here once per (service, date) on the broadcast side
+    # instead of per connection; the fact side then pays one long add per
+    # timestamp. Unparseable date strings fail loudly under ANSI mode.
+    def with_midnight(d: Column) -> Column:
+        mid_ep = F.unix_timestamp(F.to_utc_timestamp(F.to_timestamp(d, "yyyyMMdd"), feed_tz))
+        return F.struct(d.alias("service_date"), mid_ep.alias("_mid_ep"))
+
     with_dates = (
         rules.withColumn("service_id_key", F.col("trip_service_id"))
         .join(
-            F.broadcast(services.withColumnRenamed("service_id", "service_id_key")),
+            F.broadcast(
+                services.select(
+                    "feed_id",
+                    F.col("service_id").alias("service_id_key"),
+                    F.transform("dates", with_midnight).alias("dates"),
+                )
+            ),
             ["feed_id", "service_id_key"],
             "left",
         )
         .drop("service_id_key")
     )
     n_parts = _shuffle_partitions(rules)
-    empty = F.array().cast("array<string>")
+    # explode(coalesce(dates, [])), not explode(dates): the latter infers
+    # a size(dates) > 0 filter that is pushed into each branch's services
+    # broadcast differently, so the clean and the dirty branch no longer
+    # share one broadcast (one more job per call)
+    empty = F.array().cast("array<struct<service_date:string,_mid_ep:bigint>>")
     # J7 fresh-run semantics (st2c.js:134-181): each (uniqueId, service
     # date) is emitted once, by the first rule in (trip_id,
     # stop_sequence) order — the cleaner's stream order
@@ -428,54 +428,16 @@ def rules_to_connections(
             n_parts, F.col("feed_id"), F.col("trip_id")
         )
 
-    exploded = with_dates.withColumn(
-        "service_date",
-        F.explode(F.coalesce("dates", empty)),
-    ).drop("dates")
-
-    # local midnight of service day in feed tz, as absolute instant.
-    # r6 (guide §2.3): service_date values repeat massively post-explode
-    # (a corpus year has ~365 distinct days, each exploded onto ~10^4-
-    # 10^6 connections), so the yyyyMMdd parse + timezone conversion is
-    # computed once per DISTINCT date in a tiny broadcast dimension and
-    # attached with a hash probe, instead of re-running java.time
-    # parsing per connection. LEFT join so a date value absent from the
-    # dim (impossible by construction — the dim is the distinct of the
-    # same arrays — but belt-and-braces) yields null timestamps rather
-    # than dropping rows; the dim is distinct, so the join never
-    # multiplies. Unparseable date STRINGS throw under ANSI mode in
-    # both this and the old inline shape (verified parity r6) — same
-    # loud failure, now once per distinct value instead of per row.
-    dates_dim = (
-        services.select(F.explode("dates").alias("service_date"))
-        .distinct()
-        .withColumn(
-            "_mid_ep",
-            F.unix_timestamp(
-                F.to_utc_timestamp(F.to_timestamp("service_date", "yyyyMMdd"), feed_tz)
-            ),
-        )
+    helper_cols = ("_dep_s", "_arr_s", "_start_s", "dates")
+    mid_ep = F.col("_sd._mid_ep")
+    exploded = with_dates.select("*", F.explode(F.coalesce("dates", empty)).alias("_sd"))
+    return exploded.select(
+        *[c for c in with_dates.columns if c not in helper_cols],
+        F.col("_sd.service_date").alias("service_date"),
+        F.timestamp_seconds(mid_ep + F.col("_dep_s")).alias("departure_ts"),
+        F.timestamp_seconds(mid_ep + F.col("_arr_s")).alias("arrival_ts"),
+        F.timestamp_seconds(mid_ep + F.col("_start_s")).alias("trip_start_ts"),
     )
-    helper_cols = ("_dep_s", "_arr_s", "_start_s")
-    out_cols = [c for c in exploded.columns if c not in helper_cols]
-    conns = (
-        exploded.join(F.broadcast(dates_dim), "service_date", "left")
-        .withColumn(
-            "departure_ts",
-            F.timestamp_seconds(F.col("_mid_ep") + F.col("_dep_s")),
-        )
-        .withColumn(
-            "arrival_ts",
-            F.timestamp_seconds(F.col("_mid_ep") + F.col("_arr_s")),
-        )
-        .withColumn(
-            "trip_start_ts",
-            F.timestamp_seconds(F.col("_mid_ep") + F.col("_start_s")),
-        )
-        .select(*out_cols, "departure_ts", "arrival_ts", "trip_start_ts")
-    )
-
-    return conns
 
 
 def dimension_quarantine(
@@ -537,14 +499,15 @@ def convert(
     """Full entity-tables -> connections pipeline (reference §3.1 steps
     2-4).
 
-    The rule table and the service table are materialized here, once
-    (two Spark jobs at call time); the returned connections are lazy.
-    ``rules_to_connections`` reads the rules three times (J7 duplicate
-    count, clean anti-probe, dirty semi-probe) and the services twice
-    (J4 lookup, date dimension); materialized, the W1 window and its
-    dimension broadcasts run once rather than under each read, and the
+    The rule table and the service table are materialized here, once;
+    the returned connections are lazy. ``rules_to_connections`` reads
+    the rules three times (J7 duplicate count, clean anti-probe, dirty
+    semi-probe); materialized, the W1 window and its dimension
+    broadcasts run once rather than under each read, and the
     connections' plan holds no Window: it starts at the materialized
-    rules."""
+    rules. The services are read once (the J4 lookup); dropping their
+    materialization measured no faster on a cold job.run (ROADMAP,
+    negative results), so it stays."""
     services = materialize(expand_services(calendar, calendar_dates), "services")
     rules = materialize(stop_times_to_rules(stop_times, trips, routes, stops), "rules")
     return rules_to_connections(rules, services, feed_tz, salt_n)

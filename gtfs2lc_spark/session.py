@@ -81,6 +81,15 @@ def build_session(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         # python workers cost ~1.5s CPU each to import pandas; reuse them
         .config("spark.python.worker.reuse", "true")
+        # PySpark's DataFrame call-site capture (on by default) wraps every
+        # functions/Column call in an active-session lookup, a conf read,
+        # a Python stack walk and two JVM PySparkCurrentOrigin calls. Off,
+        # a cold job.run of the sample-feed pages (fixtures.pages_df with
+        # 10 noise pages) makes 6,367 py4j round trips instead of 12,558.
+        # The cost: runtime errors lose the Python file:line DataFrame
+        # context. PySpark caches the value for the process on first use,
+        # so it is set here, at session build.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # dimension tables (stops/routes/trips/services) are always small
         # relative to stop_times/pages; raise the broadcast ceiling a bit.
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))

@@ -273,3 +273,58 @@ def test_message_counter_flag(spark, tmp_path):
     n_subj = tp.select("subj").distinct().count()
     mc = sorted(r.message_counter for r in tp.select("message_counter").distinct().collect())
     assert mc == list(range(n_subj))  # dense, 0-based, unique per subject
+
+
+@pytest.fixture(scope="module")
+def pages_dir(spark, tmp_path_factory):
+    from gtfs2lc_spark import fixtures
+
+    d = str(tmp_path_factory.mktemp("pages") / "pq")
+    fixtures.pages_df(spark, noise_pages=10).write.parquet(d)
+    return d
+
+
+def _run_pages(spark, pages, out):
+    job.run(spark, job.parse_args(
+        ["--pages", pages, "--output", out, "--format", "triples-parquet"]
+    ))
+    return out
+
+
+def _triples(spark, out):
+    return sorted(tuple(r) for r in spark.read.parquet(out).collect())
+
+
+def test_pages_run_job_count(spark, pages_dir, tmp_path):
+    """Spark jobs per pages-to-triples call, first and repeat: detection
+    (3), header collect (3), the service (2) and rule (8) materializations,
+    and the connections' services broadcast, J7 duplicate-key shuffle and
+    broadcast, salt shuffle and write (5). The pinned pages schema needs
+    no footer-inference job, the date epochs ride the service lookup, and
+    the two stops roles share one broadcast."""
+    sc = spark.sparkContext
+    counts = []
+    try:
+        for i in range(2):
+            group = f"job-count-{i}"
+            sc.setJobGroup(group, group)
+            _run_pages(spark, pages_dir, str(tmp_path / f"out{i}"))
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            counts.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert counts == [21, 21]
+
+
+def test_pages_read_by_column_name(spark, pages_dir, tmp_path):
+    """The pinned pages schema resolves columns by name: reordered
+    columns plus an extra column give identical triples."""
+    shuffled = str(tmp_path / "shuffled")
+    (
+        spark.read.parquet(pages_dir)
+        .select("lang", "text", F.lit("x").alias("extra"), "warc_ts", "html", "url")
+        .write.parquet(shuffled)
+    )
+    want = _triples(spark, _run_pages(spark, pages_dir, str(tmp_path / "a")))
+    assert len(want) == 29992
+    assert _triples(spark, _run_pages(spark, shuffled, str(tmp_path / "b"))) == want

@@ -307,3 +307,85 @@ def test_j7_first_rule_wins_matches_stream_model(entity_frame, feeds):
                 seen.add((r.feed_id, r.unique_id, d))
                 want.add((r.feed_id, r.trip_id, r.stop_sequence, d))
     assert got == want
+
+
+_DAYS = [f"200701{d:02d}" for d in range(1, 22)]
+_CAL_ROW = st.tuples(
+    st.sampled_from(["f0", "f1"]),
+    st.sampled_from(["A", "B", "C"]),
+    st.tuples(*[st.sampled_from("01")] * 7),  # monday..sunday
+    st.sampled_from(_DAYS),  # start_date
+    st.sampled_from(_DAYS),  # end_date: reversed ranges included
+    st.sampled_from(["u1", "u2"]),
+)
+_CAL_DATE_ROW = st.tuples(
+    st.sampled_from(["f0", "f1"]),
+    st.sampled_from(["A", "B", "C", "D"]),  # D: exception-only
+    st.sampled_from(_DAYS),
+    st.sampled_from(["1", "2", "0", "3", ""]),
+)
+
+
+def _calendar_expander_model(cal_rows, date_rows):
+    """CalendarExpander.js:14-68 over (feed, service): the last calendar
+    row in (url, line) order wins; dates = added days (sorted), then the
+    range's weekday-flagged days that are neither removed nor added."""
+    import datetime as dt
+
+    def day(s):
+        return dt.date(int(s[:4]), int(s[4:6]), int(s[6:]))
+
+    last = {}
+    for line, (fid, sid, flags, start, end, url) in enumerate(cal_rows):
+        key = (fid, sid)
+        if key not in last or (url, line) > last[key][0]:
+            last[key] = ((url, line), flags, start, end)
+    keys = set(last) | {(fid, sid) for fid, sid, _, _ in date_rows}
+    out = {}
+    for key in keys:
+        added = sorted({d for f, s, d, t in date_rows if (f, s) == key and t == "1"})
+        removed = {d for f, s, d, t in date_rows if (f, s) == key and t == "2"}
+        days = []
+        if key in last:
+            _, flags, start, end = last[key]
+            d = day(start)
+            while d <= day(end):
+                if flags[d.weekday()] == "1":  # flags are monday-first
+                    days.append(d.strftime("%Y%m%d"))
+                d += dt.timedelta(days=1)
+        out[key] = added + [d for d in days if d not in removed and d not in added]
+    return out
+
+
+@_SET
+@given(
+    cal_rows=st.lists(_CAL_ROW, max_size=6),
+    date_rows=st.lists(_CAL_DATE_ROW, max_size=10),
+    remove_all=st.lists(st.sampled_from(["A", "B", "C"]), max_size=1),
+)
+def test_expand_services_matches_calendar_expander(spark, cal_rows, date_rows, remove_all):
+    """expand_services against a pure-Python CalendarExpander on
+    calendar-only and exception-only services, services with every day
+    removed, reversed ranges, a service_id repeated across urls and
+    lines, and exception types outside {1, 2}. Dates compare as ORDERED
+    lists: their order is the explode's, hence the output row order."""
+    from gtfs2lc_spark import pipeline
+    from gtfs2lc_spark.schemas import CALENDAR_COLS, CALENDAR_DATES_COLS, _string_struct
+
+    date_rows = date_rows + [("f0", s, d, "2") for s in remove_all for d in _DAYS]
+    cal = spark.createDataFrame(
+        [
+            (sid, *flags, start, end, fid, url, line)
+            for line, (fid, sid, flags, start, end, url) in enumerate(cal_rows)
+        ],
+        _string_struct(*CALENDAR_COLS, "feed_id", "url").add("_line", "long"),
+    )
+    cd = spark.createDataFrame(
+        [(sid, d, t, fid, "u", line) for line, (fid, sid, d, t) in enumerate(date_rows)],
+        _string_struct(*CALENDAR_DATES_COLS, "feed_id", "url").add("_line", "long"),
+    )
+    got = {
+        (r.feed_id, r.service_id): list(r.dates)
+        for r in pipeline.expand_services(cal, cd).collect()
+    }
+    assert got == _calendar_expander_model(cal_rows, date_rows)
