@@ -1784,9 +1784,11 @@ def _q_embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """int8-style scalar quantization: per-dimension corpus min/max
     grid (broadcast), floor(+0.5) code mapping (engine-identical
     rounding), codes reassembled + worst-case dequantization error in
-    one vec-keyed pass."""
+    one vec-keyed pass. The code array is rendered as one
+    comma-joined string so every gate column is atomic."""
     e = _load(spark, sf_dir, "embeddings")
-    return similarity.quantize_embeddings(e, levels=255)
+    q = similarity.quantize_embeddings(e, levels=255)
+    return q.withColumn("qvec", F.array_join(F.col("qvec").cast("array<string>"), ","))
 
 
 def _q_char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4174,8 +4176,9 @@ def oracle_sql() -> dict[str, str]:
               FROM q
             )
             SELECT vec_id,
-                   list_transform(
-                     list_sort(list(ROW(pos, code))), s -> s[2]) AS qvec,
+                   array_to_string(list_transform(
+                     list_sort(list(ROW(pos, code))),
+                     s -> CAST(s[2] AS VARCHAR)), ',') AS qvec,
                    round(max(err), 6) AS max_abs_err
             FROM d GROUP BY vec_id
         """,

@@ -14,7 +14,9 @@ Design for 100 TB:
 2. Detection itself is a **vectorized pandas UDF** (input_hint mandates
    Arrow/pandas, never per-row Python): pure string function of
    ``text`` — byte-identical output per url, run-to-run (the per-row
-   invariant; tested in tests/test_extraction.py).
+   invariant; tested in tests/test_extraction.py). It runs once per
+   marker page, in one Python stage behind a url-hashed shuffle that
+   AQE sizes by the marker bytes (``detect_pages`` says why).
 3. CSV parsing is back on the JVM: split body into lines, explode,
    ``from_csv`` with the pinned all-string schema — whole-stage
    codegen, proper quote handling, zero Python in the per-row hot path.
@@ -81,39 +83,44 @@ def detect_gtfs(text: pd.Series) -> pd.DataFrame:
 
 def detect_pages(pages: DataFrame) -> DataFrame:
     """pages -> (url, warc_ts, gtfs_file, feed_id, header, body), one
-    row per url (newest crawl wins), GTFS pages only.
+    row per url (newest detected crawl wins), GTFS pages only.
 
-    The pandas-UDF stage runs ``defaultParallelism`` tasks. Every Python
-    task costs a worker spin-up (pandas import ≈ 1.5 s CPU), so the UDF
-    stage should run exactly one task per core — the cheap JVM
-    prefilter can stay as parallel as the scan likes.
+    The detector runs once per prefiltered page. Filtering on its result
+    before the aggregate would let Catalyst push that filter through
+    the shuffle into the scan stage and plan the UDF twice (once there,
+    once for the projection). Instead every prefiltered page keeps a
+    ``hit`` flag, which leads the newest-crawl struct, and the filter
+    tests the aggregate's result, which cannot move below the shuffle.
+
+    The url shuffle has no fixed partition count, so AQE may coalesce
+    it: the Python stage gets min(cores, marker MB) tasks (``parallelismFirst`` with a 1 MB
+    minimum partition). Each task can start a Python worker of about
+    120 MB, so small inputs run one worker, not one per core.
     """
     prefiltered = pages.where(F.col("text").startswith(GTFS_MARKER)).select(
         "url", "warc_ts", "text"
-    )
-    prefiltered = prefiltered.repartition(
-        pages.sparkSession.sparkContext.defaultParallelism
-    )
-    det = (
-        prefiltered.withColumn("g", detect_gtfs("text"))
-        .where(F.col("g.gtfs_file").isNotNull())
-        .select("url", "warc_ts", "g.gtfs_file", "g.feed_id", "g.header", "g.body")
     )
     # Common-Crawl-style input re-crawls pages: the NEWEST crawl of a
     # url must replace older ones, or every duplicated stop_times page
     # doubles its rows and the lag window pairs garbage (the streaming
     # path already dedups its staging per url; this is the batch-path
-    # equivalent). Deterministic: ties on warc_ts resolve by content.
-    # Runs on the post-detection set (~orders of magnitude smaller than
-    # pages), one small shuffle.
+    # equivalent). ``hit`` leads the struct, so a detected crawl beats
+    # any near miss; a url with no detected crawl is dropped after the
+    # aggregate. Deterministic: ties on warc_ts resolve by content.
     return (
-        det.groupBy("url")
+        prefiltered.repartition("url")
+        .withColumn("g", detect_gtfs("text"))
+        .groupBy("url")
         .agg(
             F.max(
-                F.struct("warc_ts", "gtfs_file", "feed_id", "header", "body")
+                F.struct(
+                    F.col("g.gtfs_file").isNotNull().alias("hit"),
+                    "warc_ts", "g.gtfs_file", "g.feed_id", "g.header", "g.body",
+                )
             ).alias("_s")
         )
-        .select("url", "_s.*")
+        .where("_s.hit")
+        .select("url", "_s.warc_ts", "_s.gtfs_file", "_s.feed_id", "_s.header", "_s.body")
     )
 
 

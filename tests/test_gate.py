@@ -1,0 +1,32 @@
+"""Every gate query and its DuckDB oracle return atomic columns only.
+
+The gate canonicalizes each output cell to a scalar value before it
+hashes a table, so an array, map or struct column cannot be compared
+(an array-typed column once made a gate row crash instead of match)."""
+
+from pathlib import Path
+
+import duckdb
+from pyspark.sql import types as T
+
+import __spark_entry__ as entry
+
+SF = "/root/testdata/sf0.001"
+NESTED = (T.ArrayType, T.MapType, T.StructType)
+
+
+def test_gate_outputs_are_atomic(spark):
+    con = duckdb.connect()
+    for f in Path(SF).glob("*.parquet"):
+        con.execute(f"CREATE VIEW {f.stem} AS SELECT * FROM read_parquet('{f}')")
+    oracles = entry.oracle_sql()
+    bad = []
+    for name, fn in entry.queries().items():
+        for f in fn(spark, SF).schema.fields:
+            if isinstance(f.dataType, NESTED):
+                bad.append((name, "spark", f.name, f.dataType.simpleString()))
+        rel = con.sql(oracles[name])
+        for col, typ in zip(rel.columns, rel.types):
+            if typ.id in ("list", "array", "map", "struct", "union"):
+                bad.append((name, "oracle", col, str(typ)))
+    assert not bad, bad

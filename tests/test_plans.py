@@ -29,6 +29,18 @@ def test_scan_pushdown_and_pruning(spark, pages_parquet):
     assert "html" not in scan_line
 
 
+def test_detector_runs_once_behind_a_hash_exchange(spark, pages_parquet):
+    """The pandas-UDF detector is planned once: its hit filter tests the
+    newest-crawl aggregate, so Catalyst cannot push a second copy of the
+    UDF into the scan stage. The Python stage sits behind the url-hashed
+    exchange (AQE-coalescable), not a fixed round-robin one."""
+    det = extraction.detect_pages(spark.read.parquet(pages_parquet))
+    det.collect()
+    final = _executed_plan(det).split("== Initial Plan ==")[0]
+    assert final.count("ArrowEvalPython") == 1, final
+    assert "RoundRobinPartitioning" not in final, final
+
+
 def test_embedding_neardup_plan_has_no_cartesian(spark):
     """The blocked near-dup must stay equi-join-only: no all-pairs
     CartesianProduct/BroadcastNestedLoopJoin anywhere in the plan
