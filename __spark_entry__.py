@@ -45,7 +45,6 @@ def _fixture_connections(spark: SparkSession) -> DataFrame:
             dfs["stop_times"], dfs["trips"], dfs["routes"], dfs["stops"],
             dfs["calendar"], dfs["calendar_dates"], salt_n=16,
         ),
-        "fixture-connections",
     )
 
 

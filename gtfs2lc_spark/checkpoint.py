@@ -7,7 +7,11 @@ resets it (lib/stoptimes/StopTimes2Cxs.js:17-27).
 
 Spark-native design (an Iceberg-shaped snapshot log on parquet — the
 sandbox has no Iceberg runtime jar, but the layout mirrors Iceberg's
-append-only snapshot model and the code is storage-agnostic):
+append-only snapshot model). The data files go through Spark, but the
+commit markers, listings and sweeps are plain ``os``/``shutil`` file
+I/O, so the store lives on the local filesystem only: a ``file:`` URI
+or a scheme-less path under a ``file:`` ``fs.defaultFS``; any other
+path is rejected when the store is built.
 
 - ``history/snapshot=N/*.parquet`` — ONLY the pairs first emitted by
   run N (append-only log; loading = union of all snapshots). At 100 TB
@@ -30,6 +34,7 @@ import os
 import shutil
 import time
 from dataclasses import dataclass
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -37,6 +42,25 @@ from pyspark.sql import functions as F
 from .materialize import materialize
 
 PAIR_COLS = ("feed_id", "unique_id", "service_date")
+
+
+def _local_path(spark: SparkSession, path: str) -> str:
+    """``path`` as a local filesystem path: a ``file:`` URI maps to its
+    path; a scheme-less path stays as is when ``fs.defaultFS`` (which
+    Spark resolves it against) is ``file:``. Anything else raises."""
+    uri = urlparse(path)
+    if uri.scheme == "file":
+        return unquote(uri.path)
+    if not uri.scheme:
+        default_fs = spark.sparkContext._jsc.hadoopConfiguration().get(
+            "fs.defaultFS", "file:///"
+        )
+        if urlparse(default_fs).scheme == "file":
+            return path
+    raise ValueError(
+        f"HistoryStore path {path!r} is not on the local filesystem; "
+        "its commit markers use local file I/O"
+    )
 
 
 @dataclass
@@ -61,7 +85,7 @@ class HistoryStore:
         key_cols: tuple[str, ...] = PAIR_COLS,
     ):
         self.spark = spark
-        self.path = path
+        self.path = _local_path(spark, path)
         self.key_cols = tuple(key_cols)
 
     # -- snapshot bookkeeping -------------------------------------------------
@@ -365,9 +389,7 @@ def convert_incremental(
     """Full incremental conversion step: anti-join against history, emit
     the delta, commit it as a new snapshot. Returns (delta, snapshot).
 
-    The delta is materialized ONCE (``materialize``, strategy set by
-    spark.gtfs2lc.materialize — local checkpoint in the sandbox,
-    reliable checkpoint / parquet staging on a cluster) before the
+    The delta is materialized ONCE (``materialize``) before the
     commit: it has two consumers — the snapshot write here and the
     caller's output write — and without the cut each would re-execute
     the whole extraction+conversion+anti-join DAG (the streaming path
@@ -375,6 +397,6 @@ def convert_incremental(
     """
     if fresh:
         store.fresh()
-    delta = materialize(store.differential(connections), "j7-delta")
+    delta = materialize(store.differential(connections))
     snap = store.commit(delta, run_info)
     return delta, snap

@@ -231,11 +231,11 @@ def connected_components(
     shallow: duplicates of a common source — single digits in
     practice); each round's result is cut through ``materialize()`` so
     the plan stays flat AND the session's fault-tolerance strategy
-    (``spark.gtfs2lc.materialize = local|reliable|parquet``) governs
-    the loop — on a real cluster the ``reliable``/``parquet``
-    strategies survive executor loss mid-iteration, which a raw
-    localCheckpoint would not. Deterministic, and exactly reproducible
-    by the DuckDB oracle's recursive reachability CTE.
+    (``spark.gtfs2lc.materialize = local|reliable``) governs the loop
+    — on a real cluster the ``reliable`` strategy survives executor
+    loss mid-iteration, which a raw localCheckpoint would not.
+    Deterministic, and exactly reproducible by the DuckDB oracle's
+    recursive reachability CTE.
 
     Rounds needed = component diameter: if ``max_iters`` is exhausted
     with labels still changing (a chain-shaped cluster longer than
@@ -252,13 +252,11 @@ def connected_components(
         pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
         .unionByName(pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
         .distinct(),
-        label="cc-edges",
     )
     labels = materialize(
         edges.select(F.col("src").alias("id"))
         .distinct()
         .withColumn("label", F.col("id")),
-        label="cc-labels",
     )
     def propagate(labels: DataFrame) -> tuple[DataFrame, int]:
         neighbor_min = (
@@ -272,7 +270,6 @@ def connected_components(
                 "id",
                 F.least(F.col("label"), F.coalesce("nmin", F.col("label"))).alias("label"),
             ),
-            label="cc-round",
         )
         changed = (
             new_labels.alias("n")
@@ -609,7 +606,7 @@ def duplicated_spans(
     if materialize_positions:
         from ..materialize import materialize
 
-        sh = materialize(sh, "dup-spans-positions")
+        sh = materialize(sh)
     if hash_prefilter:
         dup_h = (
             sh.groupBy(F.xxhash64("_s").alias("_h"))

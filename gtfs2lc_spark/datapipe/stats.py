@@ -50,7 +50,8 @@ def chi_square(
     determinism is unaffected). NULL categories are excluded.
 
     Output: ONE row ``(chi2, dof, n, n_rows, n_cols)`` — chi2 rounded
-    6 dp, dof = (|rows|-1)(|cols|-1). P-values need the chi-square CDF
+    6 dp (NULL on an empty grid, like the oracle's SQL sum over no
+    terms), dof = (|rows|-1)(|cols|-1). P-values need the chi-square CDF
     (no closed form; engines disagree in the last ulps), so the
     statistic + dof are the contract — compare against the caller's
     critical value.
@@ -83,7 +84,7 @@ def chi_square(
         arr, F.lit(0.0), lambda acc, x: acc + x["_t"]
     )
     return grid.groupBy().agg(
-        F.round(folded, 6).alias("chi2"),
+        F.when(F.count(F.lit(1)) > 0, F.round(folded, 6)).alias("chi2"),
         (
             (F.count_distinct("_r") - 1) * (F.count_distinct("_c") - 1)
         ).cast("long").alias("dof"),

@@ -132,9 +132,7 @@ def extract_entities(pages: DataFrame) -> dict[str, DataFrame]:
     (lib/stores/StoreManager.js:56,72-75).
 
     The detected-pages intermediate is materialized ONCE
-    (``materialize``; local checkpoint by default, reliable checkpoint /
-    parquet staging via spark.gtfs2lc.materialize on a cluster). Two
-    reasons, both load-bearing:
+    (``materialize``). Two reasons, both load-bearing:
 
     1. Catalyst does not share common sub-plans: the six entity
        lineages (and every downstream job) would each re-run the pages
@@ -151,7 +149,7 @@ def extract_entities(pages: DataFrame) -> dict[str, DataFrame]:
     (SURVEY.md §3.1 step 3). For the lazy plan, call
     ``entities_from_detected(detect_pages(pages))``.
     """
-    detected = materialize(detect_pages(pages), "detected-pages")
+    detected = materialize(detect_pages(pages))
     return entities_from_detected(detected)
 
 

@@ -27,7 +27,6 @@ from pyspark.sql import DataFrame, SparkSession  # noqa: F401
 # absolute imports: spark-submit executes this file as a top-level
 # script (no package parent), with the package zip on --py-files
 from gtfs2lc_spark import FEED_TIMEZONE_DEFAULT, fixtures, pipeline, postprocess, sinks
-from gtfs2lc_spark import materialize as materialize_mod
 from gtfs2lc_spark.checkpoint import HistoryStore, convert_incremental
 from gtfs2lc_spark.extraction import extract_entities
 from gtfs2lc_spark.schemas import PAGES_SCHEMA
@@ -249,10 +248,6 @@ def run(spark: SparkSession, args: argparse.Namespace) -> dict:
                 e["stop_times"], e["trips"], e["routes"], e["stops"]
             ).collect()
         ]
-
-    # job barrier: outputs + history committed — reclaim any
-    # parquet-strategy staging dirs (no-op under local/reliable)
-    materialize_mod.sweep_staging(spark)
 
     # reference logs "<file> created in <ms> ms" (lib/gtfs2connections.js:95-97)
     return {

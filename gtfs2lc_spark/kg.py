@@ -95,7 +95,6 @@ def transitive_closure(
         edges.select(
             F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
         ).distinct(),
-        label="tc_reach",
     )
     n = reach.count()
     for _ in range(int(max_rounds)):
@@ -104,9 +103,7 @@ def transitive_closure(
             .join(reach.alias("r"), F.col("l.dst") == F.col("r.src"))
             .select(F.col("l.src").alias("src"), F.col("r.dst").alias("dst"))
         )
-        new_reach = materialize(
-            reach.unionByName(hop).distinct(), label="tc_reach"
-        )
+        new_reach = materialize(reach.unionByName(hop).distinct())
         m = new_reach.count()
         if m == n:
             return new_reach
@@ -501,10 +498,9 @@ def personalized_pagerank(
         .unionByName(e.select(F.col("_dst").alias("node")))
         .unionByName(seeds)
         .distinct(),
-        label="ppr_nodes",
     )
     outw = e.groupBy("_src").agg(F.sum("_w").alias("_outw"))
-    ann = materialize(e.join(outw, "_src"), label="ppr_edges")
+    ann = materialize(e.join(outw, "_src"))
     n_seeds = F.broadcast(seeds.agg(F.count(F.lit(1)).alias("_ns")))
     teleport = (
         nodes.join(seeds.withColumn("_is_seed", F.lit(1)), "node", "left")
@@ -516,9 +512,9 @@ def personalized_pagerank(
             .alias("_tp"),
         )
     )
-    base = materialize(teleport, label="ppr_teleport")
+    base = materialize(teleport)
     ranks = base.select("node", F.col("_tp").alias("rank"))
-    for i in range(int(iterations)):
+    for _ in range(int(iterations)):
         contrib = (
             ann.join(ranks.withColumnRenamed("node", "_src"), "_src")
             .groupBy(F.col("_dst").alias("node"))
@@ -533,7 +529,6 @@ def personalized_pagerank(
                     6,
                 ).alias("rank"),
             ),
-            label=f"ppr_round{i}",
         )
     return ranks
 
@@ -570,10 +565,9 @@ def pagerank(
         e.select(F.col("_src").alias("node"))
         .unionByName(e.select(F.col("_dst").alias("node")))
         .distinct(),
-        label="pr_nodes",
     )
     outdeg = e.groupBy("_src").agg(F.count(F.lit(1)).alias("_outdeg"))
-    ann = materialize(e.join(outdeg, "_src"), label="pr_edges")
+    ann = materialize(e.join(outdeg, "_src"))
     n_nodes = F.broadcast(nodes.agg(F.count(F.lit(1)).alias("_n")))
     ranks = nodes.crossJoin(n_nodes).select(
         "node", (F.lit(1.0) / F.col("_n")).alias("rank")
@@ -594,7 +588,6 @@ def pagerank(
                     + F.lit(float(damping)) * F.coalesce("_contrib", F.lit(0.0))
                 ).alias("rank"),
             ),
-            label="pr_ranks",
         )
     return ranks
 
@@ -631,16 +624,14 @@ def hits(
     e = materialize(
         edges.select(F.col(src_col).alias("_src"), F.col(dst_col).alias("_dst"))
         .where(F.col(src_col).isNotNull() & F.col(dst_col).isNotNull()),
-        label="hits_edges",
     )
     nodes = materialize(
         e.select(F.col("_src").alias("node"))
         .unionByName(e.select(F.col("_dst").alias("node")))
         .distinct(),
-        label="hits_nodes",
     )
 
-    def _norm(scores: DataFrame, col: str, label: str) -> DataFrame:
+    def _norm(scores: DataFrame, col: str) -> DataFrame:
         tot = F.broadcast(scores.agg(F.sum(col).alias("_tot")))
         return materialize(
             scores.crossJoin(tot).select(
@@ -651,12 +642,11 @@ def hits(
                 .otherwise(F.lit(0.0))
                 .alias(col),
             ),
-            label=label,
         )
 
     hub = nodes.select("node", F.lit(1.0).alias("hub"))
     auth = nodes.select("node", F.lit(0.0).alias("authority"))
-    for i in range(int(iterations)):
+    for _ in range(int(iterations)):
         a_raw = (
             e.join(hub.withColumnRenamed("node", "_src"), "_src")
             .groupBy(F.col("_dst").alias("node"))
@@ -667,7 +657,6 @@ def hits(
                 "node", F.coalesce("authority", F.lit(0.0)).alias("authority")
             ),
             "authority",
-            f"hits_a{i}",
         )
         h_raw = (
             e.join(auth.withColumnRenamed("node", "_dst"), "_dst")
@@ -679,7 +668,6 @@ def hits(
                 "node", F.coalesce("hub", F.lit(0.0)).alias("hub")
             ),
             "hub",
-            f"hits_h{i}",
         )
     # hub and auth are each built as nodes-left-join-coalesce inside
     # the loop (and as full-cover literals at iterations=0), so both
@@ -729,14 +717,11 @@ def label_propagation(
         )
         .where(F.col("_a") != F.col("_b"))
         .distinct(),
-        label="lpa_edges",
     )
-    nodes = materialize(
-        sym.select(F.col("_a").alias("node")).distinct(), label="lpa_nodes"
-    )
+    nodes = materialize(sym.select(F.col("_a").alias("node")).distinct())
     labels = nodes.select("node", F.col("node").alias("label"))
     w = Window.partitionBy("node").orderBy(F.desc("_cnt"), F.asc("label"))
-    for i in range(int(iterations)):
+    for _ in range(int(iterations)):
         neigh = (
             sym.join(labels.withColumnRenamed("node", "_b"), "_b")
             .groupBy(F.col("_a").alias("node"), "label")
@@ -748,7 +733,6 @@ def label_propagation(
             neigh.withColumn("_rn", F.row_number().over(w))
             .where(F.col("_rn") == 1)
             .select("node", "label"),
-            label=f"lpa_round{i}",
         )
     return labels
 
@@ -920,7 +904,6 @@ def _triangles_from_und(e: DataFrame) -> DataFrame:
             F.when(lower_first, F.col("_da")).otherwise(F.col("_db")).alias("_du"),
             F.when(lower_first, F.col("_db")).otherwise(F.col("_da")).alias("_dv"),
         ),
-        label="tri_oriented",
     )
     w1 = oriented.select("_u", F.col("_v").alias("_w1"), F.col("_dv").alias("_dw1"))
     w2 = oriented.select("_u", F.col("_v").alias("_w2"), F.col("_dv").alias("_dw2"))
@@ -1016,15 +999,11 @@ def k_core(
     Output: ``(node, core_degree)`` — surviving nodes with their
     degree inside the k-core.
     """
-    und = materialize(
-        _undirected(edges, src_col, dst_col), label="kcore_edges"
-    )
+    und = materialize(_undirected(edges, src_col, dst_col))
     prev = -1
     for _ in range(int(max_rounds)):
         deg = _undirected_degrees(und, "core_degree")
-        keep = materialize(
-            deg.where(F.col("core_degree") >= int(k)), label="kcore_nodes"
-        )
+        keep = materialize(deg.where(F.col("core_degree") >= int(k)))
         n = keep.count()
         if n == prev:
             return keep
@@ -1033,7 +1012,6 @@ def k_core(
             und.join(
                 keep.select(F.col("node").alias("_a")), "_a", "left_semi"
             ).join(keep.select(F.col("node").alias("_b")), "_b", "left_semi"),
-            label="kcore_edges",
         )
     raise RuntimeError(
         f"k_core did not converge within {max_rounds} peel rounds"
@@ -1072,7 +1050,6 @@ def neighbor_jaccard(
     adj = materialize(
         und.select(F.col("_a").alias("node"), F.col("_b").alias("nbr"))
         .unionByName(und.select(F.col("_b").alias("node"), F.col("_a").alias("nbr"))),
-        label="nj_adj",
     )
     deg = adj.groupBy("node").agg(F.count(F.lit(1)).alias("_deg"))
     centers = adj.select(F.col("nbr").alias("_x"), F.col("node").alias("_n"))
@@ -1178,7 +1155,6 @@ def earliest_arrivals(
             F.col(dep_ts_col).alias("_dep_ts"),
             F.col(arr_ts_col).alias("_arr_ts"),
         ),
-        label="ea_conns",
     )
     labels = spark.createDataFrame(
         [(source_stop,)], "stop string"
@@ -1197,7 +1173,6 @@ def earliest_arrivals(
             labels.unionByName(relaxed)
             .groupBy("stop")
             .agg(F.min("earliest").alias("earliest")),
-            label="ea_labels",
         )
         improved = (
             new_labels.alias("n")
@@ -1386,7 +1361,6 @@ def khop_distances(
         seeds.select(F.col(seed_col).alias("node"))
         .distinct()
         .withColumn("hops", F.lit(0).cast("long")),
-        label="khop_dist",
     )
     frontier = dist.select("node")
     e = edges.select(F.col(src_col).alias("_s"), F.col(dst_col).alias("_d"))
@@ -1398,10 +1372,10 @@ def khop_distances(
             .join(dist.select("node"), "node", "left_anti")
             .withColumn("hops", F.lit(h).cast("long"))
         )
-        nxt = materialize(nxt, label="khop_frontier")
+        nxt = materialize(nxt)
         if nxt.isEmpty():
             return dist
-        dist = materialize(dist.unionByName(nxt), label="khop_dist")
+        dist = materialize(dist.unionByName(nxt))
         frontier = nxt.select("node")
     return dist
 

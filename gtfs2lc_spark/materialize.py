@@ -1,179 +1,51 @@
-"""Pluggable reliable materialization for multi-consumer intermediates.
+"""Lineage cut for multi-consumer intermediates.
 
 Several operators materialize an intermediate DataFrame that is read by
 multiple downstream plan branches or jobs (the detected-pages staging,
 the J7 delta, the J8/J9 merged movement set, streaming batch staging).
-In the single-JVM sandbox ``localCheckpoint`` is the right tool — but
-local checkpoints live in EXECUTOR storage: on a real cluster, losing
-one executor invalidates them and fails the job, which is exactly the
-failure mode the resumability story (BASELINE.json north_rule:
-"resumable from checkpoint") must survive.
+``materialize()`` computes it once and returns a DataFrame whose plan
+scans the materialized copy, so no downstream branch re-runs the
+upstream work (for extract_entities: no ArrowEvalPython re-execution).
+One Spark conf, read at each call, picks how the copy is stored:
 
-This module makes the cut-the-lineage operation a strategy selected by
-one Spark conf, so the same pipeline code runs sandbox-fast locally and
-executor-loss-safe on a cluster:
+  spark.gtfs2lc.materialize = local     (default) localCheckpoint: blocks
+                                        in executor storage; losing an
+                                        executor fails the job
+  spark.gtfs2lc.materialize = reliable  RDD checkpoint to the checkpoint
+                                        dir (sparkContext.setCheckpointDir
+                                        on HDFS/S3/shared storage);
+                                        survives executor loss
 
-  spark.gtfs2lc.materialize = local     (default) localCheckpoint(eager)
-  spark.gtfs2lc.materialize = reliable  RDD checkpoint to the fault-
-                                        tolerant checkpoint dir (caller
-                                        must sparkContext.setCheckpointDir
-                                        to HDFS/S3/shared storage)
-  spark.gtfs2lc.materialize = parquet   write a parquet staging table
-                                        under spark.gtfs2lc.materialize.dir
-                                        and read it back — survives both
-                                        executor AND driver loss, and is
-                                        the moral equivalent of an
-                                        Iceberg staging table (the shape
-                                        SURVEY.md §3.1 step 3 describes)
-
-All three cut the lineage (downstream plans scan plain blocks/files, no
-ArrowEvalPython re-execution — the property extract_entities depends
-on). Set the conf at session build time or per-job; it is read at each
-materialize() call, so tests can flip it on a live session.
+Neither is a resume point: a rerun recomputes its intermediates, and
+resumability lives in ``checkpoint.HistoryStore``'s snapshot log and
+the stream checkpoint. Reliable checkpoint files are deleted by Spark's
+ContextCleaner once the DataFrame is garbage collected
+(``build_session`` sets ``spark.cleaner.referenceTracking
+.cleanCheckpoints``); local checkpoint blocks die with the session.
 """
 
 from __future__ import annotations
 
-import uuid
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 CONF_KEY = "spark.gtfs2lc.materialize"
-CONF_DIR_KEY = "spark.gtfs2lc.materialize.dir"
 
-_VALID = ("local", "reliable", "parquet")
-
-# parquet-strategy staging dirs created in this process, per Spark
-# application id — swept by sweep_staging() at job/batch barriers so a
-# long-running streaming job doesn't accumulate one full intermediate
-# copy per materialize() call forever
-_STAGED_PATHS: dict[str, list[str]] = {}
+_VALID = ("local", "reliable")
 
 
-def materialize(df: DataFrame, label: str = "intermediate") -> DataFrame:
+def materialize(df: DataFrame) -> DataFrame:
     """Eagerly materialize ``df`` with the session-configured strategy
     and return a DataFrame whose lineage starts at the materialized
-    copy. ``label`` names the staging subdirectory for the parquet
-    strategy (plus a uuid — repeated calls never collide)."""
+    copy."""
     spark = df.sparkSession
     strategy = spark.conf.get(CONF_KEY, "local")
     if strategy == "local":
         return df.localCheckpoint(eager=True)
     if strategy == "reliable":
-        # fault-tolerant RDD checkpoint: requires a cluster-visible
-        # sparkContext.setCheckpointDir; survives executor loss
         if spark.sparkContext.getCheckpointDir() is None:
             raise ValueError(
                 "materialize strategy 'reliable' needs "
                 "sparkContext.setCheckpointDir(<shared storage>)"
             )
         return df.checkpoint(eager=True)
-    if strategy == "parquet":
-        base = spark.conf.get(CONF_DIR_KEY, None)
-        if not base:
-            raise ValueError(
-                f"materialize strategy 'parquet' needs {CONF_DIR_KEY}"
-            )
-        path = f"{base}/{label}-{uuid.uuid4().hex[:12]}"
-        df.write.mode("error").parquet(path)
-        _STAGED_PATHS.setdefault(
-            spark.sparkContext.applicationId, []
-        ).append(path)
-        return spark.read.parquet(path)
     raise ValueError(f"{CONF_KEY}={strategy!r}; expected one of {_VALID}")
-
-
-def sweep_staging(spark: SparkSession) -> list[str]:
-    """Delete the parquet staging dirs this process created via
-    ``materialize()`` and return the swept paths. Call at a BARRIER
-    where every downstream output of the staged intermediates is
-    already committed (end of a streaming micro-batch, end of a batch
-    job) — sweeping earlier breaks live DataFrames that still scan the
-    staged files. The 'local' and 'reliable' strategies have nothing
-    to sweep (localCheckpoint blocks die with the session; reliable
-    checkpoint dirs are reclaimed by Spark's
-    ``spark.cleaner.referenceTracking.cleanCheckpoints``).
-
-    Deletion goes through the Hadoop FileSystem API, so it works on
-    whatever storage CONF_DIR_KEY points at (local disk, HDFS, S3A)."""
-    paths = _STAGED_PATHS.pop(spark.sparkContext.applicationId, [])
-    if not paths:
-        return []
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    jvm = spark.sparkContext._jvm
-    for p in paths:
-        hpath = jvm.org.apache.hadoop.fs.Path(p)
-        hpath.getFileSystem(hconf).delete(hpath, True)
-    return paths
-
-
-def vacuum_staging(
-    spark: SparkSession,
-    base: str | None = None,
-    min_age_s: float = 86400.0,
-    dry_run: bool = False,
-) -> list[str]:
-    """VACUUM for staging dirs LEFT BY CRASHED DRIVERS: the
-    ``_STAGED_PATHS`` registry behind ``sweep_staging()`` is
-    per-process, so a driver that dies mid-job orphans its
-    ``<label>-<12 hex>`` dirs forever. This sweeps every entry under
-    the staging base whose name matches that pattern AND whose
-    modification time is older than ``min_age_s`` (default 24 h — a
-    LIVE driver's staging is younger than any sane vacuum horizon;
-    lower it only when no job can be running). Returns the swept
-    (or, with ``dry_run``, the would-be-swept) paths.
-
-    Run from a maintenance cron or the CLI:
-    ``python -m gtfs2lc_spark.materialize --base <dir> [--min-age-hours N] [--dry-run]``
-    """
-    import re
-    import time
-
-    base = base or spark.conf.get(CONF_DIR_KEY, None)
-    if not base:
-        raise ValueError(f"vacuum_staging needs a base dir (arg or {CONF_DIR_KEY})")
-    pat = re.compile(r"^[A-Za-z0-9_.-]+-[0-9a-f]{12}$")
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    jvm = spark.sparkContext._jvm
-    bpath = jvm.org.apache.hadoop.fs.Path(base)
-    fs = bpath.getFileSystem(hconf)
-    if not fs.exists(bpath):
-        return []
-    now_ms = time.time() * 1000.0
-    swept = []
-    for st in fs.listStatus(bpath):
-        name = st.getPath().getName()
-        if not st.isDirectory() or not pat.match(name):
-            continue
-        if now_ms - st.getModificationTime() < min_age_s * 1000.0:
-            continue
-        swept.append(st.getPath().toString())
-        if not dry_run:
-            fs.delete(st.getPath(), True)
-    return swept
-
-
-def _main() -> None:
-    import argparse
-
-    ap = argparse.ArgumentParser(
-        description="Vacuum orphaned materialize() parquet staging dirs "
-        "left by crashed drivers"
-    )
-    ap.add_argument("--base", required=True, help="staging base directory")
-    ap.add_argument("--min-age-hours", type=float, default=24.0)
-    ap.add_argument("--dry-run", action="store_true")
-    args = ap.parse_args()
-    from .session import build_session
-
-    spark = build_session(app_name="gtfs2lc-vacuum", master="local[2]")
-    spark.sparkContext.setLogLevel("ERROR")
-    for p in vacuum_staging(
-        spark, args.base, args.min_age_hours * 3600.0, args.dry_run
-    ):
-        print(("DRY " if args.dry_run else "RM  ") + p)
-    spark.stop()
-
-
-if __name__ == "__main__":
-    _main()

@@ -28,9 +28,8 @@ and LevelDB; SURVEY.md §4):
   the explode, date-dependent work (timestamps, URIs) after — the same
   cost split the reference gets from its rule-shard intermediates.
 - ``convert`` materializes the rule table and the service table once
-  (``materialize``: a local checkpoint here, a reliable checkpoint or
-  parquet staging on a cluster), as the reference writes its
-  connection-rule shards once (SURVEY §3.1 step 3). The J7 dedupe reads
+  (``materialize``), as the reference writes its connection-rule
+  shards once (SURVEY §3.1 step 3). The J7 dedupe reads
   the rules three times, so the W1 window and its dimension broadcasts
   run once instead of on every read. The rules are pre-explode rows,
   ~180x fewer than the connections. The services are read once, by
@@ -508,6 +507,6 @@ def convert(
     rules. The services are read once (the J4 lookup); dropping their
     materialization measured no faster on a cold job.run (ROADMAP,
     negative results), so it stays."""
-    services = materialize(expand_services(calendar, calendar_dates), "services")
-    rules = materialize(stop_times_to_rules(stop_times, trips, routes, stops), "rules")
+    services = materialize(expand_services(calendar, calendar_dates))
+    rules = materialize(stop_times_to_rules(stop_times, trips, routes, stops))
     return rules_to_connections(rules, services, feed_tz, salt_n)

@@ -133,7 +133,6 @@ def link_next_connections(merged: DataFrame) -> DataFrame:
     df = materialize(
         df.withColumn("_next_id", F.lead("id").over(w_trip))
         .withColumn("_next_wsi", F.lead("willSplitInto").over(w_trip)),
-        "j9-keyed",
     )
 
     keys = df.select(
@@ -227,12 +226,11 @@ def join_and_sort(jsonld: DataFrame) -> DataFrame:
     """Full post-processor: merge movements, link nextConnection, order
     ascending by the reference comparator (sort.js:210-233).
 
-    The merged set is materialized once (``materialize``, strategy set
-    by spark.gtfs2lc.materialize): J9 references it from five plan
-    branches (lead window, split-link keys, setters, last-connections,
-    final projection), and without the cut each branch would re-run the
-    movement merge — measured ~11% slower and far less stable at 208k
-    connections."""
-    merged = materialize(merge_movements(jsonld), "j8-merged")
+    The merged set is materialized once (``materialize``): J9
+    references it from five plan branches (lead window, split-link
+    keys, setters, last-connections, final projection), and without the
+    cut each branch would re-run the movement merge — measured ~11%
+    slower and far less stable at 208k connections."""
+    merged = materialize(merge_movements(jsonld))
     linked = link_next_connections(merged)
     return linked.orderBy(*[F.coalesce(F.col(k), F.lit("")) for k in SORT_KEYS])

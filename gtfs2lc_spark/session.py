@@ -96,6 +96,10 @@ def build_session(
         .config("spark.driver.memory", driver_memory())
         .config("spark.driver.extraJavaOptions", DRIVER_JAVA_OPTIONS)
         .config("spark.ui.enabled", "false")
+        # reliable materialize() checkpoints (materialize.py) are deleted
+        # once their DataFrame is garbage collected; Spark's default
+        # (false) leaves every rdd-* dir in the checkpoint dir forever
+        .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -496,7 +496,7 @@ def triples_with_message_counter(
     # each would re-execute the whole upstream pipeline, and the
     # dense_index contract requires a deterministic (checkpointed or
     # scanned) input anyway
-    triples = materialize(connections_to_triples(conns, uris), "framed-triples")
+    triples = materialize(connections_to_triples(conns, uris))
     return dense_index(triples, ["subj"], n_parts).withColumnRenamed(
         "_dense_idx", "message_counter"
     )

@@ -49,7 +49,7 @@ from pyspark.sql.streaming import StreamingQuery
 from . import FEED_TIMEZONE_DEFAULT, pipeline, sinks
 from .checkpoint import HistoryStore
 from .extraction import detect_pages, entities_from_detected
-from .materialize import materialize, sweep_staging
+from .materialize import materialize
 from .schemas import PAGES_SCHEMA
 from .uris import URIStrategy
 
@@ -76,7 +76,7 @@ def process_pages_batch(
     tests can drive crash/replay scenarios without a streaming query."""
     if batch.isEmpty():
         return
-    detected = materialize(detect_pages(batch), "stream-detected")
+    detected = materialize(detect_pages(batch))
     feeds = [r.feed_id for r in detected.select("feed_id").distinct().collect()]
     detected.write.mode("overwrite").parquet(f"{staging_dir}/batch={batch_id}")
     if not feeds:
@@ -133,7 +133,7 @@ def process_pages_batch(
     # materialize once: entities_from_detected embeds this subtree
     # into ~6 entity lineages plus two driver collects — Catalyst
     # doesn't share sub-plans (same rationale as extract_entities)
-    staged = materialize(staged, "stream-staged")
+    staged = materialize(staged)
     e = entities_from_detected(staged)
     conns = pipeline.convert(
         e["stop_times"], e["trips"], e["routes"], e["stops"],
@@ -142,7 +142,7 @@ def process_pages_batch(
     )
     delta = store.differential(conns, before_snapshot=batch_id)
     # persist: consumed twice (output + history commit)
-    delta = materialize(delta, "stream-delta")
+    delta = materialize(delta)
     jsonld = sinks.connections_to_jsonld(delta, URIStrategy(feed_tz=feed_tz))
     sinks.jsonld_lines(jsonld).write.mode("overwrite").text(
         f"{output_dir}/batch={batch_id}"
@@ -150,11 +150,6 @@ def process_pages_batch(
     store.commit(
         delta, run_info={"stream_batch_id": batch_id}, snapshot_id=batch_id
     )
-    # batch barrier: output + history are committed, so this batch's
-    # parquet-strategy staging dirs (detected/staged/delta) are garbage
-    # — sweep them or a long-running stream leaks one intermediate copy
-    # per materialize() call (no-op under local/reliable strategies)
-    sweep_staging(spark)
 
 
 def start_incremental_conversion(
@@ -201,7 +196,6 @@ DOCS_STREAM_SCHEMA = (
 
 
 def process_docs_batch(
-    spark: SparkSession,
     batch: DataFrame,
     batch_id: int,
     store,
@@ -225,11 +219,9 @@ def process_docs_batch(
             batch, store, text_col=text_col, id_col=id_col,
             before_snapshot=batch_id,
         ),
-        "stream-dedup-survivors",
     )
     survivors.write.mode("overwrite").parquet(f"{output_dir}/batch={batch_id}")
     commit_batch(survivors, store, snapshot_id=batch_id)
-    sweep_staging(spark)
 
 
 def start_corpus_dedup_stream(
@@ -251,7 +243,7 @@ def start_corpus_dedup_stream(
     store = CorpusDedupStore(spark, history_dir)
 
     def process(batch: DataFrame, batch_id: int) -> None:
-        process_docs_batch(spark, batch, batch_id, store, output_dir)
+        process_docs_batch(batch, batch_id, store, output_dir)
 
     writer = (
         spark.readStream.schema(schema)

@@ -10,6 +10,22 @@ def spark():
     yield s
 
 
+@pytest.fixture
+def checkpoint_calls(spark, monkeypatch):
+    """The ``eager`` flag of every reliable ``DataFrame.checkpoint``
+    call made during the test, in order."""
+    cls = type(spark.range(0))  # the session's concrete DataFrame class
+    calls = []
+    orig = cls.checkpoint
+
+    def spy(self, eager=True):
+        calls.append(eager)
+        return orig(self, eager)
+
+    monkeypatch.setattr(cls, "checkpoint", spy)
+    return calls
+
+
 @pytest.fixture(scope="session")
 def feed(spark):
     from gtfs2lc_spark import fixtures

@@ -30,3 +30,19 @@ def test_gate_outputs_are_atomic(spark):
             if typ.id in ("list", "array", "map", "struct", "union"):
                 bad.append((name, "oracle", col, str(typ)))
     assert not bad, bad
+
+
+def test_chi_square_matches_oracle_on_empty_input(spark, tmp_path):
+    """An empty contingency grid has no chi2: both engines report NULL
+    (the Spark fold once started from 0.0 and reported 0.0)."""
+    spark.read.parquet(f"{SF}/documents.parquet").limit(0).write.parquet(
+        str(tmp_path / "documents.parquet")
+    )
+    got = tuple(entry.queries()["chi_square"](spark, str(tmp_path)).collect()[0])
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW documents AS SELECT * FROM "
+        f"read_parquet('{tmp_path}/documents.parquet/*.parquet')"
+    )
+    want = con.sql(entry.oracle_sql()["chi_square"]).fetchone()
+    assert got == want == (None, 1, None, 0, 0)

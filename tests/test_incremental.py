@@ -123,16 +123,16 @@ def test_docs_batch_replay_is_idempotent(spark, tmp_path):
         [(1, "one", "en", "s", 3), (2, "two", "en", "s", 3)],
         streaming.DOCS_STREAM_SCHEMA,
     )
-    streaming.process_docs_batch(spark, b0, 0, store, f"{tmp}/out")
+    streaming.process_docs_batch(b0, 0, store, f"{tmp}/out")
     b1 = spark.createDataFrame(
         [(10, "two", "en", "s", 3), (11, "three", "en", "s", 5)],
         streaming.DOCS_STREAM_SCHEMA,
     )
-    streaming.process_docs_batch(spark, b1, 1, store, f"{tmp}/out")
+    streaming.process_docs_batch(b1, 1, store, f"{tmp}/out")
     first = {r["doc_id"] for r in
              spark.read.parquet(f"{tmp}/out/batch=1").collect()}
     # replay batch 1 (its commit already landed)
-    streaming.process_docs_batch(spark, b1, 1, store, f"{tmp}/out")
+    streaming.process_docs_batch(b1, 1, store, f"{tmp}/out")
     replay = {r["doc_id"] for r in
               spark.read.parquet(f"{tmp}/out/batch=1").collect()}
     assert first == replay == {11}

@@ -1,8 +1,10 @@
 """Pluggable materialization (VERDICT r3 #4): the lineage-cutting
 materialize() sites must switch between sandbox-fast local checkpoints
-and cluster-safe reliable checkpoint / parquet staging with ONE conf."""
+and cluster-safe reliable checkpoints with ONE conf."""
 
 import contextlib
+import gc
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -37,11 +39,13 @@ def test_local_default(spark):
     assert "Range" not in out._jdf.queryExecution().executedPlan().toString()
 
 
-def test_reliable_checkpoint(spark, tmp_path):
+def test_reliable_checkpoint(spark, tmp_path, monkeypatch):
     with _conf(spark, **{mat.CONF_KEY: "reliable"}):
         # unconfigured checkpoint dir must fail loudly, not silently
-        # degrade to an executor-storage checkpoint
-        if spark.sparkContext.getCheckpointDir() is None:
+        # degrade to an executor-storage checkpoint (patched: the shared
+        # session may already carry a dir set by an earlier test)
+        with monkeypatch.context() as m:
+            m.setattr(spark.sparkContext, "getCheckpointDir", lambda: None)
             with pytest.raises(ValueError, match="setCheckpointDir"):
                 mat.materialize(_probe_df(spark))
         spark.sparkContext.setCheckpointDir(str(tmp_path / "reliable"))
@@ -51,29 +55,38 @@ def test_reliable_checkpoint(spark, tmp_path):
         assert any((tmp_path / "reliable").rglob("*"))
 
 
-def test_parquet_staging(spark, tmp_path):
-    with _conf(spark, **{mat.CONF_KEY: "parquet"}):
-        with pytest.raises(ValueError, match="materialize.dir"):
-            mat.materialize(_probe_df(spark))
-        with _conf(spark, **{mat.CONF_DIR_KEY: str(tmp_path / "stage")}):
-            out = mat.materialize(_probe_df(spark), "probe")
-            assert out.count() == 100
-            # staged as real files; repeated calls don't collide
-            out2 = mat.materialize(_probe_df(spark), "probe")
-            assert out2.count() == 100
-            dirs = list((tmp_path / "stage").iterdir())
-            assert len(dirs) == 2 and all(d.name.startswith("probe-") for d in dirs)
+def test_reliable_checkpoint_files_are_reclaimed(spark, tmp_path):
+    """A reliable checkpoint's rdd-* dir is deleted once its DataFrame
+    is garbage collected (spark.cleaner.referenceTracking
+    .cleanCheckpoints, set by build_session); otherwise every
+    reliable materialize() leaks a full copy of its intermediate."""
+    spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
+    with _conf(spark, **{mat.CONF_KEY: "reliable"}):
+        out = mat.materialize(_probe_df(spark))
+    assert out.count() == 100
+    rdd_dirs = list((tmp_path / "ckpt").glob("*/rdd-*"))
+    assert len(rdd_dirs) == 1
+    del out
+    deadline = time.monotonic() + 30
+    while rdd_dirs[0].exists() and time.monotonic() < deadline:
+        gc.collect()
+        spark.sparkContext._jvm.System.gc()
+        time.sleep(1)
+    assert not rdd_dirs[0].exists()
 
 
 def test_unknown_strategy_raises(spark):
-    with _conf(spark, **{mat.CONF_KEY: "nope"}):
-        with pytest.raises(ValueError, match="nope"):
-            mat.materialize(_probe_df(spark))
+    # 'parquet' was a strategy once: a removed value must fail loudly,
+    # not fall back to another strategy
+    for strategy in ("nope", "parquet"):
+        with _conf(spark, **{mat.CONF_KEY: strategy}):
+            with pytest.raises(ValueError, match=strategy):
+                mat.materialize(_probe_df(spark))
 
 
-def test_pipeline_runs_under_parquet_strategy(spark, tmp_path):
+def test_pipeline_runs_under_reliable_strategy(spark, tmp_path):
     """End-to-end: the extract->convert->postprocess path produces the
-    same rows under the cluster-safe parquet strategy as under the
+    same rows under the cluster-safe reliable strategy as under the
     default — the strategy changes durability, never semantics."""
     from gtfs2lc_spark import extraction, fixtures, pipeline, postprocess, sinks
 
@@ -90,22 +103,20 @@ def test_pipeline_runs_under_parquet_strategy(spark, tmp_path):
         return postprocess.join_and_sort(jl).collect()
 
     base = run()
-    with _conf(
-        spark,
-        **{mat.CONF_KEY: "parquet", mat.CONF_DIR_KEY: str(tmp_path / "pq")},
-    ):
+    spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
+    with _conf(spark, **{mat.CONF_KEY: "reliable"}):
         alt = run()
     assert [r.id for r in base] == [r.id for r in alt]
     assert 0 < len(base) <= fixtures.SAMPLE_FEED_CONNECTIONS  # J8 merged
 
 
-def test_connected_components_under_parquet_strategy(spark, tmp_path):
+def test_connected_components_under_reliable_strategy(
+    spark, tmp_path, checkpoint_calls
+):
     """VERDICT r4 #3: the iterative CC loop must route every round
-    through materialize(), so reliable/parquet strategies govern it on
-    a real cluster (a raw localCheckpoint dies with a lost executor).
+    through materialize(), so the reliable strategy governs it on a
+    real cluster (a raw localCheckpoint dies with a lost executor).
     Clusters must be identical under both strategies."""
-    import os
-
     from gtfs2lc_spark.datapipe import dedup
 
     # two chains + a singleton edge: {1,2,3,4}, {10,11}, {20,21}
@@ -115,85 +126,16 @@ def test_connected_components_under_parquet_strategy(spark, tmp_path):
     base = sorted(
         (r.id, r.cluster_id) for r in dedup.connected_components(pairs).collect()
     )
-    mat.sweep_staging(spark)
-    with _conf(
-        spark,
-        **{mat.CONF_KEY: "parquet", mat.CONF_DIR_KEY: str(tmp_path / "cc")},
-    ):
+    spark.sparkContext.setCheckpointDir(str(tmp_path / "cc"))
+    with _conf(spark, **{mat.CONF_KEY: "reliable"}):
         alt = sorted(
             (r.id, r.cluster_id)
             for r in dedup.connected_components(pairs).collect()
         )
-        # the loop actually staged through parquet (edges + labels +
-        # >=1 round), and the dirs are registered for sweeping
-        staged = os.listdir(tmp_path / "cc")
-        assert len(staged) >= 3
-        assert any(d.startswith("cc-round-") for d in staged)
-        mat.sweep_staging(spark)
+    # the loop actually checkpointed reliably (edges + labels + >=1
+    # round)
+    assert len(checkpoint_calls) >= 3 and all(checkpoint_calls)
     assert base == alt
     assert base == [
         (1, 1), (2, 1), (3, 1), (4, 1), (10, 10), (11, 10), (20, 20), (21, 20),
     ]
-
-
-def test_sweep_staging(spark, tmp_path):
-    """parquet staging dirs are registered and reclaimed by
-    sweep_staging(); local strategy has nothing to sweep."""
-    import os
-
-    # drain paths registered by earlier tests on the shared session
-    mat.sweep_staging(spark)
-    with _conf(
-        spark,
-        **{mat.CONF_KEY: "parquet", mat.CONF_DIR_KEY: str(tmp_path)},
-    ):
-        a = mat.materialize(_probe_df(spark), "sweep-a")
-        b = mat.materialize(_probe_df(spark), "sweep-b")
-        assert a.count() == 100 and b.count() == 100
-        staged = sorted(os.listdir(tmp_path))
-        assert len(staged) == 2
-        swept = mat.sweep_staging(spark)
-        assert len(swept) == 2
-        assert os.listdir(tmp_path) == []
-        # idempotent: second sweep is a no-op
-        assert mat.sweep_staging(spark) == []
-    # local strategy registers nothing
-    mat.materialize(_probe_df(spark))
-    assert mat.sweep_staging(spark) == []
-
-
-def test_vacuum_staging_orphans_only(spark, tmp_path):
-    """VERDICT r4 #8: vacuum sweeps CRASHED drivers' staging dirs —
-    matching the <label>-<12 hex> pattern AND older than min_age —
-    and nothing else."""
-    import os
-    import time
-
-    base = tmp_path / "stage"
-    base.mkdir()
-    orphan = base / "j7-delta-0123456789ab"
-    fresh = base / "pages-abcdef012345"
-    unrelated = base / "user-data"
-    for d in (orphan, fresh, unrelated):
-        d.mkdir()
-        (d / "part-0.parquet").write_bytes(b"x")
-    old = time.time() - 7200
-    os.utime(orphan, (old, old))
-    os.utime(unrelated, (old, old))  # old but NOT ours: must survive
-
-    would = mat.vacuum_staging(spark, str(base), min_age_s=3600, dry_run=True)
-    assert [p.rsplit("/", 1)[-1] for p in would] == ["j7-delta-0123456789ab"]
-    assert orphan.exists()  # dry run touched nothing
-
-    swept = mat.vacuum_staging(spark, str(base), min_age_s=3600)
-    assert [p.rsplit("/", 1)[-1] for p in swept] == ["j7-delta-0123456789ab"]
-    assert not orphan.exists()
-    assert fresh.exists() and unrelated.exists()
-
-    # live-driver safety: a dir created by materialize() right now is
-    # younger than the horizon, so a concurrent vacuum skips it
-    with _conf(spark, **{mat.CONF_KEY: "parquet",
-                         mat.CONF_DIR_KEY: str(base)}):
-        out = mat.materialize(_probe_df(spark), "live")
-        assert mat.vacuum_staging(spark, str(base), min_age_s=3600) == []
-        assert out.count() == 100
