@@ -3546,6 +3546,7 @@ def oracle_sql() -> dict[str, str]:
         "assoc_rules": """
             WITH bi AS (
               SELECT DISTINCT user_id AS b, event_type AS i FROM events
+              WHERE user_id IS NOT NULL AND event_type IS NOT NULL
             ), nb AS (
               SELECT COUNT(DISTINCT b) AS nb FROM bi
             ), item_n AS (
@@ -3568,7 +3569,7 @@ def oracle_sql() -> dict[str, str]:
         "winsorized_lengths": """
             WITH hist AS (
               SELECT lang AS g, CAST(n_chars AS BIGINT) AS v, COUNT(*) AS c
-              FROM documents GROUP BY 1, 2
+              FROM documents WHERE n_chars IS NOT NULL GROUP BY 1, 2
             ), cum AS (
               SELECT g, v,
                      SUM(c) OVER (PARTITION BY g ORDER BY v
@@ -3591,6 +3592,7 @@ def oracle_sql() -> dict[str, str]:
                    least(greatest(CAST(n_chars AS BIGINT), lo), hi)
                      <> CAST(n_chars AS BIGINT) AS was_clipped
             FROM documents JOIN bounds ON bounds.g = documents.lang
+            WHERE n_chars IS NOT NULL
         """,
         "event_transitions": """
             WITH pairs AS (

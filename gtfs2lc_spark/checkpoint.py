@@ -8,10 +8,10 @@ resets it (lib/stoptimes/StopTimes2Cxs.js:17-27).
 Spark-native design (an Iceberg-shaped snapshot log on parquet — the
 sandbox has no Iceberg runtime jar, but the layout mirrors Iceberg's
 append-only snapshot model). The data files go through Spark, but the
-commit markers, listings and sweeps are plain ``os``/``shutil`` file
-I/O, so the store lives on the local filesystem only: a ``file:`` URI
-or a scheme-less path under a ``file:`` ``fs.defaultFS``; any other
-path is rejected when the store is built.
+commit markers and listings are plain ``os``/``shutil`` file I/O, so
+the store lives on the local filesystem only: a ``file:`` URI or a
+scheme-less path under a ``file:`` ``fs.defaultFS``; any other path is
+rejected when the store is built.
 
 - ``history/snapshot=N/*.parquet`` — ONLY the pairs first emitted by
   run N (append-only log; loading = union of all snapshots). At 100 TB
@@ -21,6 +21,12 @@ path is rejected when the store is built.
   metrics (partition id, row count, key min/max) written beside the
   snapshot, so any partition's provenance is auditable and a resumed
   run can verify what landed without recomputation.
+
+One commit order serves both surfaces (``job.run`` and
+streaming.process_pages_batch): anti-join against history, materialize
+the delta, write the output, then ``commit()`` the delta LAST. A run
+that fails before its commit leaves no committed snapshot, so its
+rerun emits the same delta again instead of losing it.
 
 ``differential()`` is a left_anti join on (feed_id, unique_id,
 service_date). The history side is keyed the same way the exploded
@@ -38,8 +44,6 @@ from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-from .materialize import materialize
 
 PAIR_COLS = ("feed_id", "unique_id", "service_date")
 
@@ -74,8 +78,8 @@ class HistoryStore:
     """Parquet-backed append-only history of emitted key tuples —
     (feed_id, unique_id, service_date) for the J7 connection history
     by default; ``key_cols`` generalizes the same snapshot/commit-
-    marker/compaction protocol to any dedup key (e.g. a document
-    fingerprint for cross-batch corpus dedup, datapipe/incremental.py).
+    marker protocol to any dedup key (e.g. a document fingerprint for
+    cross-batch corpus dedup, datapipe/incremental.py).
     """
 
     def __init__(
@@ -90,8 +94,6 @@ class HistoryStore:
 
     # -- snapshot bookkeeping -------------------------------------------------
 
-    MARKER = "_compaction.json"
-
     @property
     def _stat_key(self) -> str:
         """Column the per-partition lineage min/max stats range over
@@ -99,29 +101,10 @@ class HistoryStore:
         the sole key otherwise)."""
         return self.key_cols[1] if len(self.key_cols) > 1 else self.key_cols[0]
 
-    def _compaction(self) -> dict | None:
-        """The current compaction marker, or None. The marker is the
-        COMMIT POINT of a compaction: once present, the base dir it
-        names is authoritative for every snapshot id <= covers_up_to,
-        and any leftover per-snapshot dirs in that range are garbage
-        (a crashed deletion) — ignored here, swept by the next
-        compact()."""
-        p = os.path.join(self.path, self.MARKER)
-        if not os.path.exists(p):
-            return None
-        with open(p) as f:
-            return json.load(f)
-
-    def compacted_through(self) -> int | None:
-        m = self._compaction()
-        return m["covers_up_to"] if m else None
-
     def snapshots(self) -> list[int]:
-        """Committed per-snapshot ids NOT superseded by a compaction
-        base (the base itself is reported via compacted_through())."""
+        """Committed snapshot ids, ascending."""
         if not os.path.isdir(self.path):
             return []
-        floor = self.compacted_through()
         out = []
         for d in os.listdir(self.path):
             if d.startswith("snapshot="):
@@ -129,8 +112,6 @@ class HistoryStore:
                     sid = int(d.split("=", 1)[1])
                 except ValueError:
                     continue  # in-flight/garbage dir, never committed
-                if floor is not None and sid <= floor:
-                    continue  # superseded by the base (crashed deletion)
                 # only committed snapshots count (metrics file = commit marker)
                 if os.path.exists(os.path.join(self.path, d, "_metrics.json")):
                     out.append(sid)
@@ -142,27 +123,13 @@ class HistoryStore:
             shutil.rmtree(self.path)
 
     def load(self, before_snapshot: int | None = None) -> DataFrame | None:
-        """Union of the compaction base (if any) and committed
-        snapshots, optionally only ids < ``before_snapshot`` (the
-        streaming replay-determinism bound); None when empty.
-
-        A ``before_snapshot`` at or below the compaction floor raises:
-        the base has merged those snapshots and the per-id split no
-        longer exists — which is why compact() refuses to cover the
-        newest snapshot (the only one a crashed stream can replay)."""
-        m = self._compaction()
-        paths = []
-        if m is not None:
-            if before_snapshot is not None and before_snapshot <= m["covers_up_to"]:
-                raise ValueError(
-                    f"history compacted through snapshot {m['covers_up_to']}; "
-                    f"cannot reconstruct state before snapshot {before_snapshot}"
-                )
-            paths.append(os.path.join(self.path, m["base_dir"]))
+        """Union of the committed snapshots, optionally only ids <
+        ``before_snapshot`` (the streaming replay-determinism bound);
+        None when empty."""
         snaps = self.snapshots()
         if before_snapshot is not None:
             snaps = [s for s in snaps if s < before_snapshot]
-        paths += [os.path.join(self.path, f"snapshot={s}") for s in snaps]
+        paths = [os.path.join(self.path, f"snapshot={s}") for s in snaps]
         if not paths:
             return None
         return self.spark.read.parquet(*paths).select(*self.key_cols)
@@ -199,16 +166,10 @@ class HistoryStore:
         An explicit ``snapshot_id`` (streaming: the micro-batch id) makes
         the commit IDEMPOTENT — a replayed batch overwrites its own
         snapshot with identical content instead of appending a new one."""
-        floor = self.compacted_through()
         if snapshot_id is None:
             snaps = self.snapshots()
-            sid = max(snaps[-1] if snaps else -1, -1 if floor is None else floor) + 1
+            sid = snaps[-1] + 1 if snaps else 0
         else:
-            if floor is not None and snapshot_id <= floor:
-                raise ValueError(
-                    f"snapshot {snapshot_id} already compacted into the base "
-                    f"(covers_up_to={floor}); refusing to overwrite history"
-                )
             sid = snapshot_id
         snap_dir = os.path.join(self.path, f"snapshot={sid}")
         pairs = new_pairs.select(*self.key_cols).distinct()
@@ -245,158 +206,3 @@ class HistoryStore:
         with open(os.path.join(snap_dir, "_metrics.json"), "w") as f:
             json.dump(metrics, f, indent=1)
         return SnapshotInfo(sid, snap_dir, metrics)
-
-    def compact(
-        self, up_to: int | None = None, lock_ttl_s: float = 3600.0
-    ) -> SnapshotInfo:
-        """Rewrite every snapshot with id <= ``up_to`` (plus any prior
-        base) into ONE distinct-pair base table (VERDICT r3 #6). A year
-        of streaming batches otherwise leaves thousands of tiny
-        snapshot dirs on the anti-join build side; after compaction
-        load() reads one base + the recent tail.
-
-        Default ``up_to`` is the SECOND-newest visible snapshot: the
-        newest is the only batch a crashed stream checkpoint can
-        replay, and its replay needs ``load(before_snapshot=newest)``
-        to remain answerable (load() raises below the compaction
-        floor). Pass an explicit ``up_to`` < newest to keep more tail.
-
-        Crash safety is the same marker protocol as commit(): the new
-        base is written to a fresh ``base-<uuid>`` dir, then
-        ``_compaction.json`` is atomically replaced (os.replace) — the
-        COMMIT POINT — then superseded dirs (old base, per-snapshot
-        dirs <= up_to) are deleted. A crash before the marker leaves an
-        ignored orphan base; a crash during deletion leaves superseded
-        dirs that snapshots() skips and the next compact() sweeps.
-
-        CONCURRENCY (VERDICT r4 #7). compact() vs a concurrent
-        ``commit()`` needs no lock — every interleaving is safe by
-        marker ordering:
-
-        - commit of a NEW id lands a ``snapshot=N`` dir with N > up_to
-          (up_to is chosen from the snapshots visible at entry, and the
-          guards pin it below the newest): the sweep only removes ids
-          <= up_to, and the marker floor stays below N, so the new
-          snapshot is visible throughout.
-        - a REPLAYED streaming commit (explicit snapshot_id <= up_to)
-          rewrites, by the replay-determinism contract, IDENTICAL
-          content that the base already merged. If the marker lands
-          first, commit() raises at its floor check; if commit wins the
-          race, the re-created dir sits at-or-below the floor where
-          snapshots() permanently ignores it — either way load()
-          answers are unchanged. (A mid-scan overwrite can at worst
-          fail compact's read -> it aborts BEFORE the marker; rerun.)
-        - concurrent AUTO-id commits were never safe with or without
-          compaction (both compute max+1); streaming always passes the
-          batch id, and batch callers must serialize their own commits.
-
-        compact() vs compact() DOES need exclusion: each sweeps every
-        ``base-*`` dir except its own, so the slower compactor's marker
-        could end up naming a base the faster one already deleted. A
-        ``_compact.lock`` (O_CREAT|O_EXCL — atomic on POSIX and HDFS-
-        style stores) serializes them; a lock older than
-        ``lock_ttl_s`` is presumed crashed and taken over."""
-        os.makedirs(self.path, exist_ok=True)
-        lock = os.path.join(self.path, "_compact.lock")
-        try:
-            fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-        except FileExistsError:
-            age = time.time() - os.path.getmtime(lock)
-            if age < lock_ttl_s:
-                raise RuntimeError(
-                    f"another compact() holds {lock} (age {age:.0f}s < "
-                    f"ttl {lock_ttl_s}s); concurrent compactions would "
-                    "sweep each other's base dirs"
-                )
-            os.replace(lock, lock + ".stale")  # takeover: rename, then own it
-            os.remove(lock + ".stale")
-            fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-        os.write(fd, json.dumps({"pid": os.getpid(), "at": time.time()}).encode())
-        os.close(fd)
-        try:
-            return self._compact_locked(up_to)
-        finally:
-            try:
-                os.remove(lock)
-            except OSError:
-                pass
-
-    def _compact_locked(self, up_to: int | None) -> SnapshotInfo:
-        import uuid
-
-        snaps = self.snapshots()
-        if len(snaps) < 2:
-            raise ValueError(
-                f"need >=2 uncompacted snapshots to compact, have {snaps}"
-            )
-        if up_to is None:
-            up_to = snaps[-2]
-        if up_to >= snaps[-1]:
-            raise ValueError(
-                f"up_to={up_to} must leave the newest snapshot {snaps[-1]} "
-                "uncompacted (streaming replay bound)"
-            )
-        if up_to < snaps[0]:
-            raise ValueError(f"up_to={up_to} covers no uncompacted snapshot")
-        old = self._compaction()
-
-        pairs = self.load(before_snapshot=up_to + 1).distinct()
-        base_name = f"base-{uuid.uuid4().hex[:12]}"
-        base_dir = os.path.join(self.path, base_name)
-        pairs.write.mode("error").parquet(base_dir)
-
-        covered = [s for s in snaps if s <= up_to]
-        metrics = {
-            "covers_up_to": up_to,
-            "compacted_snapshots": covered
-            + ([f"base<= {old['covers_up_to']}"] if old else []),
-            "committed_at_unix": time.time(),
-            "total_rows": self.spark.read.parquet(base_dir).count(),
-        }
-        with open(os.path.join(base_dir, "_metrics.json"), "w") as f:
-            json.dump(metrics, f, indent=1)
-
-        # COMMIT POINT: atomic marker replace
-        marker = {"base_dir": base_name, "covers_up_to": up_to}
-        tmp = os.path.join(self.path, self.MARKER + ".tmp")
-        with open(tmp, "w") as f:
-            json.dump(marker, f)
-        os.replace(tmp, os.path.join(self.path, self.MARKER))
-
-        # sweep superseded dirs (old bases + compacted snapshots); also
-        # catches leftovers from a previously crashed sweep
-        for d in os.listdir(self.path):
-            p = os.path.join(self.path, d)
-            if d.startswith("base-") and d != base_name:
-                shutil.rmtree(p, ignore_errors=True)
-            elif d.startswith("snapshot="):
-                try:
-                    sid = int(d.split("=", 1)[1])
-                except ValueError:
-                    shutil.rmtree(p, ignore_errors=True)  # uncommitted garbage
-                    continue
-                if sid <= up_to:
-                    shutil.rmtree(p, ignore_errors=True)
-        return SnapshotInfo(up_to, base_dir, metrics)
-
-
-def convert_incremental(
-    connections: DataFrame,
-    store: HistoryStore,
-    fresh: bool = False,
-    run_info: dict | None = None,
-) -> tuple[DataFrame, SnapshotInfo]:
-    """Full incremental conversion step: anti-join against history, emit
-    the delta, commit it as a new snapshot. Returns (delta, snapshot).
-
-    The delta is materialized ONCE (``materialize``) before the
-    commit: it has two consumers — the snapshot write here and the
-    caller's output write — and without the cut each would re-execute
-    the whole extraction+conversion+anti-join DAG (the streaming path
-    applies the same fix in process_pages_batch).
-    """
-    if fresh:
-        store.fresh()
-    delta = materialize(store.differential(connections))
-    snap = store.commit(delta, run_info)
-    return delta, snap

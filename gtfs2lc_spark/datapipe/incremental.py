@@ -5,11 +5,10 @@ batch must be deduplicated against the 10^12 documents already
 accepted, WITHOUT rescanning them. The connection pipeline solved the
 identical problem for (feed, uniqueId, date) pairs with the J7 history
 anti-join (checkpoint.HistoryStore: snapshot dirs, metrics-as-commit-
-marker, replay determinism via ``before_snapshot``, compaction); this
-module instantiates that machinery for document fingerprints, so a
-new batch pays one fingerprint scan of ITSELF plus an anti-join whose
-build side is the (compacted) fingerprint history — never a rescan of
-the corpus bodies.
+marker, replay determinism via ``before_snapshot``); this module
+instantiates that machinery for document fingerprints, so a new batch
+pays one fingerprint scan of ITSELF plus an anti-join whose build side
+is the fingerprint history — never a rescan of the corpus bodies.
 
 Reference analogy: gtfs2lc's own incremental mode deduplicates each
 run against LevelDB history (lib/stoptimes2connections/
@@ -31,8 +30,8 @@ FP_COLS = ("fp",)
 
 class CorpusDedupStore(HistoryStore):
     """Fingerprint history store: same parquet-snapshot + commit-marker
-    + compaction protocol as the connection history, keyed on the
-    single ``fp`` column."""
+    protocol as the connection history, keyed on the single ``fp``
+    column."""
 
     def __init__(self, spark: SparkSession, path: str):
         super().__init__(spark, path, key_cols=FP_COLS)
@@ -74,11 +73,8 @@ def commit_batch(
     survivors: DataFrame,
     store: CorpusDedupStore,
     snapshot_id: int | None = None,
-    run_info: dict | None = None,
 ) -> SnapshotInfo:
     """Append the batch's surviving fingerprints as the next snapshot
     (idempotent when ``snapshot_id`` is pinned to the batch id —
     replays overwrite their own snapshot)."""
-    return store.commit(
-        survivors.select("fp"), run_info=run_info, snapshot_id=snapshot_id
-    )
+    return store.commit(survivors.select("fp"), snapshot_id=snapshot_id)

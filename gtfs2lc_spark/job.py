@@ -27,8 +27,9 @@ from pyspark.sql import DataFrame, SparkSession  # noqa: F401
 # absolute imports: spark-submit executes this file as a top-level
 # script (no package parent), with the package zip on --py-files
 from gtfs2lc_spark import FEED_TIMEZONE_DEFAULT, fixtures, pipeline, postprocess, sinks
-from gtfs2lc_spark.checkpoint import HistoryStore, convert_incremental
+from gtfs2lc_spark.checkpoint import HistoryStore
 from gtfs2lc_spark.extraction import extract_entities
+from gtfs2lc_spark.materialize import materialize
 from gtfs2lc_spark.schemas import PAGES_SCHEMA
 from gtfs2lc_spark.session import build_session
 from gtfs2lc_spark.uris import URIStrategy
@@ -173,7 +174,7 @@ def run(spark: SparkSession, args: argparse.Namespace) -> dict:
     ``main``); returns the run-summary dict the CLI prints."""
     t0 = time.time()
 
-    if getattr(args, "gtfs_dir", None):
+    if args.gtfs_dir:
         from gtfs2lc_spark.sources import read_gtfs_dir
 
         e = read_gtfs_dir(spark, args.gtfs_dir)
@@ -193,13 +194,15 @@ def run(spark: SparkSession, args: argparse.Namespace) -> dict:
         feed_tz=args.feed_tz, salt_n=args.salt or None,
     )
 
-    snap = None
+    store = snap = None
     if args.history:
         store = HistoryStore(spark, args.history)
-        conns, snap = convert_incremental(
-            conns, store, fresh=args.fresh,
-            run_info={"format": args.format, "output": args.output},
-        )
+        if args.fresh:
+            store.fresh()
+        # materialized once: the output write and the snapshot commit
+        # below both read the delta, and without the cut each would
+        # re-run the whole extraction + conversion + anti-join
+        conns = materialize(store.differential(conns))
 
     base_uris = None
     if args.base_uris:
@@ -212,7 +215,7 @@ def run(spark: SparkSession, args: argparse.Namespace) -> dict:
 
     out = build_outputs(
         conns, args.format, URIStrategy(base_uris, args.feed_tz), args.join_and_sort,
-        message_counter=getattr(args, "message_counter", False),
+        message_counter=args.message_counter,
     )
     header = format_header(args.format)
     if args.format == "triples-parquet":
@@ -240,8 +243,14 @@ def run(spark: SparkSession, args: argparse.Namespace) -> dict:
             with open(f"{args.output}/_header.txt", "w") as f:
                 f.write(header + "\n")
 
+    if store is not None:
+        # committed only once the output is written, as streaming does:
+        # a run that fails before this point leaves no snapshot, so its
+        # rerun emits the same delta instead of an empty one
+        snap = store.commit(conns, {"format": args.format, "output": args.output})
+
     quarantine = None
-    if getattr(args, "audit_missing_refs", False):
+    if args.audit_missing_refs:
         quarantine = [
             {"feed_id": r.feed_id, "missing_kind": r.missing_kind, "n_rows": r.n_rows}
             for r in pipeline.dimension_quarantine(

@@ -20,6 +20,9 @@ ISO_FMT = "yyyy-MM-dd'T'HH:mm:ss.SSS'Z'"
 # (driver O(k), independent of P) takes over. 8M keeps the sandbox's
 # 64-partition x 100k config on the count-free path.
 _SAMPLE_DRIVER_BUDGET_ROWS = 8_000_000
+# dense_index boundary sample: at most this many rows, hashed with this seed
+_SAMPLE_SIZE = 100_000
+_SAMPLE_SEED = 42
 
 # The @context record worker 0 emits as the first jsonld/mongold line —
 # exact key set and order of linkedConnectionsContext()
@@ -271,8 +274,6 @@ def dense_index(
     df: DataFrame,
     key_cols: list[str],
     n_parts: int | None = None,
-    sample_size: int = 100_000,
-    seed: int = 42,
 ) -> DataFrame:
     """Distributed dense 0-based index over the total order of
     ``key_cols`` (equal keys share an index) — a global
@@ -282,7 +283,7 @@ def dense_index(
     The bucket of a row is a PURE MONOTONE FUNCTION of its key (count
     of driver-sampled boundary tuples below the key), so equal keys
     co-locate by construction and nothing needs to be pinned. ONE
-    driver action before the rank: a bottom-``sample_size``-by-hash
+    driver action before the rank: a bottom-k-by-hash
     sampling pass — ``orderBy(xxhash64(key, seed, row_id)).limit(k)``
     compiles to TakeOrderedAndProject (per-partition top-k heaps +
     driver merge, NO shuffle, no prior count() to size a fraction: the
@@ -313,7 +314,7 @@ def dense_index(
     Huge-partition-count inputs: TakeOrderedAndProject's driver merge
     receives each partition's LOCAL bottom-k, i.e. O(P x k) rows — at
     1e5 scan partitions and k=1e5 that is 1e10 rows through the
-    driver, a scale-killer. When ``P x sample_size`` exceeds
+    driver, a scale-killer. When ``P x k`` exceeds
     ``_SAMPLE_DRIVER_BUDGET_ROWS`` the sample pass switches to a
     hash-threshold scheme: one cheap narrow count() sizes a threshold
     T with ~2k expected rows below it (xxhash64 is uniform over the
@@ -386,11 +387,11 @@ def dense_index(
         # ~256 samples per bucket (±6%) is plenty; the old flat 100k
         # default made the per-partition top-k heap the dominant cost
         # of the whole sample pass.
-        eff_k = min(sample_size, max(4096, 256 * n_parts))
+        eff_k = min(_SAMPLE_SIZE, max(4096, 256 * n_parts))
         narrow = df.select(
             *key_cols,
             F.xxhash64(
-                *key_cols, F.lit(seed), F.monotonically_increasing_id()
+                *key_cols, F.lit(_SAMPLE_SEED), F.monotonically_increasing_id()
             ).alias("_h"),
         )
         # .rdd triggers physical planning only (no job); with AQE the
@@ -474,7 +475,7 @@ def dense_index(
 
 
 def triples_with_message_counter(
-    conns: DataFrame, uris: URIStrategy | None = None, n_parts: int | None = None
+    conns: DataFrame, uris: URIStrategy | None = None
 ) -> DataFrame:
     """W4: RDF 1.2 message-log framing — every quad of one connection
     shares a messageCounter ordinal (lib/Connections2Triples.js:22-26,
@@ -497,7 +498,7 @@ def triples_with_message_counter(
     # dense_index contract requires a deterministic (checkpointed or
     # scanned) input anyway
     triples = materialize(connections_to_triples(conns, uris))
-    return dense_index(triples, ["subj"], n_parts).withColumnRenamed(
+    return dense_index(triples, ["subj"]).withColumnRenamed(
         "_dense_idx", "message_counter"
     )
 

@@ -200,8 +200,6 @@ def process_docs_batch(
     batch_id: int,
     store,
     output_dir: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> None:
     """One idempotent corpus-dedup micro-batch: within-batch min-id
     winners + anti-join against the fingerprint history of EARLIER
@@ -214,12 +212,7 @@ def process_docs_batch(
 
     if batch.isEmpty():
         return
-    survivors = materialize(
-        dedupe_batch(
-            batch, store, text_col=text_col, id_col=id_col,
-            before_snapshot=batch_id,
-        ),
-    )
+    survivors = materialize(dedupe_batch(batch, store, before_snapshot=batch_id))
     survivors.write.mode("overwrite").parquet(f"{output_dir}/batch={batch_id}")
     commit_batch(survivors, store, snapshot_id=batch_id)
 
@@ -236,8 +229,9 @@ def start_corpus_dedup_stream(
     """Stream a growing documents directory -> append cross-batch-unique
     documents (with their ``fp``) under ``output_dir/batch=N``. The
     history side is the skinny fingerprint store — per-trigger cost is
-    one fingerprint scan of the batch plus an anti-join whose build
-    side compacts (store.compact()) as batches accumulate."""
+    one fingerprint scan of the batch plus an anti-join against every
+    earlier batch's fingerprint snapshot (the store keeps one snapshot
+    per batch; nothing merges them)."""
     from .datapipe.incremental import CorpusDedupStore
 
     store = CorpusDedupStore(spark, history_dir)

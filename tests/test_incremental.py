@@ -59,7 +59,7 @@ def test_incremental_replay_determinism(spark, tmp_path):
     assert incremental.dedupe_batch(b1, store).count() == 0
 
 
-def test_fp_store_load_schema_and_compaction(spark, tmp_path):
+def test_fp_store_load_schema(spark, tmp_path):
     store = incremental.CorpusDedupStore(spark, str(tmp_path / "store"))
     for sid, txt in enumerate(["a", "b", "c"]):
         incremental.commit_batch(
@@ -70,9 +70,6 @@ def test_fp_store_load_schema_and_compaction(spark, tmp_path):
     hist = store.load()
     assert hist.columns == ["fp"]
     assert hist.count() == 3
-    store.compact()
-    assert store.compacted_through() == 1
-    assert store.load().count() == 3  # answers unchanged across the boundary
 
 
 def _write_docs(spark, path, rows):

@@ -78,6 +78,36 @@ def test_feed_tz_reaches_trip_uris(spark, tmp_path):
     assert weekdays <= {"Sat", "Sun"}, sorted(days)
 
 
+def test_history_commits_after_the_output(spark, tmp_path, monkeypatch):
+    """A --history run whose output write fails commits no snapshot,
+    so its rerun emits the whole delta. Committed before the write,
+    the snapshot would hold every pair and the rerun would write none."""
+    from gtfs2lc_spark.checkpoint import HistoryStore
+
+    out, hist = str(tmp_path / "out"), str(tmp_path / "history")
+    argv = ["--synthesize-feeds", "1", "--output", out, "--format", "jsonld",
+            "--history", hist]
+    writer = type(spark.range(0).write)  # the session's concrete writer class
+
+    def fail(self, *args, **kwargs):
+        raise RuntimeError("output write failed")
+
+    with monkeypatch.context() as m:
+        m.setattr(writer, "text", fail)
+        with pytest.raises(RuntimeError, match="output write failed"):
+            job.run(spark, job.parse_args(argv))
+    assert HistoryStore(spark, hist).snapshots() == []
+
+    msg = job.run(spark, job.parse_args(argv))
+    records = []
+    for f in sorted(glob.glob(f"{out}/part-*")):
+        with open(f) as fh:
+            records += [json.loads(ln) for ln in fh if ln.strip()]
+    assert len(records) == 3472
+    assert all(r["@type"] == "Connection" for r in records)
+    assert msg["snapshot"]["total_rows"] == 3472
+
+
 def test_mongo_format(spark, tmp_path):
     lines = _lines(_run(spark, tmp_path, "mongo"))
     rec = json.loads(lines[0])

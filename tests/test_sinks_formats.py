@@ -278,9 +278,11 @@ def test_dense_index_hash_threshold_sample_path(spark, monkeypatch):
     driver O(k) regardless of P) must produce the same dense index as
     a global dense_rank — boundary choice affects balance only."""
     monkeypatch.setattr(sinks, "_SAMPLE_DRIVER_BUDGET_ROWS", 0)
+    # a 200-row sample: the threshold keeps ~400 of the 2,002 rows
+    monkeypatch.setattr(sinks, "_SAMPLE_SIZE", 200)
     rows = [(f"k{i % 37:03d}", i % 11) for i in range(2000)] + [("a", None), (None, 5)]
     df = spark.createDataFrame(rows, "k string, v int")
-    out = sinks.dense_index(df, ["k", "v"], n_parts=8, sample_size=200).collect()
+    out = sinks.dense_index(df, ["k", "v"], n_parts=8).collect()
     got = {}
     for r in out:
         got.setdefault((r.k, r.v), set()).add(r._dense_idx)

@@ -1,5 +1,6 @@
-"""Every public top-level def and class in ``gtfs2lc_spark/`` must be
-reached from a product surface: the driver contract
+"""Every public top-level def and class in ``gtfs2lc_spark/``, and
+every public method of those classes, must be reached from a product
+surface: the driver contract
 (``__spark_entry__.py``), the package's own modules (the ``job`` and
 ``sortjob`` CLIs, LC streaming ingest), ``scripts/`` and the bench
 (``perfbench/``). Code that only tests name is dead code — delete it
@@ -7,7 +8,8 @@ with its tests instead of keeping it alive here.
 
 References are collected with ``ast`` (``Name`` ids and ``Attribute``
 attrs), not ``tokenize``: on Python 3.11 a name used inside an
-f-string is not a token of its own."""
+f-string is not a token of its own. A method counts as reached when
+its name is used as an attribute anywhere on a surface."""
 
 import ast
 from pathlib import Path
@@ -43,13 +45,25 @@ def _referenced_names() -> set[str]:
     return names
 
 
+def _public(nodes):
+    return [
+        n for n in nodes
+        if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
+        and not n.name.startswith("_")
+    ]
+
+
 def _public_definitions() -> dict[str, str]:
+    """Name -> location of every public top-level definition, and of
+    every public method as ``Class.method``."""
     defs = {}
     for path in sorted(PACKAGE.rglob("*.py")):
-        for node in ast.parse(path.read_text(), str(path)).body:
-            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)) \
-                    and not node.name.startswith("_"):
-                defs[node.name] = f"{path.relative_to(ROOT)}:{node.lineno}"
+        where = path.relative_to(ROOT)
+        for node in _public(ast.parse(path.read_text(), str(path)).body):
+            defs[node.name] = f"{where}:{node.lineno}"
+            if isinstance(node, ast.ClassDef):
+                for meth in _public(node.body):
+                    defs[f"{node.name}.{meth.name}"] = f"{where}:{meth.lineno}"
     return defs
 
 
@@ -58,7 +72,7 @@ def test_every_public_definition_is_reached_from_a_surface():
     unreached = {
         name: where
         for name, where in _public_definitions().items()
-        if name not in referenced and name not in ALLOWED_UNREFERENCED
+        if name.rsplit(".", 1)[-1] not in referenced and name not in ALLOWED_UNREFERENCED
     }
     assert not unreached, f"defined but reached by no product surface: {unreached}"
 
