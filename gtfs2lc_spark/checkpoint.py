@@ -22,11 +22,12 @@ rejected when the store is built.
   snapshot, so any partition's provenance is auditable and a resumed
   run can verify what landed without recomputation.
 
-One commit order serves both surfaces (``job.run`` and
-streaming.process_pages_batch): anti-join against history, materialize
-the delta, write the output, then ``commit()`` the delta LAST. A run
-that fails before its commit leaves no committed snapshot, so its
-rerun emits the same delta again instead of losing it.
+``HistoryStore.emit`` is the one ingest path, and both surfaces
+(``job.run`` and ``streaming.process_pages_batch``) call it. It
+anti-joins against history, materializes the delta, writes the output,
+then ``commit()``s the delta LAST. A run that fails before its commit
+leaves no committed snapshot, so its rerun emits the same delta again
+instead of losing it.
 
 ``differential()`` is a left_anti join on (feed_id, unique_id,
 service_date). The history side is keyed the same way the exploded
@@ -39,11 +40,14 @@ import json
 import os
 import shutil
 import time
+from collections.abc import Callable
 from dataclasses import dataclass
 from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .materialize import materialize
 
 PAIR_COLS = ("feed_id", "unique_id", "service_date")
 
@@ -151,6 +155,29 @@ class HistoryStore:
         if hist is None:
             return connections
         return connections.join(hist, list(self.key_cols), "left_anti")
+
+    def emit(
+        self,
+        connections: DataFrame,
+        write: Callable[[DataFrame], None],
+        run_info: dict | None = None,
+        snapshot_id: int | None = None,
+    ) -> SnapshotInfo:
+        """The one ingest path: anti-join ``connections`` against the
+        snapshots before ``snapshot_id`` (all of them when it is None),
+        materialize the delta once, ``write(delta)``, then commit the
+        delta as snapshot ``snapshot_id`` (the next id when None).
+
+        The write and the commit both read the delta; the lineage cut
+        keeps either from re-running the conversion and the anti-join.
+        Committing last means a run that fails in ``write`` leaves no
+        snapshot, so its rerun emits the same delta. A pinned
+        ``snapshot_id`` (streaming: the micro-batch id) bounds the
+        anti-join and names the commit with the same number, so a
+        replayed batch rewrites its original delta and snapshot."""
+        delta = materialize(self.differential(connections, before_snapshot=snapshot_id))
+        write(delta)
+        return self.commit(delta, run_info, snapshot_id)
 
     def commit(
         self,

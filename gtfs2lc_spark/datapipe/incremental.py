@@ -56,8 +56,8 @@ def dedupe_batch(
     exactly what :func:`commit_batch` appends to the store. Pure plan
     (no side effects): callers control when the store advances, and a
     replayed batch with ``before_snapshot`` set recomputes its
-    original answer even after its own commit landed (the streaming
-    exactly-once contract, same as the connection path).
+    original answer even after its own commit landed (the replay
+    contract of the connection stream, ``HistoryStore.emit``).
     """
     with_fp = docs.withColumn("fp", fingerprint(F.col(text_col)))
     w = Window.partitionBy("fp").orderBy(id_col)

@@ -100,22 +100,33 @@ def detect_pages(pages: DataFrame) -> DataFrame:
     prefiltered = pages.where(F.col("text").startswith(GTFS_MARKER)).select(
         "url", "warc_ts", "text"
     )
-    # Common-Crawl-style input re-crawls pages: the NEWEST crawl of a
-    # url must replace older ones, or every duplicated stop_times page
-    # doubles its rows and the lag window pairs garbage (the streaming
-    # path already dedups its staging per url; this is the batch-path
-    # equivalent). ``hit`` leads the struct, so a detected crawl beats
-    # any near miss; a url with no detected crawl is dropped after the
-    # aggregate. Deterministic: ties on warc_ts resolve by content.
-    return (
+    return newest_crawl_per_url(
         prefiltered.repartition("url")
         .withColumn("g", detect_gtfs("text"))
-        .groupBy("url")
+        .select("url", "warc_ts", "g.*")
+    )
+
+
+def newest_crawl_per_url(crawls: DataFrame) -> DataFrame:
+    """(url, warc_ts, gtfs_file, feed_id, header, body) crawls -> the
+    newest detected crawl of each url; urls with no detected crawl
+    (``gtfs_file`` null: a near miss) are dropped.
+
+    Common-Crawl-style input re-crawls pages. The newest crawl of a url
+    must replace the older ones, or every re-crawled stop_times page
+    doubles its rows and the lag window pairs garbage. A detected crawl
+    beats any near miss; ``warc_ts`` decides next, and ties on
+    ``warc_ts`` resolve by content. Arrival order plays no part, so
+    ``detect_pages`` on one batch and the streaming staging aggregate
+    over many batches pick the same winner from the same crawls, and a
+    replayed batch picks it again."""
+    return (
+        crawls.groupBy("url")
         .agg(
             F.max(
                 F.struct(
-                    F.col("g.gtfs_file").isNotNull().alias("hit"),
-                    "warc_ts", "g.gtfs_file", "g.feed_id", "g.header", "g.body",
+                    F.col("gtfs_file").isNotNull().alias("hit"),
+                    "warc_ts", "gtfs_file", "feed_id", "header", "body",
                 )
             ).alias("_s")
         )

@@ -188,60 +188,6 @@ def page_url(feed_id: str, file_name: str) -> str:
     return f"https://transit.example.org/feeds/{feed_id}/{file_name}"
 
 
-def skewed_entities(
-    spark: SparkSession,
-    mega_rows: int = 50_000,
-    feed_id: str = "skewfeed",
-) -> dict[str, DataFrame]:
-    """Entity DataFrames with a deliberately skewed mega-trip — the
-    north_rule's named risk shape: ONE trip ("MEGA", on the 180-date
-    FULLW service) owning ``mega_rows`` stop_times on top of the sample
-    feed, so by default ~99.9% of stop_times belong to a single trip_id.
-    Used by the bench's salted-vs-unsalted section and the skew pytests;
-    the convert() output must be identical for every ``salt_n``.
-
-    The mega rows are generated distributed (spark.range), with
-    arrival == departure each 30 s apart across alternating stops —
-    every consecutive pair therefore survives P1 and becomes a
-    connection rule, giving (mega_rows - 1) x 180 connections that,
-    UNSALTED, all explode inside one (feed_id, trip_id) partition."""
-    ents = dict(entity_dfs(spark, feed_id=feed_id))
-    st = ents["stop_times"]
-    secs = (F.col("id") * 30 + 4 * 3600).cast("long")
-    hms = F.concat_ws(
-        ":",
-        F.floor(secs / 3600).cast("string"),  # H>23 allowed by P5
-        F.lpad((F.floor(secs / 60) % 60).cast("string"), 2, "0"),
-        F.lpad((secs % 60).cast("string"), 2, "0"),
-    )
-    mega = spark.range(1, mega_rows + 1).select(
-        F.lit("MEGA").alias("trip_id"),
-        hms.alias("arrival_time"),
-        hms.alias("departure_time"),
-        F.when(F.col("id") % 2 == 0, F.lit("BEATTY_AIRPORT"))
-        .otherwise(F.lit("BULLFROG"))
-        .alias("stop_id"),
-        F.col("id").cast("string").alias("stop_sequence"),
-        F.lit("").alias("stop_headsign"),
-        F.lit("").alias("pickup_type"),
-        F.lit("").alias("drop_off_type"),
-        F.lit("").alias("shape_dist_traveled"),
-        F.lit(feed_id).alias("feed_id"),
-        F.lit(page_url(feed_id, "stop_times.txt")).alias("url"),
-        (F.col("id") + 10_000_000).alias("_line"),
-    )
-    ents["stop_times"] = st.unionByName(mega)
-    trips = ents["trips"]
-    mega_trip = (
-        trips.limit(1)
-        .withColumn("trip_id", F.lit("MEGA"))
-        .withColumn("service_id", F.lit("FULLW"))
-        .withColumn("block_id", F.lit(""))
-    )
-    ents["trips"] = trips.unionByName(mega_trip)
-    return ents
-
-
 def _noise_text(i: int) -> str:
     h = hashlib.sha256(f"noise-{i}".encode()).hexdigest()
     words = [h[j : j + 6] for j in range(0, 60, 6)]

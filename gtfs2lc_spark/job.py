@@ -29,7 +29,6 @@ from pyspark.sql import DataFrame, SparkSession  # noqa: F401
 from gtfs2lc_spark import FEED_TIMEZONE_DEFAULT, fixtures, pipeline, postprocess, sinks
 from gtfs2lc_spark.checkpoint import HistoryStore
 from gtfs2lc_spark.extraction import extract_entities
-from gtfs2lc_spark.materialize import materialize
 from gtfs2lc_spark.schemas import PAGES_SCHEMA
 from gtfs2lc_spark.session import build_session
 from gtfs2lc_spark.uris import URIStrategy
@@ -194,16 +193,6 @@ def run(spark: SparkSession, args: argparse.Namespace) -> dict:
         feed_tz=args.feed_tz, salt_n=args.salt or None,
     )
 
-    store = snap = None
-    if args.history:
-        store = HistoryStore(spark, args.history)
-        if args.fresh:
-            store.fresh()
-        # materialized once: the output write and the snapshot commit
-        # below both read the delta, and without the cut each would
-        # re-run the whole extraction + conversion + anti-join
-        conns = materialize(store.differential(conns))
-
     base_uris = None
     if args.base_uris:
         with open(args.base_uris) as f:
@@ -212,42 +201,47 @@ def run(spark: SparkSession, args: argparse.Namespace) -> dict:
         from gtfs2lc_spark.uris import FEED_SCOPED_BASE_URIS
 
         base_uris = FEED_SCOPED_BASE_URIS
-
-    out = build_outputs(
-        conns, args.format, URIStrategy(base_uris, args.feed_tz), args.join_and_sort,
-        message_counter=args.message_counter,
-    )
+    uris = URIStrategy(base_uris, args.feed_tz)
     header = format_header(args.format)
-    if args.format == "triples-parquet":
-        out.write.mode("overwrite").parquet(args.output)
-    elif args.single_file:
-        # S7: the reference merges worker shards into ONE file on the
-        # main thread, worker 0 (and thus the header/@context) first
-        # (mergeWorkerOutput, lib/gtfs2connections.js:155-184). Same
-        # here: write shards, driver-concat in shard order.
-        shards_dir = f"{args.output}/_shards"
-        out.write.mode("overwrite").text(shards_dir)
-        ext = FORMAT_EXT.get(args.format, "txt") + (".gz" if args.compressed else "")
-        merge_shards(shards_dir, f"{args.output}/linkedConnections.{ext}",
-                     header, gz=args.compressed)
-    else:
-        writer = out.write.mode("overwrite")
-        if args.compressed:
-            writer = writer.option("compression", "gzip")
-        writer.text(args.output)
-        if header is not None:
-            # O5: header emitted once, driver-side (reference: only
-            # worker 0 streams the header / @context / @version —
-            # lib/Connections2CSV.js:12-17, lib/gtfs2connections.js:265-294).
-            # '_'-prefixed: sorts first for cat, ignored by Spark readers.
-            with open(f"{args.output}/_header.txt", "w") as f:
-                f.write(header + "\n")
 
-    if store is not None:
-        # committed only once the output is written, as streaming does:
-        # a run that fails before this point leaves no snapshot, so its
-        # rerun emits the same delta instead of an empty one
-        snap = store.commit(conns, {"format": args.format, "output": args.output})
+    def write(conns: DataFrame) -> None:
+        out = build_outputs(
+            conns, args.format, uris, args.join_and_sort,
+            message_counter=args.message_counter,
+        )
+        if args.format == "triples-parquet":
+            out.write.mode("overwrite").parquet(args.output)
+        elif args.single_file:
+            # S7: the reference merges worker shards into ONE file on the
+            # main thread, worker 0 (and thus the header/@context) first
+            # (mergeWorkerOutput, lib/gtfs2connections.js:155-184). Same
+            # here: write shards, driver-concat in shard order.
+            shards_dir = f"{args.output}/_shards"
+            out.write.mode("overwrite").text(shards_dir)
+            ext = FORMAT_EXT.get(args.format, "txt") + (".gz" if args.compressed else "")
+            merge_shards(shards_dir, f"{args.output}/linkedConnections.{ext}",
+                         header, gz=args.compressed)
+        else:
+            writer = out.write.mode("overwrite")
+            if args.compressed:
+                writer = writer.option("compression", "gzip")
+            writer.text(args.output)
+            if header is not None:
+                # O5: header emitted once, driver-side (reference: only
+                # worker 0 streams the header / @context / @version —
+                # lib/Connections2CSV.js:12-17, lib/gtfs2connections.js:265-294).
+                # '_'-prefixed: sorts first for cat, ignored by Spark readers.
+                with open(f"{args.output}/_header.txt", "w") as f:
+                    f.write(header + "\n")
+
+    snap = None
+    if args.history:
+        store = HistoryStore(spark, args.history)
+        if args.fresh:
+            store.fresh()
+        snap = store.emit(conns, write, {"format": args.format, "output": args.output})
+    else:
+        write(conns)
 
     quarantine = None
     if args.audit_missing_refs:

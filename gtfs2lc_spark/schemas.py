@@ -37,8 +37,6 @@ PAGES_SCHEMA = T.StructType(
 # the sample-feed headers; they sit LAST so the sample CSV rows still map
 # onto these tuples by position (oracle._values_cte pads the tail with '').
 
-LINEAGE_COLS = ("feed_id", "url")
-
 STOP_TIMES_COLS = (
     "trip_id",
     "arrival_time",
@@ -103,23 +101,3 @@ GTFS_FILE_COLS: dict[str, tuple[str, ...]] = {
     "calendar.txt": CALENDAR_COLS,
     "calendar_dates.txt": CALENDAR_DATES_COLS,
 }
-
-STOP_TIMES_SCHEMA = _string_struct(*STOP_TIMES_COLS)
-TRIPS_SCHEMA = _string_struct(*TRIPS_COLS)
-ROUTES_SCHEMA = _string_struct(*ROUTES_COLS)
-STOPS_SCHEMA = _string_struct(*STOPS_COLS)
-CALENDAR_SCHEMA = _string_struct(*CALENDAR_COLS)
-CALENDAR_DATES_SCHEMA = _string_struct(*CALENDAR_DATES_COLS)
-
-# ---- Triple output (the P/R comparison surface; BASELINE.json) --------------
-
-TRIPLES_SCHEMA = T.StructType(
-    [
-        T.StructField("subj", T.StringType(), False),
-        T.StructField("pred", T.StringType(), False),
-        T.StructField("obj", T.StringType(), False),
-        # 'iri' | 'literal'; literals carry datatype for N-Triples rendering
-        T.StructField("obj_kind", T.StringType(), False),
-        T.StructField("obj_datatype", T.StringType(), True),
-    ]
-)

@@ -17,7 +17,6 @@ from pyspark.sql import functions as F
 from .schemas import GTFS_FILE_COLS, _string_struct
 
 REQUIRED_FILES = ("stop_times.txt", "trips.txt", "routes.txt", "stops.txt")
-OPTIONAL_FILES = ("calendar.txt", "calendar_dates.txt")
 
 
 def read_gtfs_dir(

@@ -7,12 +7,13 @@ native extension a continuously-crawled corpus needs. Shape:
     readStream(pages dir) ──▶ foreachBatch:
         detect_pages(batch)                     (pandas-UDF, batch only)
         stage detected pages                    (staging/batch=N, overwrite)
-        entities_from_detected(staged ∪)        (ALL staged pages of the
+        newest_crawl_per_url(staged)            (ALL staged pages of the
                                                  feeds touched this batch)
-        pipeline.convert(...)                   (same batch algebra)
-        HistoryStore.differential(< batch N)    (delta vs earlier batches)
-        write delta                             (output/batch=N, overwrite)
-        HistoryStore.commit(snapshot_id = N)
+        entities_from_detected + convert        (same batch algebra)
+        HistoryStore.emit(snapshot_id = N):     (job.run's ingest path)
+            anti-join vs snapshots < N          (delta vs earlier batches)
+            write delta                         (output/batch=N, overwrite)
+            commit snapshot N                   (commit marker last)
 
 Why stage-and-reconvert instead of converting each batch in isolation:
 a feed spans 4-6 GTFS files, and the file source (maxFilesPerTrigger)
@@ -48,7 +49,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from . import FEED_TIMEZONE_DEFAULT, pipeline, sinks
 from .checkpoint import HistoryStore
-from .extraction import detect_pages, entities_from_detected
+from .extraction import detect_pages, entities_from_detected, newest_crawl_per_url
 from .materialize import materialize
 from .schemas import PAGES_SCHEMA
 from .uris import URIStrategy
@@ -70,7 +71,6 @@ def process_pages_batch(
     staging_dir: str,
     output_dir: str,
     feed_tz: str = FEED_TIMEZONE_DEFAULT,
-    salt_n: int | None = 16,
 ) -> None:
     """One idempotent micro-batch step (see module docstring). Public so
     tests can drive crash/replay scenarios without a streaming query."""
@@ -83,25 +83,18 @@ def process_pages_batch(
         return
     # A re-crawled url (same url detected again in a later batch — the
     # natural update path for a continuously-crawled corpus) must
-    # REPLACE its earlier staged rows, not union with them. Order of
-    # operations matters three times over:
-    #
-    # - newest-per-url is taken over ALL staged rows BEFORE the feed_id
-    #   filter: a url whose newest crawl moved to a different feed must
-    #   not resurrect its stale snapshot when its old feed is touched;
-    # - "newest" is decided by warc_ts FIRST (the crawl time), exactly
-    #   like the batch path (detect_pages): a later-arriving batch that
-    #   backfills an OLDER crawl of a url does NOT replace the staged
-    #   newer snapshot. Batch id then content break warc_ts ties, so
-    #   two crawls of one url in the SAME batch still resolve to a
-    #   deterministic row and a crash-replayed batch reproduces its
-    #   delta byte-for-byte.
+    # REPLACE its earlier staged rows, not union with them, by the same
+    # newest-crawl rule as the batch path: a later-arriving batch that
+    # backfills an OLDER crawl of a url does not replace the staged
+    # newer one. The newest crawl per url is taken over ALL staged rows
+    # BEFORE the feed_id filter: a url whose newest crawl moved to a
+    # different feed must not resurrect its stale snapshot when its old
+    # feed is touched.
     #
     # (A url whose newer crawl no longer contains GTFS content is not
     # re-detected, so its last detected snapshot remains staged —
     # retraction would need an explicit tombstone, out of scope.)
     staged_all = spark.read.parquet(staging_dir)
-    data_cols = [c for c in staged_all.columns if c != "batch"]
     # cheap per-trigger preselect (2-column pruned scan): urls that have
     # EVER carried a touched feed — the full-width body scan below only
     # reads these urls' rows, keeping per-trigger cost proportional to
@@ -112,24 +105,9 @@ def process_pages_batch(
         .select("url")
         .distinct()
     )
-    staged = (
+    staged = newest_crawl_per_url(
         staged_all.join(F.broadcast(touched_urls), "url")
-        .groupBy("url")
-        .agg(
-            F.max(
-                F.struct(
-                    F.col("warc_ts").alias("_ts"),
-                    F.col("batch").cast("long").alias("_b"),
-                    *[F.col(c).alias(c) for c in data_cols],
-                )
-            ).alias("_s")
-        )
-        .select("_s.*")
-        .drop("_ts", "_b")
-        # the WINNER's feed decides membership: a url whose newest crawl
-        # moved to an untouched feed is dropped here, not resurrected
-        .where(F.col("feed_id").isin(feeds))
-    )
+    ).where(F.col("feed_id").isin(feeds))
     # materialize once: entities_from_detected embeds this subtree
     # into ~6 entity lineages plus two driver collects — Catalyst
     # doesn't share sub-plans (same rationale as extract_entities)
@@ -137,19 +115,16 @@ def process_pages_batch(
     e = entities_from_detected(staged)
     conns = pipeline.convert(
         e["stop_times"], e["trips"], e["routes"], e["stops"],
-        e["calendar"], e["calendar_dates"],
-        feed_tz=feed_tz, salt_n=salt_n,
+        e["calendar"], e["calendar_dates"], feed_tz=feed_tz,
     )
-    delta = store.differential(conns, before_snapshot=batch_id)
-    # persist: consumed twice (output + history commit)
-    delta = materialize(delta)
-    jsonld = sinks.connections_to_jsonld(delta, URIStrategy(feed_tz=feed_tz))
-    sinks.jsonld_lines(jsonld).write.mode("overwrite").text(
-        f"{output_dir}/batch={batch_id}"
-    )
-    store.commit(
-        delta, run_info={"stream_batch_id": batch_id}, snapshot_id=batch_id
-    )
+
+    def write(delta: DataFrame) -> None:
+        jsonld = sinks.connections_to_jsonld(delta, URIStrategy(feed_tz=feed_tz))
+        sinks.jsonld_lines(jsonld).write.mode("overwrite").text(
+            f"{output_dir}/batch={batch_id}"
+        )
+
+    store.emit(conns, write, {"stream_batch_id": batch_id}, snapshot_id=batch_id)
 
 
 def start_incremental_conversion(
@@ -160,7 +135,6 @@ def start_incremental_conversion(
     stream_checkpoint_dir: str,
     staging_dir: str | None = None,
     feed_tz: str = FEED_TIMEZONE_DEFAULT,
-    salt_n: int | None = 16,
     available_now: bool = True,
 ) -> StreamingQuery:
     """Stream pages -> append newly-discovered connection JSON-LD lines
@@ -170,8 +144,7 @@ def start_incremental_conversion(
 
     def process_batch(batch: DataFrame, batch_id: int) -> None:
         process_pages_batch(
-            spark, batch, batch_id, store, staging_dir, output_dir,
-            feed_tz=feed_tz, salt_n=salt_n,
+            spark, batch, batch_id, store, staging_dir, output_dir, feed_tz=feed_tz
         )
 
     writer = (
@@ -183,69 +156,3 @@ def start_incremental_conversion(
         writer = writer.trigger(availableNow=True)
     return writer.start()
 
-
-# ---------------------------------------------------------------------------
-# Streaming corpus dedup: the live twin of datapipe/incremental.py.
-# Same exactly-once protocol as the connection stream above — every
-# effect of batch N keyed by N with overwrite semantics, delta computed
-# against history snapshots < N only.
-
-DOCS_STREAM_SCHEMA = (
-    "doc_id bigint, text string, lang string, source string, n_chars bigint"
-)
-
-
-def process_docs_batch(
-    batch: DataFrame,
-    batch_id: int,
-    store,
-    output_dir: str,
-) -> None:
-    """One idempotent corpus-dedup micro-batch: within-batch min-id
-    winners + anti-join against the fingerprint history of EARLIER
-    batches (``before_snapshot=batch_id`` — a crash-replayed batch
-    recomputes its original delta even after its own commit landed),
-    survivors written to ``output_dir/batch=N`` (overwrite), fingerprint
-    snapshot committed LAST (metrics file = commit marker). Public so
-    tests can drive crash/replay without a streaming query."""
-    from .datapipe.incremental import commit_batch, dedupe_batch
-
-    if batch.isEmpty():
-        return
-    survivors = materialize(dedupe_batch(batch, store, before_snapshot=batch_id))
-    survivors.write.mode("overwrite").parquet(f"{output_dir}/batch={batch_id}")
-    commit_batch(survivors, store, snapshot_id=batch_id)
-
-
-def start_corpus_dedup_stream(
-    spark: SparkSession,
-    docs_dir: str,
-    output_dir: str,
-    history_dir: str,
-    stream_checkpoint_dir: str,
-    schema: str = DOCS_STREAM_SCHEMA,
-    available_now: bool = True,
-) -> StreamingQuery:
-    """Stream a growing documents directory -> append cross-batch-unique
-    documents (with their ``fp``) under ``output_dir/batch=N``. The
-    history side is the skinny fingerprint store — per-trigger cost is
-    one fingerprint scan of the batch plus an anti-join against every
-    earlier batch's fingerprint snapshot (the store keeps one snapshot
-    per batch; nothing merges them)."""
-    from .datapipe.incremental import CorpusDedupStore
-
-    store = CorpusDedupStore(spark, history_dir)
-
-    def process(batch: DataFrame, batch_id: int) -> None:
-        process_docs_batch(batch, batch_id, store, output_dir)
-
-    writer = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "4")
-        .parquet(docs_dir)
-        .writeStream.foreachBatch(process)
-        .option("checkpointLocation", stream_checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -8,7 +8,6 @@ import pytest
 
 from gtfs2lc_spark import pipeline
 from gtfs2lc_spark.checkpoint import HistoryStore
-from gtfs2lc_spark.materialize import materialize
 
 
 @pytest.fixture()
@@ -16,25 +15,26 @@ def store(spark, tmp_path):
     return HistoryStore(spark, str(tmp_path / "history"))
 
 
-def _increment(conns, store):
-    """One incremental run, in ``job.run``'s order: anti-join, cut the
-    delta's lineage, commit it."""
-    delta = materialize(store.differential(conns))
-    return delta, store.commit(delta)
+def _emit(conns, store):
+    """One ``store.emit`` run: the delta it handed to ``write``, and the
+    snapshot it committed."""
+    written = []
+    snap = store.emit(conns, written.append)
+    return written[0], snap
 
 
 def test_first_run_emits_all_then_nothing(spark, feed, store, connections):
-    delta1, snap1 = _increment(connections, store)
+    delta1, snap1 = _emit(connections, store)
     emitted = spark.read.parquet(snap1.path)
     assert emitted.count() == 3472
     # identical second run: everything already in history -> empty delta
-    delta2, snap2 = _increment(connections, store)
+    delta2, snap2 = _emit(connections, store)
     assert delta2.count() == 0
     assert snap2.metrics["total_rows"] == 0
 
 
 def test_new_service_dates_emit_only_delta(spark, feed, store, connections):
-    _increment(connections, store)
+    _emit(connections, store)
     # extend FULLW by one extra day via calendar_dates
     extra = spark.createDataFrame(
         [("FULLW", "20070701", "1", "samplefeed",
@@ -47,7 +47,7 @@ def test_new_service_dates_emit_only_delta(spark, feed, store, connections):
         feed["stop_times"], feed["trips"], feed["routes"], feed["stops"],
         feed["calendar"], cd2, salt_n=None,
     )
-    delta, snap = _increment(conns2, store)
+    delta, snap = _emit(conns2, store)
     rows = delta.select("trip_id", "service_date").collect()
     assert {r.service_date for r in rows} == {"20070701"}
     # FULLW trips: AB1 AB2 BFC1 BFC2 STBA (1 pair) + CITY1 CITY2 (4 pairs)
@@ -55,14 +55,14 @@ def test_new_service_dates_emit_only_delta(spark, feed, store, connections):
 
 
 def test_fresh_resets(spark, connections, store):
-    _increment(connections, store)
+    _emit(connections, store)
     store.fresh()
-    delta, _ = _increment(connections, store)
+    delta, _ = _emit(connections, store)
     assert delta.count() == 3472
 
 
 def test_metrics_lineage(spark, connections, store):
-    _, snap = _increment(connections, store)
+    _, snap = _emit(connections, store)
     with open(os.path.join(snap.path, "_metrics.json")) as f:
         m = json.load(f)
     assert m["total_rows"] == 3472
@@ -75,14 +75,14 @@ def test_kill_and_resume(spark, connections, store, tmp_path):
     """A snapshot dir without its _metrics.json commit marker is ignored:
     a killed run never corrupts history, and the resumed run re-emits
     exactly what the killed run failed to commit."""
-    delta1, snap1 = _increment(connections, store)
+    delta1, snap1 = _emit(connections, store)
     # simulate a crash after data write but before commit marker
     os.remove(os.path.join(snap1.path, "_metrics.json"))
     assert store.snapshots() == []
-    delta2, snap2 = _increment(connections, store)
+    delta2, snap2 = _emit(connections, store)
     assert spark.read.parquet(snap2.path).count() == 3472
     # and a third run on top emits nothing
-    delta3, _ = _increment(connections, store)
+    delta3, _ = _emit(connections, store)
     assert delta3.count() == 0
 
 
@@ -137,13 +137,13 @@ def test_kill_and_resume_reliable_strategy(
     spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
     spark.conf.set(mat.CONF_KEY, "reliable")
     try:
-        delta1, snap1 = _increment(connections, store)
+        delta1, snap1 = _emit(connections, store)
         assert delta1.count() == 3472
         os.remove(os.path.join(snap1.path, "_metrics.json"))
         assert store.snapshots() == []
-        delta2, snap2 = _increment(connections, store)
+        delta2, snap2 = _emit(connections, store)
         assert spark.read.parquet(snap2.path).count() == 3472
-        delta3, _ = _increment(connections, store)
+        delta3, _ = _emit(connections, store)
         assert delta3.count() == 0
         # each run's delta was cut by one eager reliable checkpoint
         assert checkpoint_calls == [True, True, True]
@@ -160,7 +160,7 @@ def test_file_uri_store_round_trip(spark, tmp_path):
     store = HistoryStore(spark, f"file://{tmp_path}/hist")
     assert store.path == f"{tmp_path}/hist"
     pairs = _pairs_df(spark, [("f", "u0", "20070101"), ("f", "u1", "20070101")])
-    delta, snap = _increment(pairs, store)
+    delta, snap = _emit(pairs, store)
     assert delta.count() == 2 and snap.snapshot_id == 0
     assert os.path.exists(os.path.join(snap.path, "_metrics.json"))
     assert store.snapshots() == [0]

@@ -71,66 +71,3 @@ def test_fp_store_load_schema(spark, tmp_path):
     assert hist.columns == ["fp"]
     assert hist.count() == 3
 
-
-def _write_docs(spark, path, rows):
-    spark.createDataFrame(
-        [(i, t, "en", "s", len(t)) for i, t in rows],
-        "doc_id bigint, text string, lang string, source string, n_chars bigint",
-    ).coalesce(1).write.mode("append").parquet(path)
-
-
-def _run_dedup_stream(spark, tmp):
-    from gtfs2lc_spark import streaming
-
-    q = streaming.start_corpus_dedup_stream(
-        spark, f"{tmp}/docs", f"{tmp}/out", f"{tmp}/history", f"{tmp}/ckpt"
-    )
-    q.awaitTermination(120)
-
-
-def test_corpus_dedup_stream_end_to_end(spark, tmp_path):
-    tmp = str(tmp_path)
-    _write_docs(spark, f"{tmp}/docs", [(1, "alpha"), (2, "beta"), (3, "alpha")])
-    _run_dedup_stream(spark, tmp)
-    out1 = spark.read.parquet(f"{tmp}/out/batch=*")
-    assert {r["doc_id"] for r in out1.collect()} == {1, 2}
-
-    # later files: cross-batch duplicates dropped, new text survives
-    _write_docs(spark, f"{tmp}/docs", [(10, "beta"), (11, "gamma")])
-    _run_dedup_stream(spark, tmp)
-    out2 = spark.read.parquet(f"{tmp}/out/batch=*")
-    assert {r["doc_id"] for r in out2.collect()} == {1, 2, 11}
-
-    # nothing new -> nothing emitted
-    _run_dedup_stream(spark, tmp)
-    assert {r["doc_id"] for r in
-            spark.read.parquet(f"{tmp}/out/batch=*").collect()} == {1, 2, 11}
-
-
-def test_docs_batch_replay_is_idempotent(spark, tmp_path):
-    """Crash between output write and history commit: replaying the
-    SAME batch id rewrites identical output and re-commits the same
-    snapshot — no double-drop, no double-emit."""
-    from gtfs2lc_spark import streaming
-    from gtfs2lc_spark.datapipe import incremental
-
-    tmp = str(tmp_path)
-    store = incremental.CorpusDedupStore(spark, f"{tmp}/history")
-    b0 = spark.createDataFrame(
-        [(1, "one", "en", "s", 3), (2, "two", "en", "s", 3)],
-        streaming.DOCS_STREAM_SCHEMA,
-    )
-    streaming.process_docs_batch(b0, 0, store, f"{tmp}/out")
-    b1 = spark.createDataFrame(
-        [(10, "two", "en", "s", 3), (11, "three", "en", "s", 5)],
-        streaming.DOCS_STREAM_SCHEMA,
-    )
-    streaming.process_docs_batch(b1, 1, store, f"{tmp}/out")
-    first = {r["doc_id"] for r in
-             spark.read.parquet(f"{tmp}/out/batch=1").collect()}
-    # replay batch 1 (its commit already landed)
-    streaming.process_docs_batch(b1, 1, store, f"{tmp}/out")
-    replay = {r["doc_id"] for r in
-              spark.read.parquet(f"{tmp}/out/batch=1").collect()}
-    assert first == replay == {11}
-    assert store.snapshots() == [0, 1]

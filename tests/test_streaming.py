@@ -4,6 +4,7 @@ even across crashes and feeds split over multiple micro-batches."""
 
 import json
 
+import pytest
 from pyspark.sql import functions as F
 
 from gtfs2lc_spark import fixtures, streaming
@@ -24,7 +25,6 @@ def _run_stream(spark, tmp):
         output_dir=f"{tmp}/out",
         history_dir=f"{tmp}/history",
         stream_checkpoint_dir=f"{tmp}/ckpt",
-        salt_n=8,
     )
     q.awaitTermination(300)
 
@@ -70,13 +70,13 @@ def test_feed_split_across_batches(spark, tmp_path):
     # batch 0 carries ONLY the stop_times page: inner dimension joins
     # yield nothing yet — but the page is staged, not lost
     streaming.process_pages_batch(
-        spark, stop_times_page, 0, store, f"{tmp}/staging", f"{tmp}/out", salt_n=8
+        spark, stop_times_page, 0, store, f"{tmp}/staging", f"{tmp}/out"
     )
     assert spark.read.text(f"{tmp}/out/batch=0").count() == 0
 
     # batch 1 carries the remaining pages: the full feed now converts
     streaming.process_pages_batch(
-        spark, rest, 1, store, f"{tmp}/staging", f"{tmp}/out", salt_n=8
+        spark, rest, 1, store, f"{tmp}/staging", f"{tmp}/out"
     )
     assert (
         spark.read.text(f"{tmp}/out/batch=*").count()
@@ -84,7 +84,7 @@ def test_feed_split_across_batches(spark, tmp_path):
     )
 
 
-def test_crash_between_output_and_commit(spark, tmp_path):
+def test_crash_between_output_and_commit(spark, tmp_path, monkeypatch):
     """VERDICT r1 'what's wrong' #1: a crash after the output write but
     before the history commit must NOT double-emit on replay. Replaying
     the same batch_id overwrites output/batch=N with the identical
@@ -93,27 +93,23 @@ def test_crash_between_output_and_commit(spark, tmp_path):
     store = HistoryStore(spark, f"{tmp}/history")
     pages = fixtures.pages_df(spark, feed_id="feedC", noise_pages=2).cache()
 
-    # simulate the crash window: run the batch body but skip the commit
-    from gtfs2lc_spark.extraction import detect_pages, entities_from_detected
-    from gtfs2lc_spark import pipeline, sinks
+    # simulate the crash window: the batch writes its output, then dies
+    # before its history commit (and before the stream checkpoint)
+    def crash(*args, **kwargs):
+        raise RuntimeError("crash before the history commit")
 
-    detected = detect_pages(pages).localCheckpoint(eager=True)
-    detected.write.mode("overwrite").parquet(f"{tmp}/staging/batch=0")
-    staged = spark.read.parquet(f"{tmp}/staging").drop("batch")
-    e = entities_from_detected(staged)
-    conns = pipeline.convert(
-        e["stop_times"], e["trips"], e["routes"], e["stops"],
-        e["calendar"], e["calendar_dates"], salt_n=8,
-    )
-    delta = store.differential(conns, before_snapshot=0)
-    sinks.jsonld_lines(sinks.connections_to_jsonld(delta)).write.mode(
-        "overwrite"
-    ).text(f"{tmp}/out/batch=0")
-    # CRASH here (no store.commit, no stream-checkpoint commit)
+    monkeypatch.setattr(store, "commit", crash)
+    with pytest.raises(RuntimeError, match="crash before"):
+        streaming.process_pages_batch(
+            spark, pages, 0, store, f"{tmp}/staging", f"{tmp}/out"
+        )
+    monkeypatch.undo()
+    assert spark.read.text(f"{tmp}/out/batch=0").count() == fixtures.SAMPLE_FEED_CONNECTIONS
+    assert store.snapshots() == []
 
     # replay of batch 0 (the stream re-delivers the same files)
     streaming.process_pages_batch(
-        spark, pages, 0, store, f"{tmp}/staging", f"{tmp}/out", salt_n=8
+        spark, pages, 0, store, f"{tmp}/staging", f"{tmp}/out"
     )
     n = spark.read.text(f"{tmp}/out/batch=*").count()
     assert n == fixtures.SAMPLE_FEED_CONNECTIONS  # no duplicates
@@ -123,7 +119,7 @@ def test_crash_between_output_and_commit(spark, tmp_path):
     # same output (delta computed vs snapshots < 0 = none), not an
     # empty file
     streaming.process_pages_batch(
-        spark, pages, 0, store, f"{tmp}/staging", f"{tmp}/out", salt_n=8
+        spark, pages, 0, store, f"{tmp}/staging", f"{tmp}/out"
     )
     assert spark.read.text(f"{tmp}/out/batch=*").count() == n
     assert store.snapshots() == [0]
@@ -136,7 +132,6 @@ def test_recrawled_url_replaces_staged_page(spark, tmp_path):
     whole feed as batch 1 must emit zero new connections (identical
     content, history already has every pair) and must not corrupt the
     staging store with duplicate pages."""
-    import pytest
     from gtfs2lc_spark import pipeline as pl
 
     tmp = str(tmp_path)
@@ -144,31 +139,24 @@ def test_recrawled_url_replaces_staged_page(spark, tmp_path):
     pages = fixtures.pages_df(spark, feed_id="feedR", noise_pages=0).cache()
 
     streaming.process_pages_batch(
-        spark, pages, 0, store, f"{tmp}/staging", f"{tmp}/out", salt_n=8
+        spark, pages, 0, store, f"{tmp}/staging", f"{tmp}/out"
     )
     n0 = spark.read.text(f"{tmp}/out/batch=*").count()
     assert n0 == fixtures.SAMPLE_FEED_CONNECTIONS
 
     # batch 1 re-crawls every page (same urls, same content)
     streaming.process_pages_batch(
-        spark, pages, 1, store, f"{tmp}/staging", f"{tmp}/out", salt_n=8
+        spark, pages, 1, store, f"{tmp}/staging", f"{tmp}/out"
     )
     assert spark.read.text(f"{tmp}/out/batch=*").count() == n0
 
     # staged view dedups per url: converting from staging yields the
     # exact connection count, not 2x
-    from gtfs2lc_spark.extraction import entities_from_detected
-    from pyspark.sql import functions as FF
+    from gtfs2lc_spark.extraction import entities_from_detected, newest_crawl_per_url
 
     staged_all = spark.read.parquet(f"{tmp}/staging")
     assert staged_all.count() == 2 * staged_all.select("url").distinct().count()
-    latest = (
-        staged_all.groupBy("url")
-        .agg(FF.max_by(FF.struct(*[c for c in staged_all.columns if c != "batch"]),
-                       FF.col("batch").cast("long")).alias("_s"))
-        .select("_s.*")
-    )
-    e = entities_from_detected(latest)
+    e = entities_from_detected(newest_crawl_per_url(staged_all))
     conns = pl.convert(
         e["stop_times"], e["trips"], e["routes"], e["stops"],
         e["calendar"], e["calendar_dates"], salt_n=8,
@@ -187,7 +175,7 @@ def test_recrawled_url_moving_feeds_not_resurrected(spark, tmp_path):
 
     # batch 0: full feedA
     streaming.process_pages_batch(
-        spark, pages_a, 0, store, f"{tmp}/staging", f"{tmp}/out", salt_n=8
+        spark, pages_a, 0, store, f"{tmp}/staging", f"{tmp}/out"
     )
     n0 = spark.read.text(f"{tmp}/out/batch=*").count()
     assert n0 == fixtures.SAMPLE_FEED_CONNECTIONS
@@ -200,7 +188,7 @@ def test_recrawled_url_moving_feeds_not_resurrected(spark, tmp_path):
         "lang",
     )
     streaming.process_pages_batch(
-        spark, moved, 1, store, f"{tmp}/staging", f"{tmp}/out", salt_n=8
+        spark, moved, 1, store, f"{tmp}/staging", f"{tmp}/out"
     )
 
     # batch 2: re-touch feedA (re-crawl of its trips page, same content).
@@ -209,7 +197,7 @@ def test_recrawled_url_moving_feeds_not_resurrected(spark, tmp_path):
     # connections beyond the (already-emitted) originals
     touch_a = pages_a.where(FF.col("url").contains("trips"))
     streaming.process_pages_batch(
-        spark, touch_a, 2, store, f"{tmp}/staging", f"{tmp}/out", salt_n=8
+        spark, touch_a, 2, store, f"{tmp}/staging", f"{tmp}/out"
     )
     assert spark.read.text(f"{tmp}/out/batch=2").count() == 0
 
@@ -228,7 +216,7 @@ def test_backfilled_older_crawl_does_not_replace_newer(spark, tmp_path):
         "warc_ts", F.col("warc_ts") + F.expr("INTERVAL 1 DAY")
     )
     streaming.process_pages_batch(
-        spark, newer, 0, store, f"{tmp}/staging", f"{tmp}/out", salt_n=8
+        spark, newer, 0, store, f"{tmp}/staging", f"{tmp}/out"
     )
     n0 = spark.read.text(f"{tmp}/out/batch=*").count()
     assert n0 == fixtures.SAMPLE_FEED_CONNECTIONS
@@ -242,7 +230,7 @@ def test_backfilled_older_crawl_does_not_replace_newer(spark, tmp_path):
         F.concat(F.col("text"), F.lit("AAMV1,10:00:00,10:00:00,BEATTY_AIRPORT,3,,,,\n")),
     )
     streaming.process_pages_batch(
-        spark, older, 1, store, f"{tmp}/staging", f"{tmp}/out", salt_n=8
+        spark, older, 1, store, f"{tmp}/staging", f"{tmp}/out"
     )
     assert spark.read.text(f"{tmp}/out/batch=*").count() == n0
 
@@ -252,6 +240,41 @@ def test_backfilled_older_crawl_does_not_replace_newer(spark, tmp_path):
         "warc_ts", F.col("warc_ts") + F.expr("INTERVAL 2 DAY")
     )
     streaming.process_pages_batch(
-        spark, newest, 2, store, f"{tmp}/staging", f"{tmp}/out", salt_n=8
+        spark, newest, 2, store, f"{tmp}/staging", f"{tmp}/out"
     )
     assert spark.read.text(f"{tmp}/out/batch=*").count() > n0
+
+
+def test_equal_warc_ts_recrawls_stage_the_detect_pages_winner(spark, tmp_path, monkeypatch):
+    """Two crawls of one stop_times url with the same warc_ts and
+    different content, delivered in two batches: the staged winner is
+    the row ``detect_pages`` picks from the union of both batches, in
+    either arrival order. Content breaks the tie on both surfaces; a
+    batch-id tie break would let the later batch win."""
+    from gtfs2lc_spark.extraction import detect_pages
+
+    page = fixtures.pages_df(spark, feed_id="feedT", noise_pages=0).where(
+        F.col("url").contains("stop_times")
+    )
+    extra = page.withColumn(
+        "text",
+        F.concat(F.col("text"), F.lit("AAMV1,10:00:00,10:00:00,BEATTY_AIRPORT,3,,,,\n")),
+    )
+    [want] = detect_pages(page.unionByName(extra)).collect()
+
+    staged = []
+    orig = streaming.entities_from_detected
+
+    def spy(df):
+        staged.append(df.collect())
+        return orig(df)
+
+    monkeypatch.setattr(streaming, "entities_from_detected", spy)
+    for order, crawls in (("plain-first", (page, extra)), ("extra-first", (extra, page))):
+        store = HistoryStore(spark, f"{tmp_path}/{order}/history")
+        for batch_id, crawl in enumerate(crawls):
+            streaming.process_pages_batch(
+                spark, crawl, batch_id, store,
+                f"{tmp_path}/{order}/staging", f"{tmp_path}/{order}/out",
+            )
+        assert [r.asDict() for r in staged[-1]] == [want.asDict()], order
