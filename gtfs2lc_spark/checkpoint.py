@@ -24,10 +24,11 @@ rejected when the store is built.
 
 ``HistoryStore.emit`` is the one ingest path, and both surfaces
 (``job.run`` and ``streaming.process_pages_batch``) call it. It
-anti-joins against history, materializes the delta, writes the output,
-then ``commit()``s the delta LAST. A run that fails before its commit
-leaves no committed snapshot, so its rerun emits the same delta again
-instead of losing it.
+anti-joins against history and materializes the delta, then writes the
+output and stages the snapshot (its data and lineage stats) on two
+driver threads, and writes the commit marker LAST, once both have
+succeeded. A run that fails before the marker leaves no committed
+snapshot, so its rerun emits the same delta again instead of losing it.
 
 ``differential()`` is a left_anti join on (feed_id, unique_id,
 service_date). The history side is keyed the same way the exploded
@@ -47,7 +48,7 @@ from urllib.parse import unquote, urlparse
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .materialize import materialize
+from .materialize import concurrently, materialize
 
 PAIR_COLS = ("feed_id", "unique_id", "service_date")
 
@@ -164,20 +165,31 @@ class HistoryStore:
         snapshot_id: int | None = None,
     ) -> SnapshotInfo:
         """The one ingest path: anti-join ``connections`` against the
-        snapshots before ``snapshot_id`` (all of them when it is None),
-        materialize the delta once, ``write(delta)``, then commit the
-        delta as snapshot ``snapshot_id`` (the next id when None).
+        snapshots before ``snapshot_id`` (all of them when it is None)
+        and materialize the delta once; then ``write(delta)`` and stage
+        the delta as snapshot ``snapshot_id`` (the next id when None)
+        ``concurrently``; then, once both have succeeded, write the
+        snapshot's commit marker.
 
-        The write and the commit both read the delta; the lineage cut
+        The write and the staging both read the delta; the lineage cut
         keeps either from re-running the conversion and the anti-join.
-        Committing last means a run that fails in ``write`` leaves no
-        snapshot, so its rerun emits the same delta. A pinned
+        Marking last means a run that fails in ``write`` or in the
+        staging leaves no committed snapshot, so its rerun emits the
+        same delta and overwrites the staged directory. A pinned
         ``snapshot_id`` (streaming: the micro-batch id) bounds the
         anti-join and names the commit with the same number, so a
-        replayed batch rewrites its original delta and snapshot."""
+        replayed batch rewrites its original delta and snapshot.
+
+        A replayed batch whose snapshot N had been committed loses N's
+        marker as soon as the staging overwrites ``snapshot=N``, which
+        can be before its output write ends. If that write then fails,
+        N is uncommitted again; the next replay recomputes the same
+        delta against the snapshots < N and commits it. A crash inside
+        ``commit`` leaves the same state."""
         delta = materialize(self.differential(connections, before_snapshot=snapshot_id))
-        write(delta)
-        return self.commit(delta, run_info, snapshot_id)
+        sid = self._snapshot_id(snapshot_id)
+        _, part_stats = concurrently(lambda: write(delta), lambda: self._stage(delta, sid))
+        return self._mark(sid, part_stats, run_info)
 
     def commit(
         self,
@@ -193,16 +205,25 @@ class HistoryStore:
         An explicit ``snapshot_id`` (streaming: the micro-batch id) makes
         the commit IDEMPOTENT — a replayed batch overwrites its own
         snapshot with identical content instead of appending a new one."""
-        if snapshot_id is None:
-            snaps = self.snapshots()
-            sid = snaps[-1] + 1 if snaps else 0
-        else:
-            sid = snapshot_id
-        snap_dir = os.path.join(self.path, f"snapshot={sid}")
+        sid = self._snapshot_id(snapshot_id)
+        return self._mark(sid, self._stage(new_pairs, sid), run_info)
+
+    def _snapshot_id(self, snapshot_id: int | None) -> int:
+        if snapshot_id is not None:
+            return snapshot_id
+        snaps = self.snapshots()
+        return snaps[-1] + 1 if snaps else 0
+
+    def _snap_dir(self, sid: int) -> str:
+        return os.path.join(self.path, f"snapshot={sid}")
+
+    def _stage(self, new_pairs: DataFrame, sid: int) -> list:
+        """Write snapshot ``sid``'s data (overwriting any staged or
+        committed copy) and return its per-partition lineage stats."""
+        snap_dir = self._snap_dir(sid)
         pairs = new_pairs.select(*self.key_cols).distinct()
         pairs.write.mode("overwrite").parquet(snap_dir)
-
-        part_stats = (
+        return (
             self.spark.read.parquet(snap_dir)
             .withColumn("_pid", F.spark_partition_id())
             .groupBy("_pid")
@@ -214,6 +235,10 @@ class HistoryStore:
             )
             .collect()
         )
+
+    def _mark(self, sid: int, part_stats: list, run_info: dict | None) -> SnapshotInfo:
+        """Commit the staged snapshot ``sid``: write its ``_metrics.json``."""
+        snap_dir = self._snap_dir(sid)
         metrics = {
             "snapshot_id": sid,
             "committed_at_unix": time.time(),

@@ -5,7 +5,7 @@ batch must be deduplicated against the 10^12 documents already
 accepted, WITHOUT rescanning them. The connection pipeline solved the
 identical problem for (feed, uniqueId, date) pairs with the J7 history
 anti-join (checkpoint.HistoryStore: snapshot dirs, metrics-as-commit-
-marker, replay determinism via ``before_snapshot``); this module
+marker); this module
 instantiates that machinery for document fingerprints, so a new batch
 pays one fingerprint scan of ITSELF plus an anti-join whose build side
 is the fingerprint history — never a rescan of the corpus bodies.
@@ -42,7 +42,6 @@ def dedupe_batch(
     store: CorpusDedupStore,
     text_col: str = "text",
     id_col: str = "doc_id",
-    before_snapshot: int | None = None,
 ) -> DataFrame:
     """Documents of ``docs`` that survive BOTH dedup stages:
 
@@ -54,10 +53,7 @@ def dedupe_batch(
 
     Returns the surviving rows with their ``fp`` column attached —
     exactly what :func:`commit_batch` appends to the store. Pure plan
-    (no side effects): callers control when the store advances, and a
-    replayed batch with ``before_snapshot`` set recomputes its
-    original answer even after its own commit landed (the replay
-    contract of the connection stream, ``HistoryStore.emit``).
+    (no side effects): callers control when the store advances.
     """
     with_fp = docs.withColumn("fp", fingerprint(F.col(text_col)))
     w = Window.partitionBy("fp").orderBy(id_col)
@@ -66,7 +62,7 @@ def dedupe_batch(
         .where(F.col("_rn") == 1)
         .drop("_rn")
     )
-    return store.differential(batch_winners, before_snapshot=before_snapshot)
+    return store.differential(batch_winners)
 
 
 def commit_batch(

@@ -22,11 +22,21 @@ the stream checkpoint. Reliable checkpoint files are deleted by Spark's
 ContextCleaner once the DataFrame is garbage collected
 (``build_session`` sets ``spark.cleaner.referenceTracking
 .cleanCheckpoints``); local checkpoint blocks die with the session.
+
+``concurrently()`` runs independent branches of one call (two
+materializations, or a write beside a snapshot staging) on their own
+driver threads, so the driver-side work of one overlaps the Spark jobs
+of the other.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
+from typing import Any
+
+from pyspark import inheritable_thread_target
+from pyspark.sql import DataFrame, SparkSession
 
 CONF_KEY = "spark.gtfs2lc.materialize"
 
@@ -49,3 +59,18 @@ def materialize(df: DataFrame) -> DataFrame:
             )
         return df.checkpoint(eager=True)
     raise ValueError(f"{CONF_KEY}={strategy!r}; expected one of {_VALID}")
+
+
+def concurrently(*thunks: Callable[[], Any]) -> list[Any]:
+    """Run each thunk on its own driver thread and return their results
+    in argument order. Every thunk has finished before this returns or
+    raises; a failure is re-raised after that (the first in argument
+    order when several fail).
+
+    The threads inherit the caller's Spark local properties (job group,
+    scheduler pool, a streaming query's ids), so their jobs count and
+    cancel with the caller's."""
+    spark = SparkSession.active()
+    with ThreadPoolExecutor(len(thunks)) as pool:
+        futures = [pool.submit(inheritable_thread_target(spark)(t)) for t in thunks]
+    return [f.result() for f in futures]

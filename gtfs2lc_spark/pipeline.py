@@ -43,7 +43,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from . import FEED_TIMEZONE_DEFAULT
-from .materialize import materialize
+from .materialize import concurrently, materialize
 
 DEFAULT_SALT_N = 64
 
@@ -506,7 +506,14 @@ def convert(
     connections' plan holds no Window: it starts at the materialized
     rules. The services are read once (the J4 lookup); dropping their
     materialization measured no faster on a cold job.run (ROADMAP,
-    negative results), so it stays."""
-    services = materialize(expand_services(calendar, calendar_dates))
-    rules = materialize(stop_times_to_rules(stop_times, trips, routes, stops))
+    negative results), so it stays.
+
+    The two materializations read disjoint files (calendar and
+    calendar_dates; stop_times and its dimensions), so they run
+    ``concurrently``: one branch's driver-side planning and small jobs
+    overlap the other's."""
+    services, rules = concurrently(
+        lambda: materialize(expand_services(calendar, calendar_dates)),
+        lambda: materialize(stop_times_to_rules(stop_times, trips, routes, stops)),
+    )
     return rules_to_connections(rules, services, feed_tz, salt_n)

@@ -93,6 +93,14 @@ def build_session(
         # dimension tables (stops/routes/trips/services) are always small
         # relative to stop_times/pages; raise the broadcast ceiling a bit.
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # Spark's codegen cache (one per JVM, 100 classes by default) is
+        # smaller than one call: a cold job.run compiles 113-114 Janino
+        # classes on perfbench's feeds_skewed and 241-251 on
+        # history_sorted (CodegenMetrics), so every later call in the
+        # process recompiled most of them (each sample-feed streaming
+        # micro-batch recompiled all its ~168). 1000 holds a call's
+        # classes with room to spare.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.driver.memory", driver_memory())
         .config("spark.driver.extraJavaOptions", DRIVER_JAVA_OPTIONS)
         .config("spark.ui.enabled", "false")

@@ -12,8 +12,10 @@ native extension a continuously-crawled corpus needs. Shape:
         entities_from_detected + convert        (same batch algebra)
         HistoryStore.emit(snapshot_id = N):     (job.run's ingest path)
             anti-join vs snapshots < N          (delta vs earlier batches)
-            write delta                         (output/batch=N, overwrite)
-            commit snapshot N                   (commit marker last)
+            write delta ║ stage snapshot N      (two driver threads:
+                                                 output/batch=N and
+                                                 snapshot=N, overwrite)
+            mark snapshot N                     (commit marker last)
 
 Why stage-and-reconvert instead of converting each batch in isolation:
 a feed spans 4-6 GTFS files, and the file source (maxFilesPerTrigger)
@@ -32,7 +34,8 @@ N is keyed by N with overwrite semantics —
 
 - staging/batch=N        (overwrite: replay re-stages identical rows)
 - output/batch=N         (overwrite: replay rewrites, never appends)
-- history snapshot=N     (overwrite commit marker last)
+- history snapshot=N     (overwrite; commit marker last, after both
+                          the output and the snapshot data landed)
 
 and the delta is computed against history snapshots with id < N only,
 so a replayed batch reproduces its original delta byte-for-byte even

@@ -3,6 +3,7 @@
 
 import json
 import os
+import threading
 
 import pytest
 
@@ -84,6 +85,70 @@ def test_kill_and_resume(spark, connections, store, tmp_path):
     # and a third run on top emits nothing
     delta3, _ = _emit(connections, store)
     assert delta3.count() == 0
+
+
+def test_emit_failed_staging_commits_nothing(spark, connections, store, tmp_path, monkeypatch):
+    """The snapshot staging raises while the output write succeeds: emit
+    raises once the write has finished, commits no snapshot, and the
+    rerun writes and commits the whole delta."""
+    out = str(tmp_path / "out")
+
+    def write(delta):
+        delta.write.mode("overwrite").parquet(out)
+
+    def failing_stage(*args):
+        raise RuntimeError("staging failed")
+
+    with monkeypatch.context() as m:
+        m.setattr(store, "_stage", failing_stage)
+        with pytest.raises(RuntimeError, match="staging failed"):
+            store.emit(connections, write)
+    # emit returned only after the write beside the staging had ended
+    assert os.path.exists(os.path.join(out, "_SUCCESS"))
+    assert spark.read.parquet(out).count() == 3472
+    assert store.snapshots() == []
+
+    snap = store.emit(connections, write)
+    assert spark.read.parquet(out).count() == 3472
+    assert snap.snapshot_id == 0 and snap.metrics["total_rows"] == 3472
+    assert store.snapshots() == [0]
+
+
+def test_emit_failed_write_after_staging_leaves_no_marker(
+    spark, connections, store, monkeypatch
+):
+    """The output write raises after the snapshot's data is staged: no
+    commit marker is written, and the rerun overwrites the staged
+    directory under the same snapshot id."""
+    staged = threading.Event()
+    real_stage = store._stage
+
+    def stage(*args):
+        stats = real_stage(*args)
+        staged.set()
+        return stats
+
+    def failing_write(delta):
+        assert staged.wait(300)
+        raise RuntimeError("write failed")
+
+    with monkeypatch.context() as m:
+        m.setattr(store, "_stage", stage)
+        with pytest.raises(RuntimeError, match="write failed"):
+            store.emit(connections, failing_write)
+    snap_dir = os.path.join(store.path, "snapshot=0")
+    staged_files = {f for f in os.listdir(snap_dir) if f.endswith(".parquet")}
+    assert staged_files
+    assert not os.path.exists(os.path.join(snap_dir, "_metrics.json"))
+    assert store.snapshots() == []
+
+    delta, snap = _emit(connections, store)
+    assert delta.count() == 3472
+    assert snap.path == snap_dir and snap.metrics["total_rows"] == 3472
+    assert spark.read.parquet(snap_dir).count() == 3472
+    rerun_files = {f for f in os.listdir(snap_dir) if f.endswith(".parquet")}
+    assert rerun_files and not rerun_files & staged_files
+    assert store.snapshots() == [0]
 
 
 def _pairs_df(spark, rows):

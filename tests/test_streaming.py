@@ -93,12 +93,13 @@ def test_crash_between_output_and_commit(spark, tmp_path, monkeypatch):
     store = HistoryStore(spark, f"{tmp}/history")
     pages = fixtures.pages_df(spark, feed_id="feedC", noise_pages=2).cache()
 
-    # simulate the crash window: the batch writes its output, then dies
-    # before its history commit (and before the stream checkpoint)
+    # simulate the crash window: the batch writes its output and stages
+    # its snapshot, then dies before the history commit marker (and
+    # before the stream checkpoint)
     def crash(*args, **kwargs):
         raise RuntimeError("crash before the history commit")
 
-    monkeypatch.setattr(store, "commit", crash)
+    monkeypatch.setattr(store, "_mark", crash)
     with pytest.raises(RuntimeError, match="crash before"):
         streaming.process_pages_batch(
             spark, pages, 0, store, f"{tmp}/staging", f"{tmp}/out"
