@@ -30,7 +30,7 @@ from gtfs2lc_spark import FEED_TIMEZONE_DEFAULT, fixtures, pipeline, postprocess
 from gtfs2lc_spark.checkpoint import HistoryStore
 from gtfs2lc_spark.extraction import extract_entities
 from gtfs2lc_spark.schemas import PAGES_SCHEMA
-from gtfs2lc_spark.session import build_session
+from gtfs2lc_spark.session import build_session, cds_state, stop_session
 from gtfs2lc_spark.uris import URIStrategy
 
 # the reference's format whitelist (lib/gtfs2connections.js:29-38) minus
@@ -259,6 +259,7 @@ def run(spark: SparkSession, args: argparse.Namespace) -> dict:
         "elapsed_ms": int((time.time() - t0) * 1000),
         "snapshot": snap.metrics if snap else None,
         "missing_refs": quarantine,
+        "cds": cds_state(spark),
     }
 
 
@@ -267,7 +268,7 @@ def main(argv: list[str] | None = None) -> int:
     spark = build_session(app_name="gtfs2lc-spark-job")
     msg = run(spark, args)
     print(json.dumps(msg))
-    spark.stop()
+    stop_session(spark)
     return 0
 
 

@@ -26,7 +26,7 @@ from pyspark.sql import types as T
 
 from . import postprocess, sinks
 from .job import merge_shards
-from .session import build_session
+from .session import build_session, stop_session
 
 # nextConnection is not read: join_and_sort re-links every chain
 _JSONLD_SCHEMA = T.StructType(
@@ -93,7 +93,7 @@ def main(argv: list[str] | None = None) -> int:
     spark = build_session(app_name="linkedconnections-joinandsort")
     msg = run(spark, args)
     print(json.dumps(msg))
-    spark.stop()
+    stop_session(spark)
     return 0
 
 
