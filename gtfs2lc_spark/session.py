@@ -64,7 +64,11 @@ DEFAULT_DRIVER_MEMORY = "12g"
 #   ($XDG_CACHE_HOME or ~/.cache, under gtfs2lc_spark/). Its name hashes
 #   the Java home, the Spark jars (names, sizes, mtimes) and
 #   DRIVER_JAVA_OPTIONS, so a new JDK, Spark or option set writes a new
-#   archive; writing one deletes the older ``driver-*.jsa`` files.
+#   archive. Writing one keeps the most recently written other
+#   ``driver-*.jsa`` and deletes the rest: two keys on one host (two
+#   checkouts with different DRIVER_JAVA_OPTIONS, or the two sides of an
+#   A/B) each keep their own archive instead of deleting each other's on
+#   every run, and at most two archives (~360 MB) stay.
 # - CDS refuses to dump or map with a non-empty directory on the
 #   classpath, and the launcher puts the conf dir there, so the JVM gets
 #   an empty SPARK_CONF_DIR. That is only equivalent when the effective
@@ -87,6 +91,10 @@ DEFAULT_DRIVER_MEMORY = "12g"
 #   and starts the JVM again, writing a fresh one. The JVM writes the
 #   header last, so an archive whose writer was killed (kill -9 mid-dump
 #   leaves a zeroed header) is rejected, not mapped past its end.
+#   -XX:ErrorFile puts such a crash's hs_err_pid*.log in the cache dir,
+#   not in the caller's working directory. It rides with the CDS flags,
+#   not DRIVER_JAVA_OPTIONS, whose text names the archive. The crash's
+#   fatal-error banner still goes to stdout.
 # A static archive (-XX:DumpLoadedClassList, then java -Xshare:dump) took
 # 41 s to build and mapped no faster (session start 2.50 / 2.54 s against
 # 2.33 / 2.36 s).
@@ -150,11 +158,22 @@ def driver_launch() -> tuple[str, str | None]:
     if os.path.exists(archive):
         flag = _MAP_FLAG + archive
     else:
-        for old in glob.glob(os.path.join(cache, "driver-*.jsa")):
-            with contextlib.suppress(FileNotFoundError):
-                os.remove(old)
+        _prune_archives(cache)
         flag = _WRITE_FLAG + archive
-    return f"{DRIVER_JAVA_OPTIONS} {flag} {CDS_LOG_OPTIONS}", empty_conf
+    error_file = os.path.join(cache, "hs_err_pid%p.log")
+    return f"{DRIVER_JAVA_OPTIONS} {flag} {CDS_LOG_OPTIONS} -XX:ErrorFile={error_file}", empty_conf
+
+
+def _prune_archives(cache: str) -> None:
+    """Before a new archive is written: keep the most recently written
+    ``driver-*.jsa`` in ``cache`` and delete the others."""
+    archives = []
+    for path in glob.glob(os.path.join(cache, "driver-*.jsa")):
+        with contextlib.suppress(FileNotFoundError):
+            archives.append((os.stat(path).st_mtime_ns, path))
+    for _, old in sorted(archives)[:-1]:
+        with contextlib.suppress(FileNotFoundError):
+            os.remove(old)
 
 
 def _given_archive(args: list[str]) -> str | None:
@@ -271,6 +290,23 @@ def build_session(
         # micro-batch recompiled all its ~168). 1000 holds a call's
         # classes with room to spare.
         .config("spark.sql.codegen.cache.maxEntries", "1000")
+        # Every Parquet file the engine writes (the triples-parquet
+        # output, the history snapshots, streaming's detected-pages
+        # staging) is zstd at Parquet's default level, Iceberg's default
+        # codec. Spark's default, snappy, misses the triple table's
+        # repeats (each subject fills 10 consecutive rows; stop, route
+        # and trip URIs recur across thousands), whose subj and obj
+        # dictionaries overflow to plain encoding. perfbench on a 4-core
+        # host, 10 interleaved pairs per workload (AB_r18_zstd.json), same
+        # rows in the same order: feeds_skewed output_mb 5.16 -> 1.51 MB
+        # (2^20 bytes) median, smaller in every pair (at seed 7, subj
+        # 1.81 -> 0.50 MB and obj 3.31 -> 0.95 MB); job_s and job_cpu_s
+        # within noise (14.8 / 45.8 s -> 14.4 / 44.0 s, faster in 5 of
+        # 10). On history_sorted, whose JSON-LD text dominates, 14.56 ->
+        # 14.55 MB. Readers need nothing: the codec is recorded per
+        # column chunk, so stores that hold snappy snapshots stay
+        # readable.
+        .config("spark.sql.parquet.compression.codec", "zstd")
         .config("spark.driver.memory", driver_memory())
         .config("spark.driver.extraJavaOptions", java_options)
         .config("spark.ui.enabled", "false")

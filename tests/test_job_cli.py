@@ -3,9 +3,11 @@ per-format validity markers (csv header, @context first record,
 RDF version framing, $date wrapping) and the worker-0 header
 semantics (O5)."""
 
+import contextlib
 import glob
 import json
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -372,3 +374,77 @@ def test_pages_read_by_column_name(spark, pages_dir, tmp_path):
     want = _triples(spark, _run_pages(spark, pages_dir, str(tmp_path / "a")))
     assert len(want) == 29992
     assert _triples(spark, _run_pages(spark, shuffled, str(tmp_path / "b"))) == want
+
+
+@contextlib.contextmanager
+def _parquet_codec(spark, codec):
+    """Write Parquet with ``codec`` inside the block."""
+    key = "spark.sql.parquet.compression.codec"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, codec)
+    try:
+        yield
+    finally:
+        spark.conf.set(key, saved)
+
+
+def _codecs(path):
+    """The codec of every column chunk in the Parquet files under ``path``."""
+    files = glob.glob(f"{path}/*.parquet")
+    assert files
+    codecs = set()
+    for f in files:
+        meta = pq.read_metadata(f)
+        for g in range(meta.num_row_groups):
+            group = meta.row_group(g)
+            codecs |= {group.column(c).compression for c in range(group.num_columns)}
+    return codecs
+
+
+def _rows_in_file_order(path):
+    return [
+        row for f in sorted(glob.glob(f"{path}/part-*.parquet"))
+        for row in pq.read_table(f).to_pylist()
+    ]
+
+
+def test_triples_parquet_is_zstd_with_snappy_rows(spark, pages_dir, tmp_path):
+    """Every column chunk of the triples is zstd, and the rows are those
+    a snappy write from the same session gives, in the same order."""
+    zstd = _run_pages(spark, pages_dir, str(tmp_path / "zstd"))
+    with _parquet_codec(spark, "snappy"):
+        snappy = _run_pages(spark, pages_dir, str(tmp_path / "snappy"))
+    assert _codecs(zstd) == {"ZSTD"}
+    assert _codecs(snappy) == {"SNAPPY"}
+    rows = _rows_in_file_order(zstd)
+    assert len(rows) == 29992
+    assert rows == _rows_in_file_order(snappy)
+
+
+def test_history_with_a_snappy_snapshot(spark, pages_dir, tmp_path):
+    """A history store whose snapshot 0 is snappy keeps working: a zstd
+    run over the same pages plus a new feed emits none of the old pairs,
+    and the new feed's pairs land as zstd in snapshot 1."""
+    from gtfs2lc_spark import fixtures
+
+    hist = str(tmp_path / "history")
+
+    def run(pages, out):
+        return job.run(spark, job.parse_args(
+            ["--pages", pages, "--output", str(tmp_path / out),
+             "--format", "triples-parquet", "--history", hist]
+        ))
+
+    with _parquet_codec(spark, "snappy"):
+        assert run(pages_dir, "out0")["snapshot"]["total_rows"] == 3472
+    assert _codecs(f"{hist}/snapshot=0") == {"SNAPPY"}
+
+    both = str(tmp_path / "both")
+    new_feed = fixtures.pages_df(spark, feed_id="newfeed", noise_pages=0)
+    spark.read.parquet(pages_dir).unionByName(new_feed).write.parquet(both)
+    snap = run(both, "out1")["snapshot"]
+    assert (snap["snapshot_id"], snap["total_rows"]) == (1, 3472)
+    feeds = spark.read.parquet(f"{hist}/snapshot=1").select("feed_id").distinct().collect()
+    assert [r.feed_id for r in feeds] == ["newfeed"]
+    assert _codecs(f"{hist}/snapshot=1") == {"ZSTD"}
+    assert len(_rows_in_file_order(str(tmp_path / "out1"))) == 29992

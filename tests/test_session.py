@@ -47,6 +47,8 @@ def test_no_archive_writes_one_at_exit(fake_spark_home, tmp_path):
     assert Path(archive).name.startswith("driver-") and archive.endswith(".jsa")
     assert options.startswith(DRIVER_JAVA_OPTIONS)
     assert "-Xlog:all=warning:stderr" in options
+    # a crash log goes to the cache dir, not the caller's cwd
+    assert _flag(options, "-XX:ErrorFile=") == str(Path(archive).parent / "hs_err_pid%p.log")
     assert _flag(options, "-XX:SharedArchiveFile=") is None
     assert os.listdir(conf_dir) == []
 
@@ -60,12 +62,20 @@ def test_archive_present_is_mapped(fake_spark_home):
     assert conf_dir is not None
 
 
+def _archive_at(path: str, mtime: int) -> str:
+    """Write an archive at ``path`` as a JVM would, last modified at ``mtime``."""
+    Path(path).write_bytes(b"archive")
+    os.utime(path, (mtime, mtime))
+    return path
+
+
 def test_new_key_deletes_older_archives(fake_spark_home, tmp_path, monkeypatch):
     cache = tmp_path / "cache" / "gtfs2lc_spark"
     cache.mkdir(parents=True)
-    (cache / "driver-0123456789abcdef.jsa").write_bytes(b"old")
+    _archive_at(str(cache / "driver-0123456789abcdef.jsa"), 1_000)  # older
+    newer = _archive_at(str(cache / "driver-00000000000000ff.jsa"), 2_000)
     archive = _flag(driver_launch()[0], "-XX:ArchiveClassesAtExit=")
-    assert not (cache / "driver-0123456789abcdef.jsa").exists()
+    assert sorted(cache.glob("driver-*.jsa")) == [Path(newer)]
     # the key follows the jars and the JDK: either change is another archive
     (fake_spark_home / "jars" / "extra.jar").write_bytes(b"jar")
     other_jars = _flag(driver_launch()[0], "-XX:ArchiveClassesAtExit=")
@@ -73,6 +83,30 @@ def test_new_key_deletes_older_archives(fake_spark_home, tmp_path, monkeypatch):
     (tmp_path / "jdk").rename(tmp_path / "jdk2")
     monkeypatch.setenv("JAVA_HOME", str(tmp_path / "jdk2"))
     assert _flag(driver_launch()[0], "-XX:ArchiveClassesAtExit=") not in (archive, other_jars)
+
+
+def test_two_keys_keep_each_others_archive(fake_spark_home, tmp_path):
+    """Key A's archive survives writing key B, so sessions of the two keys
+    (two checkouts, the two sides of an A/B) each go on mapping their
+    own; a third key keeps only the newer of A and B."""
+    cache = tmp_path / "cache" / "gtfs2lc_spark"
+    jars = fake_spark_home / "jars"
+    a = _archive_at(_flag(driver_launch()[0], "-XX:ArchiveClassesAtExit="), 2_000)
+    (jars / "b.jar").write_bytes(b"jar")
+    b = _flag(driver_launch()[0], "-XX:ArchiveClassesAtExit=")
+    assert Path(a).exists()
+    _archive_at(b, 1_000)
+    # renames keep the jar's mtime, so each key comes back as it was
+    (jars / "b.jar").rename(tmp_path / "b.jar")
+    assert _flag(driver_launch()[0], "-XX:SharedArchiveFile=") == a
+    (tmp_path / "b.jar").rename(jars / "b.jar")
+    assert _flag(driver_launch()[0], "-XX:SharedArchiveFile=") == b
+
+    (jars / "c.jar").write_bytes(b"jar")
+    c = _flag(driver_launch()[0], "-XX:ArchiveClassesAtExit=")
+    assert c not in (a, b)
+    # A was written last (mtime), whatever the order of the names
+    assert sorted(cache.glob("driver-*.jsa")) == [Path(a)]
 
 
 def test_real_conf_file_turns_cds_off(fake_spark_home, tmp_path, monkeypatch):
@@ -211,5 +245,8 @@ def test_first_process_writes_archive_second_maps_it(tmp_path):
     stdout, stderr = _job(tmp_path, "out3")
     assert json.loads(stdout.splitlines()[-1])["cds"] == "writing"
     assert "rejected CDS archive" in stderr
+    # the crashed JVM's log lands in the cache dir, not in the cwd
+    assert not list(tmp_path.glob("hs_err_pid*.log"))
+    assert list(cache.glob("hs_err_pid*.log"))
     assert _lines(tmp_path / "out3") == _lines(tmp_path / "out1")
     assert archive.stat().st_size > size // 4
