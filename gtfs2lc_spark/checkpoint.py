@@ -17,10 +17,11 @@ rejected when the store is built.
   run N (append-only log; loading = union of all snapshots). At 100 TB
   this is the cheap side: each incremental run appends just its delta,
   and the anti-join build side is the full history read once.
-- ``history/snapshot=N/_metrics.json`` — per-partition lineage +
-  metrics (partition id, row count, key min/max) written beside the
-  snapshot, so any partition's provenance is auditable and a resumed
-  run can verify what landed without recomputation.
+- ``history/snapshot=N/_metrics.json`` — per-partition lineage: per
+  data file, its partition id, name, row count and key min/max, read
+  on the driver from the footer just written (as Iceberg takes a data
+  file's stats at write time), so any file's provenance is auditable
+  without recomputation.
 
 ``HistoryStore.emit`` is the one ingest path, and both surfaces
 (``job.run`` and ``streaming.process_pages_batch``) call it. It
@@ -45,8 +46,8 @@ from collections.abc import Callable
 from dataclasses import dataclass
 from urllib.parse import unquote, urlparse
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from .materialize import concurrently, materialize
 
@@ -101,9 +102,9 @@ class HistoryStore:
 
     @property
     def _stat_key(self) -> str:
-        """Column the per-partition lineage min/max stats range over
-        (the 'business key' — unique_id for the connection history,
-        the sole key otherwise)."""
+        """Column whose footer min/max each file's lineage entry
+        records (the 'business key' — unique_id for the connection
+        history, the sole key otherwise)."""
         return self.key_cols[1] if len(self.key_cols) > 1 else self.key_cols[0]
 
     def snapshots(self) -> list[int]:
@@ -137,7 +138,8 @@ class HistoryStore:
         paths = [os.path.join(self.path, f"snapshot={s}") for s in snaps]
         if not paths:
             return None
-        return self.spark.read.parquet(*paths).select(*self.key_cols)
+        schema = ", ".join(f"`{c}` string" for c in self.key_cols)
+        return self.spark.read.schema(schema).parquet(*paths)
 
     # -- the J7 operators ------------------------------------------------------
 
@@ -198,7 +200,7 @@ class HistoryStore:
         snapshot_id: int | None = None,
     ) -> SnapshotInfo:
         """Append this run's newly-emitted pairs as the next snapshot,
-        with per-partition lineage metrics beside the data. The metrics
+        with per-file lineage from its footers beside the data. The metrics
         file doubles as the commit marker: a killed run leaves an
         uncommitted (ignored) directory, so resume never double-counts.
 
@@ -217,42 +219,38 @@ class HistoryStore:
     def _snap_dir(self, sid: int) -> str:
         return os.path.join(self.path, f"snapshot={sid}")
 
-    def _stage(self, new_pairs: DataFrame, sid: int) -> list:
+    def _stage(self, new_pairs: DataFrame, sid: int) -> list[dict]:
         """Write snapshot ``sid``'s data (overwriting any staged or
-        committed copy) and return its per-partition lineage stats."""
+        committed copy) in one Spark job, as is: both callers' pairs are
+        unique on ``key_cols`` (J7, ``dedupe_batch``). Return one lineage
+        entry per non-empty ``part-*`` file, read from its footer."""
         snap_dir = self._snap_dir(sid)
-        pairs = new_pairs.select(*self.key_cols).distinct()
-        pairs.write.mode("overwrite").parquet(snap_dir)
-        return (
-            self.spark.read.parquet(snap_dir)
-            .withColumn("_pid", F.spark_partition_id())
-            .groupBy("_pid")
-            .agg(
-                F.count(F.lit(1)).alias("rows"),
-                F.min(self._stat_key).alias("min_key"),
-                F.max(self._stat_key).alias("max_key"),
-                F.countDistinct(self.key_cols[0]).alias("n_feeds"),
-            )
-            .collect()
-        )
+        new_pairs.select(*self.key_cols).write.mode("overwrite").parquet(snap_dir)
+        col = self.key_cols.index(self._stat_key)
+        stats = []
+        for f in os.listdir(snap_dir):
+            meta = pq.read_metadata(os.path.join(snap_dir, f)) if f.startswith("part-") else None
+            if meta is None or not meta.num_rows:
+                continue
+            groups = [meta.row_group(g).column(col).statistics for g in range(meta.num_row_groups)]
+            keys = [k for s in groups if s is not None and s.has_min_max for k in (s.min, s.max)]
+            stats.append({
+                "partition_id": int(f.split("-")[1]),
+                "file": f,
+                "rows": meta.num_rows,
+                "min_key": min(keys, default=None),
+                "max_key": max(keys, default=None),
+            })
+        return sorted(stats, key=lambda p: p["partition_id"])
 
-    def _mark(self, sid: int, part_stats: list, run_info: dict | None) -> SnapshotInfo:
+    def _mark(self, sid: int, files: list[dict], run_info: dict | None) -> SnapshotInfo:
         """Commit the staged snapshot ``sid``: write its ``_metrics.json``."""
         snap_dir = self._snap_dir(sid)
         metrics = {
             "snapshot_id": sid,
             "committed_at_unix": time.time(),
-            "total_rows": int(sum(r["rows"] for r in part_stats)),
-            "partitions": [
-                {
-                    "partition_id": int(r["_pid"]),
-                    "rows": int(r["rows"]),
-                    "min_key": r["min_key"],
-                    "max_key": r["max_key"],
-                    "n_feeds": int(r["n_feeds"]),
-                }
-                for r in sorted(part_stats, key=lambda r: r["_pid"])
-            ],
+            "total_rows": sum(f["rows"] for f in files),
+            "partitions": files,
             "run_info": run_info or {},
         }
         with open(os.path.join(snap_dir, "_metrics.json"), "w") as f:

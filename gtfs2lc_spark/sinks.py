@@ -492,11 +492,11 @@ def triples_with_message_counter(
     uris = uris or URIStrategy()
     from .materialize import materialize
 
-    # materialize once: dense_index runs 3 separate jobs (sample,
-    # distinct-count, rank) over its input — on a live conversion plan
-    # each would re-execute the whole upstream pipeline, and the
-    # dense_index contract requires a deterministic (checkpointed or
-    # scanned) input anyway
+    # materialize once: dense_index reads its input in separate jobs
+    # (the boundary-sample action, plus a count on the huge-P path,
+    # then the fused rank plan) — on a live conversion plan each would
+    # re-execute the whole upstream pipeline, and the dense_index
+    # contract requires a deterministic (checkpointed or scanned) input
     triples = materialize(connections_to_triples(conns, uris))
     return dense_index(triples, ["subj"]).withColumnRenamed(
         "_dense_idx", "message_counter"

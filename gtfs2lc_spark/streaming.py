@@ -97,7 +97,9 @@ def process_pages_batch(
     # (A url whose newer crawl no longer contains GTFS content is not
     # re-detected, so its last detected snapshot remains staged —
     # retraction would need an explicit tombstone, out of scope.)
-    staged_all = spark.read.parquet(staging_dir)
+    # the staged files all carry detect_pages' schema: pinning it skips
+    # the footer-inference job (the batch= column is still discovered)
+    staged_all = spark.read.schema(detected.schema).parquet(staging_dir)
     # cheap per-trigger preselect (2-column pruned scan): urls that have
     # EVER carried a touched feed — the full-width body scan below only
     # reads these urls' rows, keeping per-trigger cost proportional to

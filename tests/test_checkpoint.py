@@ -5,10 +5,11 @@ import json
 import os
 import threading
 
+import pyarrow.parquet as pq
 import pytest
 
 from gtfs2lc_spark import pipeline
-from gtfs2lc_spark.checkpoint import HistoryStore
+from gtfs2lc_spark.checkpoint import PAIR_COLS, HistoryStore
 
 
 @pytest.fixture()
@@ -32,6 +33,7 @@ def test_first_run_emits_all_then_nothing(spark, feed, store, connections):
     delta2, snap2 = _emit(connections, store)
     assert delta2.count() == 0
     assert snap2.metrics["total_rows"] == 0
+    assert snap2.metrics["partitions"] == []
 
 
 def test_new_service_dates_emit_only_delta(spark, feed, store, connections):
@@ -63,13 +65,24 @@ def test_fresh_resets(spark, connections, store):
 
 
 def test_metrics_lineage(spark, connections, store):
+    """One lineage entry per non-empty data file, each equal to a
+    direct read of that file: its part number, row count and
+    unique_id range."""
     _, snap = _emit(connections, store)
     with open(os.path.join(snap.path, "_metrics.json")) as f:
         m = json.load(f)
     assert m["total_rows"] == 3472
     assert sum(p["rows"] for p in m["partitions"]) == 3472
-    for p in m["partitions"]:
-        assert p["min_key"] <= p["max_key"]
+    want = []
+    for f in os.listdir(snap.path):
+        t = pq.read_table(os.path.join(snap.path, f)) if f.startswith("part-") else None
+        if t is not None and t.num_rows:
+            keys = t.column("unique_id").to_pylist()
+            want.append({
+                "partition_id": int(f.split("-")[1]), "file": f, "rows": t.num_rows,
+                "min_key": min(keys), "max_key": max(keys),
+            })
+    assert want and m["partitions"] == sorted(want, key=lambda p: p["partition_id"])
 
 
 def test_kill_and_resume(spark, connections, store, tmp_path):
@@ -164,6 +177,33 @@ def _hist(spark, store, before=None):
         if h is None
         else {(r.feed_id, r.unique_id, r.service_date) for r in h.collect()}
     )
+
+
+def _jobs(spark, group, fn):
+    """The number of Spark jobs ``fn()`` runs, counted by job group,
+    and what it returns."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group)), out
+
+
+def test_stage_and_load_run_no_bookkeeping_jobs(spark, store):
+    """Staging a snapshot is its one write job: the lineage comes from
+    the footers just written, not from a distinct or a re-read. Loading
+    the history pins the key schema, so it infers nothing from footers."""
+    pairs = _pairs_df(spark, [("f", f"u{i}", "20070101") for i in range(20)])
+    n_jobs, stats = _jobs(spark, "ckpt-stage", lambda: store._stage(pairs, 0))
+    assert n_jobs == 1
+    assert sum(p["rows"] for p in stats) == 20
+    store._mark(0, stats, None)
+    n_jobs, hist = _jobs(spark, "ckpt-load", store.load)
+    assert n_jobs == 0
+    assert hist.columns == list(PAIR_COLS)
+    assert hist.count() == 20
 
 
 def test_before_snapshot_replays_original_delta(spark, store):

@@ -59,6 +59,9 @@ def test_twin_trip_dedup(entity_frame):
     # T1 (first in stream order) keeps mon(0101)+tue(0102);
     # T2 emits only its new date wed(0103) — tue deduped away.
     assert got == {("T1", "20070101"), ("T1", "20070102"), ("T2", "20070103")}
+    # the history store writes these keys as is: J7 leaves them unique
+    keys = conns.select("feed_id", "unique_id", "service_date")
+    assert keys.count() == keys.distinct().count() == 3
 
 
 def test_connected_components_chain_and_islands(spark):
@@ -203,3 +206,5 @@ def test_thousand_duplicate_rules_route_linear_path(entity_frame):
     got = {(r.trip_id, r.service_date) for r in conns.select("trip_id", "service_date").collect()}
     # first rule (T0000) claims mon; T0001 adds tue; 998 others add nothing
     assert got == {("T0000", "20070101"), ("T0001", "20070102")}
+    keys = conns.select("feed_id", "unique_id", "service_date")
+    assert keys.count() == keys.distinct().count() == 2

@@ -30,6 +30,9 @@ def test_incremental_dedupe_two_batches(spark, tmp_path):
     s2 = incremental.dedupe_batch(b2, store)
     assert {r["doc_id"] for r in s2.collect()} == {11, 13}
     incremental.commit_batch(s2, store, snapshot_id=1)
+    # within-batch twins (docs 3 and 12) commit their fingerprint once
+    fps = store.load()
+    assert fps.count() == fps.distinct().count() == 4
 
     # a third batch sees BOTH prior batches' fingerprints
     b3 = _docs(spark, [(20, "alpha text"), (21, "delta text"), (22, "epsilon")])
@@ -52,7 +55,9 @@ def test_incremental_replay_determinism(spark, tmp_path):
     for _ in range(2):  # the batch, then its replay
         incremental.commit_batch(survivors, store, snapshot_id=1)
     assert store.snapshots() == [0, 1]
-    assert store.load().count() == 3
+    # the store writes the survivors' fingerprints as is: unique
+    fps = store.load()
+    assert fps.count() == fps.distinct().count() == 3
     assert incremental.dedupe_batch(b1, store).count() == 0
 
 
